@@ -146,18 +146,22 @@ LOAD_GATE_STEAL_JPS = 5.0
 
 
 def _load_gate() -> float:
+    """Sample loadavg and steal over 5 s windows until both are calm (or the
+    cap is reached). Loadavg is read at the END of each window, so the check
+    sees the load the window measured. Returns the gate wait: seconds spent
+    beyond the first sampling window, 0.0 on a calm host."""
     waited = 0.0
     while waited < LOAD_GATE_MAX_WAIT_SEC:
-        la = _loadavg()
         s0 = _steal_jiffies()
         time.sleep(5.0)
         waited += 5.0
+        la = _loadavg()
         load_ok = la is None or la[0] <= LOAD_GATE_1M
         s1 = _steal_jiffies() if s0 is not None else None
         steal_ok = s1 is None or (s1 - s0) / 5.0 < LOAD_GATE_STEAL_JPS
         if load_ok and steal_ok:
             break
-    return waited
+    return waited - 5.0
 
 
 def _oracle_child(in_path: str, out_path: str) -> int:

@@ -10,8 +10,9 @@ datafusion-flight-sql-server/src/service.rs:153-191):
   (service.rs:177-191): returns the DataFrame whose Arrow batches the caller
   streams.
 - catalog enumeration ≙ ``do_get_catalogs``/``schemas``/``tables``/
-  ``table_types`` (service.rs:616-731), materialized as DataFrames with the
-  Flight SQL metadata result schemas.
+  ``table_types`` (service.rs:616-731), returned as plain rows keyed by the
+  Flight SQL metadata result columns — listing the catalog runs no Spark
+  job.
 """
 
 from __future__ import annotations
@@ -19,9 +20,9 @@ from __future__ import annotations
 import re
 import threading
 from collections import OrderedDict, deque
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_flight_sql_server_spark.plans.gate import SQLOptions
 from datafusion_flight_sql_server_spark.plans.params import bind_sql
@@ -136,42 +137,43 @@ class Engine:
         Parity: the reference pipes batch-at-a-time (service.rs:186-236) and
         never materializes the full result (SURVEY §7 H1). Two properties:
 
-        - **Arrow end-to-end**: executors serialize their own columnar
-          batches to IPC via ``mapInArrow`` (``_ipc_encode_batches``); the
-          driver never touches individual cells — it deserializes whole
-          batches and re-chunks to ``batch_rows`` with zero-copy slices.
-          This matches the reference's batch-at-a-time RecordBatch pipe
-          (service.rs:186-191) instead of moving every value through Python
-          dicts (the round-2 per-row ``asDict``/``from_pylist`` path, which
-          capped DoGet throughput at driver-CPU row decode speed).
-        - **Bounded memory**: ``toLocalIterator`` pulls one partition at a
-          time, so peak driver memory is one partition of IPC blobs + the
-          re-chunk buffer — a 1000-executor result streams through a bounded
-          window instead of landing whole on the driver the way
+        - **Arrow end-to-end, encoded once**: on a classic session the
+          result is Spark's own JVM-side Arrow encoding
+          (``Dataset.toArrowBatchRdd``: the same ``ArrowWriter`` that feeds
+          ``mapInArrow``, batched by ``maxRecordsPerBatch``). The driver
+          pulls the serialized record batches with ``PythonRDD.runJob``,
+          which hands them over a local socket as length-framed bytes, and
+          decodes them with ``pa.ipc.read_record_batch`` against the schema
+          the JVM encodes with (``ArrowUtils.toArrowSchema``). No Python
+          worker and no pickling sit on the result path, and the driver
+          never touches individual cells: it decodes whole batches and
+          re-chunks them to ``batch_rows``. This matches the reference's
+          batch-at-a-time RecordBatch pipe (service.rs:186-191).
+        - **Bounded memory**: partitions are pulled in groups, so peak
+          driver memory is one group of serialized batches + the re-chunk
+          buffer — a 1000-executor result streams through a bounded window
+          instead of landing whole on the driver the way
           ``collect()``/``toArrow()`` would.
 
-        The driver pulls partitions in ADAPTIVELY-GROWING GROUPS via
-        ``sc.runJob`` rather than ``toLocalIterator``: the iterator runs one
-        Spark job per partition, and at local job-launch latency (~100 ms)
-        a 32-partition result paid ~3 s of pure scheduling — measured 40x
+        The driver pulls partitions in ADAPTIVELY-GROWING GROUPS, one Spark
+        job per group, rather than one job per partition the way
+        ``toLocalIterator`` does: at local job-launch latency (~100 ms) a
+        32-partition result paid ~3 s of pure scheduling — measured 40x
         the cost of the query itself on a small result (round-6 serving
         profile; the whole prepared-statement round trip was 3.2 s). A
         1-partition probe gives low first-byte latency, then groups grow
         x4 while pulled bytes stay small — so job count is O(log n) on
-        small results. Growth is bounded by OBSERVED partition sizes:
-        every group is capped so group x 2 x largest-partition-seen fits
-        the 128 MB budget, holding EXPECTED group bytes under half the
-        budget. No observation-based scheme can bound an arbitrary size
-        cliff (partitions suddenly far larger than anything observed),
-        but gradual growth means a cliff is met by a small group first —
-        vs one whole partition of exposure for ``toLocalIterator``.
+        small results. Growth is bounded by OBSERVED batch sizes: every
+        group is capped so group x 2 x largest-batch-seen fits the 128 MB
+        budget, and every sized group reserves from the shared
+        ``_PULL_POOL`` (see ``_grouped_pull``).
 
-        Spark Connect has no RDD API, so it streams the same executor-encoded
-        IPC blobs through ``toLocalIterator`` — which under Connect is NOT
-        the classic one-job-per-partition loop: the Connect server executes
-        the plan once and streams result batches over gRPC, with client-side
-        prefetch bounding driver memory. Only the grouped-pull batching is
-        classic-mode specific; the Arrow path is shared.
+        Spark Connect (no ``_jdf``) has no JVM handle, so executors encode
+        IPC blobs with ``mapInArrow`` and they stream through
+        ``toLocalIterator`` — which under Connect is NOT the classic
+        one-job-per-partition loop: the Connect server executes the plan
+        once and streams result batches over gRPC, with client-side
+        prefetch bounding driver memory.
         The row-at-a-time fallback is reserved for plans whose types cannot
         pass Spark's Arrow conversion at all. Each path probes through empty
         partitions to the FIRST NON-EMPTY pull inside its try scope: a
@@ -180,39 +182,19 @@ class Engine:
         has been yielded — a failure after the first successful pull
         propagates instead.
         """
+        import pyarrow as pa
+
         from datafusion_flight_sql_server_spark.plans.schema import (
             arrow_schema_for_df,
         )
 
         schema = arrow_schema_for_df(df)
-
-        try:
-            ipc_df = df.mapInArrow(_make_ipc_encoder(), "ipc binary")
-        except Exception:
-            yield from self._execute_stream_rows(df, batch_rows, schema)
-            return
-
-        try:
-            rdd = ipc_df.rdd
-            n_parts = rdd.getNumPartitions()
-            sc = df.sparkSession.sparkContext
-        except Exception:
-            # Spark Connect: no RDD access. Arrow IPC blobs still stream
-            # through toLocalIterator (Connect supports mapInArrow +
-            # toLocalIterator), keeping DoGet at batch-decode speed; only
-            # an Arrow-conversion failure drops to the row path.
-            try:
-                it = ipc_df.toLocalIterator(prefetchPartitions=True)
-                head = next(it, None)  # reads through empty partitions
-            except Exception:
-                yield from self._execute_stream_rows(df, batch_rows, schema)
-                return
-            rows = iter(()) if head is None else _chain_row(head, it)
-            yield from _rechunk_ipc_rows(rows, schema, batch_rows)
+        if getattr(df, "_jdf", None) is None:
+            yield from self._execute_stream_connect(df, batch_rows, schema)
             return
 
         # Probe to the first non-empty pull inside the try: empty partitions
-        # convert nothing, so only a pull that returns rows proves the
+        # convert nothing, so only a pull that returns batches proves the
         # Arrow path works. Probe groups stay small (<=8) — they are sized
         # blind, before any byte observation exists. The probe does NOT
         # draw from _PULL_POOL: with no observation there is nothing to
@@ -222,28 +204,49 @@ class Engine:
         probe: list = []
         probed = 0
         try:
+            jrdd, jvm_schema = _jvm_arrow_batches(df)
+            n_parts = jrdd.getNumPartitions()
+            puller = _ArrowBatchPuller(df.sparkSession.sparkContext)
             group = 1
             while probed < n_parts and not probe:
                 parts = list(range(probed, min(probed + group, n_parts)))
-                probe.extend(sc.runJob(rdd, list, parts))
+                probe.extend(puller.runJob(jrdd, list, parts))
                 probed += len(parts)
                 group = min(group * 2, 8)
         except Exception:
             yield from self._execute_stream_rows(df, batch_rows, schema)
             return
 
-        def _rows():
+        def _blobs():
             yield from probe
             max_part = max([len(r.ipc) for r in probe] or [1 << 20])
             yield from _grouped_pull(
-                sc,
-                rdd,
+                puller,
+                jrdd,
                 list(range(probed, n_parts)),
                 max_part,
                 observed=max(probed, 1),
             )
 
-        yield from _rechunk_ipc_rows(_rows(), schema, batch_rows)
+        batches = (
+            pa.ipc.read_record_batch(pa.py_buffer(r.ipc), jvm_schema)
+            for r in _blobs()
+        )
+        yield from _rechunk_batches(batches, schema, batch_rows)
+
+    def _execute_stream_connect(self, df: DataFrame, batch_rows: int, schema):
+        """Spark Connect stream: executor-encoded IPC blobs through
+        ``toLocalIterator``; only an Arrow-conversion failure before the
+        first blob drops to the row path."""
+        try:
+            ipc_df = df.mapInArrow(_make_ipc_encoder(), "ipc binary")
+            it = ipc_df.toLocalIterator(prefetchPartitions=True)
+            head = next(it, None)  # reads through empty partitions
+        except Exception:
+            yield from self._execute_stream_rows(df, batch_rows, schema)
+            return
+        rows = iter(()) if head is None else _chain_row(head, it)
+        yield from _rechunk_ipc_rows(rows, schema, batch_rows)
 
     # -- multi-endpoint partitioned results ---------------------------------
 
@@ -255,8 +258,9 @@ class Engine:
         OUR extension beyond the reference (its FlightInfo always carries one
         endpoint; its own *client* already merges several —
         table-provider/src/lib.rs:43-53): executors IPC-encode their
-        partitions once (same encoder as ``execute_stream``), tagged with
-        ``spark_partition_id``, and the result persists MEMORY_AND_DISK.
+        partitions once (``mapInArrow``, the Connect stream's encoder),
+        tagged with ``spark_partition_id``, and the result persists
+        MEMORY_AND_DISK.
         Bucket ``b`` of ``n`` serves partitions with ``pid % n == b``, so
         the union over buckets is exactly the result and buckets are
         disjoint.
@@ -404,49 +408,30 @@ class Engine:
 
     # -- catalog metadata (Flight SQL result shapes) -------------------------
 
-    _CATALOGS_SCHEMA = T.StructType([T.StructField("catalog_name", T.StringType(), False)])
-    _SCHEMAS_SCHEMA = T.StructType(
-        [
-            T.StructField("catalog_name", T.StringType(), True),
-            T.StructField("db_schema_name", T.StringType(), False),
-        ]
-    )
-    _TABLES_SCHEMA = T.StructType(
-        [
-            T.StructField("catalog_name", T.StringType(), True),
-            T.StructField("db_schema_name", T.StringType(), True),
-            T.StructField("table_name", T.StringType(), False),
-            T.StructField("table_type", T.StringType(), False),
-        ]
-    )
-    _TABLE_TYPES_SCHEMA = T.StructType([T.StructField("table_type", T.StringType(), False)])
-
-    def get_catalogs(self) -> DataFrame:
+    def get_catalogs(self) -> list[dict]:
         """Catalog names (parity: do_get_catalogs, service.rs:616-636)."""
-        names = sorted(c.name for c in self.spark.catalog.listCatalogs())
-        return self.spark.createDataFrame(
-            [Row(catalog_name=n) for n in names], self._CATALOGS_SCHEMA
-        )
+        names = sorted(r[0] for r in self.spark.sql("SHOW CATALOGS").collect())
+        return [{"catalog_name": n} for n in names]
 
     def get_db_schemas(
         self, catalog: str | None = None, db_schema_filter_pattern: str | None = None
-    ) -> DataFrame:
+    ) -> list[dict]:
         """Database/schema names with LIKE-pattern filter (parity:
         do_get_schemas, service.rs:638-663)."""
         current = self.spark.catalog.currentCatalog()
         rows = [
-            Row(catalog_name=current, db_schema_name=d.name)
-            for d in self.spark.catalog.listDatabases()
+            {"catalog_name": current, "db_schema_name": d}
+            for d in self._list_databases()
         ]
         if catalog is not None:
-            rows = [r for r in rows if r.catalog_name == catalog]
+            rows = [r for r in rows if r["catalog_name"] == catalog]
         if db_schema_filter_pattern is not None:
             rows = [
                 r
                 for r in rows
-                if _sql_like(r.db_schema_name, db_schema_filter_pattern)
+                if _sql_like(r["db_schema_name"], db_schema_filter_pattern)
             ]
-        return self.spark.createDataFrame(rows, self._SCHEMAS_SCHEMA)
+        return rows
 
     def get_tables(
         self,
@@ -454,45 +439,77 @@ class Engine:
         db_schema_filter_pattern: str | None = None,
         table_name_filter_pattern: str | None = None,
         table_types: list[str] | None = None,
-    ) -> DataFrame:
+    ) -> list[dict]:
         """catalog × schema × table × type (parity: do_get_tables,
         service.rs:665-706). Temp views surface with type TEMPORARY,
         matching the reference's TableType mapping (service.rs:716-722)."""
         current = self.spark.catalog.currentCatalog()
-        rows = []
-        for t in self.spark.catalog.listTables():
-            ttype = _table_type(t)
-            rows.append(
-                Row(
-                    catalog_name=t.catalog or current,
-                    db_schema_name=(t.namespace[0] if t.namespace else None),
-                    table_name=t.name,
-                    table_type=ttype,
-                )
-            )
+        rows = [
+            {
+                "catalog_name": t.catalog or current,
+                "db_schema_name": t.namespace[0] if t.namespace else None,
+                "table_name": t.name,
+                "table_type": _table_type(t),
+            }
+            for t in self._list_tables()
+        ]
         if catalog is not None:
-            rows = [r for r in rows if r.catalog_name == catalog]
+            rows = [r for r in rows if r["catalog_name"] == catalog]
         if db_schema_filter_pattern is not None:
             rows = [
                 r
                 for r in rows
-                if r.db_schema_name is not None
-                and _sql_like(r.db_schema_name, db_schema_filter_pattern)
+                if r["db_schema_name"] is not None
+                and _sql_like(r["db_schema_name"], db_schema_filter_pattern)
             ]
         if table_name_filter_pattern is not None:
-            rows = [r for r in rows if _sql_like(r.table_name, table_name_filter_pattern)]
+            rows = [
+                r for r in rows if _sql_like(r["table_name"], table_name_filter_pattern)
+            ]
         if table_types:
-            rows = [r for r in rows if r.table_type in table_types]
-        rows.sort(key=lambda r: (r.catalog_name or "", r.db_schema_name or "", r.table_name))
-        return self.spark.createDataFrame(rows, self._TABLES_SCHEMA)
+            rows = [r for r in rows if r["table_type"] in table_types]
+        rows.sort(
+            key=lambda r: (
+                r["catalog_name"] or "",
+                r["db_schema_name"] or "",
+                r["table_name"],
+            )
+        )
+        return rows
 
-    def get_table_types(self) -> DataFrame:
+    def get_table_types(self) -> list[dict]:
         """Static table-type list (parity: do_get_table_types,
         service.rs:708-731 — Base/View/Temporary)."""
-        return self.spark.createDataFrame(
-            [Row(table_type=t) for t in ("BASE TABLE", "VIEW", "TEMPORARY")],
-            self._TABLE_TYPES_SCHEMA,
-        )
+        return [{"table_type": t} for t in ("BASE TABLE", "VIEW", "TEMPORARY")]
+
+    # Listings come from SHOW commands, which run on the driver without a
+    # Spark job; ``spark.catalog.listTables``/``listDatabases`` run one job
+    # to collect their own listing and more to iterate it (2-3 jobs and
+    # ~250-400 ms per call against ~30-60 ms for the SHOW command).
+
+    def _list_databases(self) -> list[str]:
+        """Namespaces of the current catalog (``Catalog.listDatabases``)."""
+        return [r[0] for r in self.spark.sql("SHOW NAMESPACES").collect()]
+
+    def _list_tables(self, db: str | None = None) -> list:
+        """``Catalog.listTables(db)`` rows: tables and views of ``db`` (the
+        current database when None) plus the session's temp views."""
+        from pyspark.sql.catalog import Table
+
+        scope = "" if db is None else f" IN {self._bq(db)}"
+        current = self.spark.catalog.currentCatalog()
+        views = {(r[0], r[1]) for r in self.spark.sql(f"SHOW VIEWS{scope}").collect()}
+        return [
+            Table(
+                name=name,
+                catalog=None if temp else current,
+                namespace=[ns] if ns else [],
+                description=None,
+                tableType="VIEW" if (ns, name) in views else "TABLE",
+                isTemporary=temp,
+            )
+            for ns, name, temp in self.spark.sql(f"SHOW TABLES{scope}").collect()
+        ]
 
     @staticmethod
     def _bq(name: str) -> str:
@@ -510,16 +527,12 @@ class Engine:
         listing — dedup by identity."""
         seen: dict = {}
         try:
-            dbs = [d.name for d in self.spark.catalog.listDatabases()]
+            dbs = self._list_databases()
         except Exception:
             dbs = []
         for db in dbs or [None]:
             try:
-                tables = (
-                    self.spark.catalog.listTables(db)
-                    if db is not None
-                    else self.spark.catalog.listTables()
-                )
+                tables = self._list_tables(db)
             except Exception:
                 continue  # database dropped between list calls
             for t in tables:
@@ -661,8 +674,8 @@ class Engine:
             return sorted(rows, key=lambda r: (r[0] or "", r[1] or "", r[2], r[4]))
         if rel == "schemata":
             rows = [
-                (current, d.name, None, None, None, None)
-                for d in self.spark.catalog.listDatabases()
+                (current, d, None, None, None, None)
+                for d in self._list_databases()
             ]
             if not any(r[1] == "information_schema" for r in rows):
                 rows.append(
@@ -825,8 +838,9 @@ def _grouped_pull(
     sc, rdd, parts: list, max_part: int, group: int = 4, observed: int = 1
 ):
     """Pull ``parts`` of ``rdd`` in adaptively-growing ``sc.runJob`` groups
-    (the UNCACHED ``execute_stream`` path; the persisted bucket streams
-    plan groups from exact sizes via ``_sized_partitions`` instead).
+    (the UNCACHED ``execute_stream`` path, where ``sc`` is the
+    ``_ArrowBatchPuller``; the persisted bucket streams plan groups from
+    exact sizes via ``_sized_partitions`` instead).
 
     Every group is capped so group x 2 x largest-partition-OBSERVED fits
     the 128 MB budget: expected group bytes stay under half the budget.
@@ -951,33 +965,89 @@ def _make_ipc_encoder():
     return _ipc_encode_batches
 
 
+def _jvm_arrow_batches(df):
+    """Spark's JVM-side Arrow encoding of a classic DataFrame: the JavaRDD
+    of its serialized record batches (``Dataset.toArrowBatchRdd``) and the
+    Arrow schema the JVM encodes them with, read from the JVM's own
+    ``ArrowUtils.toArrowSchema`` message rather than re-derived in Python.
+    Raises when the plan's types cannot cross Spark's Arrow conversion."""
+    import pyarrow as pa
+
+    jdf = df._jdf
+    conf = jdf.sparkSession().sessionState().conf()
+    jschema = df.sparkSession._jvm.org.apache.spark.sql.util.ArrowUtils.toArrowSchema(
+        jdf.schema(),
+        conf.sessionLocalTimeZone(),
+        True,  # errorOnDuplicatedFieldNames: Arrow structs need unique names
+        conf.arrowUseLargeVarTypes(),
+    )
+    schema = pa.ipc.read_schema(pa.py_buffer(jschema.serializeAsMessage()))
+    return jdf.toArrowBatchRdd().toJavaRDD(), schema
+
+
+class _Blob(NamedTuple):
+    """One serialized Arrow payload pulled to the driver."""
+
+    ipc: bytes
+
+
+class _ArrowBatchPuller:
+    """Pulls partitions of the JVM Arrow batch RDD straight to the driver.
+
+    ``PythonRDD.runJob`` collects the partitions' serialized record batches
+    and serves them over a local socket as length-framed bytes, so nothing
+    runs in a Python worker and nothing is pickled. ``runJob`` takes the
+    arguments of the ``SparkContext.runJob(rdd, list, parts)`` call that
+    ``_grouped_pull`` makes, so the grouping policy drives it unchanged;
+    ``func`` runs on the driver over the pulled ``_Blob``s."""
+
+    def __init__(self, sc) -> None:
+        self._sc = sc
+
+    def runJob(self, jrdd, func, parts):  # noqa: N802 - SparkContext's name
+        from pyspark.serializers import NoOpSerializer
+        from pyspark.util import _load_from_socket
+
+        sc = self._sc
+        sock_info = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), jrdd, parts)
+        return func(_Blob(b) for b in _load_from_socket(sock_info, NoOpSerializer()))
+
+
 def _rechunk_ipc_rows(rows, schema, batch_rows: int):
-    """Decode driver-side rows of IPC blobs into ``batch_rows``-sized Arrow
-    batches with zero-copy slicing (shared by ``execute_stream`` and the
-    multi-endpoint bucket streams)."""
+    """Decode driver-side rows of ``mapInArrow``-encoded IPC streams (the
+    Connect and multi-endpoint bucket streams) and re-chunk them."""
+    import pyarrow as pa
+
+    batches = (batch for row in rows for batch in pa.ipc.open_stream(row.ipc))
+    return _rechunk_batches(batches, schema, batch_rows)
+
+
+def _rechunk_batches(batches, schema, batch_rows: int):
+    """Re-chunk decoded Arrow batches into ``batch_rows``-sized batches with
+    zero-copy slicing, cast to ``schema`` where the types differ (shared by
+    every result stream)."""
     import pyarrow as pa
 
     buf: list[pa.RecordBatch] = []
     buffered = 0
-    for row in rows:
-        for batch in pa.ipc.open_stream(row.ipc):
-            if batch.num_rows == 0:
-                continue
-            if not batch.schema.equals(schema, check_metadata=False):
-                batch = (
-                    pa.Table.from_batches([batch])
-                    .cast(pa.schema([f.remove_metadata() for f in schema]))
-                    .combine_chunks()
-                    .to_batches()[0]
-                )
-            buf.append(batch)
-            buffered += batch.num_rows
-            while buffered >= batch_rows:
-                tbl = pa.Table.from_batches(buf).combine_chunks()
-                yield tbl.slice(0, batch_rows).to_batches()[0]
-                rest = tbl.slice(batch_rows)
-                buf = rest.to_batches()
-                buffered = rest.num_rows
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        if not batch.schema.equals(schema, check_metadata=False):
+            batch = (
+                pa.Table.from_batches([batch])
+                .cast(pa.schema([f.remove_metadata() for f in schema]))
+                .combine_chunks()
+                .to_batches()[0]
+            )
+        buf.append(batch)
+        buffered += batch.num_rows
+        while buffered >= batch_rows:
+            tbl = pa.Table.from_batches(buf).combine_chunks()
+            yield tbl.slice(0, batch_rows).to_batches()[0]
+            rest = tbl.slice(batch_rows)
+            buf = rest.to_batches()
+            buffered = rest.num_rows
     if buffered:
         tbl = pa.Table.from_batches(buf).combine_chunks()
         for batch in tbl.to_batches(max_chunksize=batch_rows):

@@ -199,7 +199,17 @@ def connected_components_star(
     propagation needs diameter rounds. Raises if ``max_iter`` rounds do not
     reach the fixed point (each round provably contracts, so this only
     fires on a too-small max_iter).
+
+    ``max_iter`` must be at least 2: the fixed point is detected by two
+    consecutive rounds producing the same edge list, so even an empty or
+    already-contracted input needs two rounds (and reports ``rounds == 2``).
+    A smaller value raises ``ValueError`` before any job runs.
     """
+    if max_iter < 2:
+        raise ValueError(
+            "connected_components_star needs max_iter >= 2: a fixed point is "
+            f"two equal consecutive rounds (got max_iter={max_iter})"
+        )
     # Lineage MUST be truncated each round, not just cached: every star
     # round references its input ~3x, so the logical plan grows ~9x per
     # round and analysis cost explodes exponentially by round ~6 (measured:

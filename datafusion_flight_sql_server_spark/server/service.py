@@ -22,7 +22,12 @@ datafusion-flight-sql-server/src/service.rs:194-1014) on
   middleware (examples/bearer_auth_flight_sql.rs:95-114).
 
 Results stream batch-at-a-time via ``Engine.execute_stream`` — the driver
-never holds a whole result (service.rs:186-191 behavior; SURVEY §7 H1).
+never holds a whole result (service.rs:186-191 behavior; SURVEY §7 H1). On
+classic sessions the batches are Spark's own JVM-side Arrow encoding, pulled
+to the driver in partition groups as serialized record batches and decoded
+there: no Python worker and no pickling sit on the result path. Catalog
+listings (GetCatalogs/DbSchemas/Tables/TableTypes) are built on the driver
+from the engine's listing rows and run no Spark job.
 
 Declared divergences (client-compat debugging starts here):
 
@@ -253,6 +258,12 @@ def encode_schema(schema: pa.Schema) -> bytes:
 
 def decode_schema_bytes(data: bytes) -> pa.Schema:
     return pa.ipc.read_schema(pa.BufferReader(data))
+
+
+def _metadata_stream(rows: list[dict], schema: pa.Schema) -> fl.FlightDataStream:
+    """A catalog listing's rows as one Flight stream — built on the driver
+    from the rows the engine listed, so a metadata RPC runs no Spark job."""
+    return fl.RecordBatchStream(pa.Table.from_pylist(rows, schema=schema))
 
 
 @dataclass
@@ -617,23 +628,14 @@ class FlightSqlServer(fl.FlightServerBase):
 
     def _get_catalogs(self, engine: Engine) -> fl.FlightDataStream:
         """service.rs:616-636."""
-        rows = [r.catalog_name for r in engine.get_catalogs().collect()]
-        table = pa.table({"catalog_name": rows}, schema=GET_CATALOGS_SCHEMA)
-        return fl.RecordBatchStream(table)
+        return _metadata_stream(engine.get_catalogs(), GET_CATALOGS_SCHEMA)
 
     def _get_db_schemas(
         self, engine: Engine, cmd: CommandGetDbSchemas
     ) -> fl.FlightDataStream:
         """service.rs:638-663."""
-        rows = engine.get_db_schemas(cmd.catalog, cmd.db_schema_filter_pattern).collect()
-        table = pa.table(
-            {
-                "catalog_name": [r.catalog_name for r in rows],
-                "db_schema_name": [r.db_schema_name for r in rows],
-            },
-            schema=GET_DB_SCHEMAS_SCHEMA,
-        )
-        return fl.RecordBatchStream(table)
+        rows = engine.get_db_schemas(cmd.catalog, cmd.db_schema_filter_pattern)
+        return _metadata_stream(rows, GET_DB_SCHEMAS_SCHEMA)
 
     def _get_tables(self, engine: Engine, cmd: CommandGetTables) -> fl.FlightDataStream:
         """service.rs:665-706 (+ per-row IPC schema when include_schema)."""
@@ -642,27 +644,18 @@ class FlightSqlServer(fl.FlightServerBase):
             cmd.db_schema_filter_pattern,
             cmd.table_name_filter_pattern,
             cmd.table_types or None,
-        ).collect()
-        columns = {
-            "catalog_name": [r.catalog_name for r in rows],
-            "db_schema_name": [r.db_schema_name for r in rows],
-            "table_name": [r.table_name for r in rows],
-            "table_type": [r.table_type for r in rows],
-        }
-        schema = GET_TABLES_SCHEMA
-        if cmd.include_schema:
-            schema = GET_TABLES_SCHEMA_WITH_SCHEMA
-            columns["table_schema"] = [
-                encode_schema(engine.table_arrow_schema(r.table_name)) for r in rows
-            ]
-        return fl.RecordBatchStream(pa.table(columns, schema=schema))
+        )
+        if not cmd.include_schema:
+            return _metadata_stream(rows, GET_TABLES_SCHEMA)
+        for r in rows:
+            r["table_schema"] = encode_schema(
+                engine.table_arrow_schema(r["table_name"])
+            )
+        return _metadata_stream(rows, GET_TABLES_SCHEMA_WITH_SCHEMA)
 
     def _get_table_types(self, engine: Engine) -> fl.FlightDataStream:
         """service.rs:708-731."""
-        rows = [r.table_type for r in engine.get_table_types().collect()]
-        return fl.RecordBatchStream(
-            pa.table({"table_type": rows}, schema=GET_TABLE_TYPES_SCHEMA)
-        )
+        return _metadata_stream(engine.get_table_types(), GET_TABLE_TYPES_SCHEMA)
 
     # -- DoPut --------------------------------------------------------------
 

@@ -7,6 +7,8 @@ component isolation, and min-id labeling.
 
 import random
 
+import pytest
+
 from datafusion_flight_sql_server_spark.operators.components import (
     connected_components,
     connected_components_star,
@@ -84,6 +86,36 @@ class TestStarContraction:
         labels.unpersist()
         # self-loop-only nodes label themselves; direction is irrelevant
         assert got == {(2, 2), (9, 2), (5, 5), (3, 3)}
+
+    def test_max_iter_below_two_fails_fast(self, spark):
+        # a fixed point is two equal consecutive rounds, so max_iter=1 could
+        # never converge; the guard raises before any job runs
+        edges = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
+        with pytest.raises(ValueError, match="max_iter >= 2"):
+            connected_components_star(edges, max_iter=1)
+
+    def test_empty_input_converges_in_two_rounds(self, spark):
+        edges = spark.createDataFrame([], "src bigint, dst bigint")
+        labels, rounds = connected_components_star(
+            edges, max_iter=2, with_rounds=True
+        )
+        assert labels.collect() == []
+        labels.unpersist()
+        assert rounds == 2
+
+    def test_already_star_input_converges_in_two_rounds(self, spark):
+        # every component is already a depth-1 min-star: round 1 changes
+        # nothing, round 2 confirms the fixed point
+        edges = spark.createDataFrame(
+            [(2, 1), (3, 1), (4, 1), (20, 10)], "src bigint, dst bigint"
+        )
+        labels, rounds = connected_components_star(
+            edges, max_iter=2, with_rounds=True
+        )
+        got = {(r.node, r.cluster_id) for r in labels.collect()}
+        labels.unpersist()
+        assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (20, 10)}
+        assert rounds == 2
 
 
 class TestDedupKeepBest:

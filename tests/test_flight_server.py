@@ -271,6 +271,23 @@ class TestIntegration:
         assert sum(b.num_rows for b in batches) == 5000
 
 
+class TestMetadataRunsNoSparkJob:
+    def test_get_tables_starts_no_spark_job(self, spark, client):
+        # catalog listings are built on the driver from the catalog API's
+        # rows; no DataFrame round trip, so no job reaches the scheduler
+        jsc = spark.sparkContext._jsc.sc()
+
+        def jobs() -> int:
+            jsc.listenerBus().waitUntilEmpty()
+            return jsc.statusStore().jobsList(None).size()
+
+        client.get_tables()  # warm the connection and the catalog
+        before = jobs()
+        tables = client.get_tables()
+        assert jobs() == before
+        assert {"users", "orders"} <= set(tables.column("table_name").to_pylist())
+
+
 class TestSchemaMetadata:
     """schema_metadata_test.rs:80-179 — per-field table_name metadata."""
 

@@ -346,30 +346,158 @@ class TestExecuteStream:
         ) == list(range(90, 100))
 
     def test_rddless_session_streams_arrow_not_rows(self, spark, monkeypatch):
-        # Spark Connect has no RDD API: the stream must fall back to the
-        # Arrow toLocalIterator path, NOT the row-at-a-time decode (the
-        # round-6 continuation review found Connect silently degraded).
-        from pyspark.sql import DataFrame
-
+        # Spark Connect has no JVM handle: the stream must take the Arrow
+        # toLocalIterator path, NOT the row-at-a-time decode (Connect once
+        # silently degraded to rows). The simulation removes the classic
+        # entry (``_jdf``, which a Connect DataFrame refuses with an
+        # AttributeError) and spies on toLocalIterator to prove that
+        # branch ran.
         engine = Engine(spark)
+        local_iters = []
+        classic = type(spark.range(1))
+        to_local_iterator = classic.toLocalIterator
 
-        def _no_rdd(self):
-            raise Exception("RDD API unsupported (Connect)")
+        def _spy(self, *a, **k):
+            local_iters.append(self)
+            return to_local_iterator(self, *a, **k)
 
-        monkeypatch.setattr(DataFrame, "rdd", property(_no_rdd))
+        monkeypatch.setattr(classic, "toLocalIterator", _spy)
 
         def _boom(*a, **k):
             raise AssertionError("row-at-a-time fallback used")
             yield  # pragma: no cover
 
         monkeypatch.setattr(engine, "_execute_stream_rows", _boom)
-        df = spark.range(0, 5_000, 1, 4).selectExpr(
-            "id", "cast(id as string) AS s"
+        df = _ConnectLike(
+            spark.range(0, 5_000, 1, 4).selectExpr("id", "cast(id as string) AS s")
         )
         batches = list(engine.execute_stream(df, batch_rows=1024))
         assert sum(b.num_rows for b in batches) == 5_000
+        assert len(local_iters) == 1
         # empty results also resolve through the iterator path
-        assert list(engine.execute_stream(spark.range(10).where("id < 0"))) == []
+        empty = _ConnectLike(spark.range(10).where("id < 0"))
+        assert list(engine.execute_stream(empty)) == []
+        assert len(local_iters) == 2
+
+
+class _ConnectLike:
+    """A classic DataFrame seen the way Spark Connect presents one: every
+    public method works, but the JVM handle ``_jdf`` raises."""
+
+    def __init__(self, df):
+        self._df = df
+
+    def __getattr__(self, name):
+        if name == "_jdf":
+            raise AttributeError("JVM_ATTRIBUTE_NOT_SUPPORTED: _jdf")
+        return getattr(self._df, name)
+
+
+def _poison(*a, **k):
+    raise AssertionError("left the JVM Arrow path")
+    yield  # pragma: no cover
+
+
+class TestJvmArrowPath:
+    """Classic sessions stream Spark's JVM-encoded Arrow batches: no
+    ``mapInArrow`` encoder and no row fallback on Arrow-able plans."""
+
+    @pytest.fixture
+    def engine(self, spark, monkeypatch):
+        from datafusion_flight_sql_server_spark.engine import core
+
+        monkeypatch.setattr(core, "_make_ipc_encoder", _poison)
+        engine = Engine(spark)
+        monkeypatch.setattr(engine, "_execute_stream_rows", _poison)
+        return engine
+
+    @pytest.fixture
+    def pulls(self, monkeypatch):
+        """Partition lists of every JVM pull (probe and grouped pulls)."""
+        from datafusion_flight_sql_server_spark.engine import core
+
+        calls = []
+        run_job = core._ArrowBatchPuller.runJob
+
+        def _spy(self, jrdd, func, parts):
+            calls.append(list(parts))
+            return run_job(self, jrdd, func, parts)
+
+        monkeypatch.setattr(core._ArrowBatchPuller, "runJob", _spy)
+        return calls
+
+    def test_multi_partition_types_equal_to_arrow(self, spark, engine, pulls):
+        df = spark.range(0, 20_000, 1, 4).selectExpr(
+            "id",
+            "cast(id as double) AS d",
+            "cast(id as string) AS s",
+            "array(id, id + 1) AS arr",
+            "named_struct('a', id) AS st",
+            "id % 2 = 0 AS b",
+            "timestamp_micros(id) AS ts",
+            "cast(id / 7 as decimal(38,4)) AS dec",
+            "date_add(date'2020-01-01', cast(id % 1000 as int)) AS dt",
+            "make_dt_interval(cast(id % 5 as int), 2, 3, 4.5) AS dti",
+            "map('k', id, 'j', id * 2) AS m",
+        )
+        table = pa.Table.from_batches(list(engine.execute_stream(df, batch_rows=4096)))
+        assert table.equals(df.toArrow())
+        assert [p for c in pulls for p in c] == [0, 1, 2, 3]
+
+    def test_order_by_across_grouped_pulls_keeps_global_order(
+        self, spark, engine, pulls
+    ):
+        session = spark.newSession()
+        session.conf.set("spark.sql.shuffle.partitions", "16")
+        session.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        df = session.range(0, 16_000, 1, 8).selectExpr(
+            "(id * 7919) % 16000 AS k"
+        ).orderBy(F.desc("k"))
+        batches = list(engine.execute_stream(df, batch_rows=1000))
+        keys = [v for b in batches for v in b.column("k").to_pylist()]
+        assert keys == list(range(15_999, -1, -1))
+        # the probe plus at least three grouped pulls, in partition order
+        assert len(pulls) >= 4
+        assert [p for c in pulls for p in c] == list(range(16))
+
+    def test_closing_after_first_batch_returns_pull_pool(self, spark, engine):
+        from datafusion_flight_sql_server_spark.engine import core
+
+        pool = core._PullBudgetPool(core._PULL_POOL_TOTAL)
+        saved = core._PULL_POOL
+        core._PULL_POOL = pool
+        try:
+            df = spark.range(0, 24_000, 1, 24).selectExpr("id", "id * 2 AS v")
+            # 1000-row partitions: the probe alone cannot fill a 2500-row
+            # batch, so the first batch is cut while a pooled group is live
+            gen = engine.execute_stream(df, batch_rows=2500)
+            first = next(gen)
+            assert first.num_rows == 2500
+            assert pool._avail < pool.total
+            gen.close()
+            assert pool._avail == pool.total
+            assert not pool._waiters
+        finally:
+            core._PULL_POOL = saved
+
+    def test_conversion_failure_before_first_batch_uses_row_path(self, spark):
+        # Arrow structs cannot carry duplicate field names: the JVM
+        # conversion fails before any batch, so the row path serves it.
+        engine = Engine(spark)
+        row_path = []
+        rows = engine._execute_stream_rows
+
+        def _spy(*a, **k):
+            row_path.append(a)
+            yield from rows(*a, **k)
+
+        engine._execute_stream_rows = _spy
+        df = spark.range(0, 50, 1, 2).selectExpr(
+            "id", "named_struct('a', id, 'a', id + 1) AS st"
+        )
+        table = pa.Table.from_batches(list(engine.execute_stream(df)))
+        assert len(row_path) == 1
+        assert table.column("id").to_pylist() == list(range(50))
 
 
 class TestProbePoisoning:
