@@ -164,17 +164,14 @@ def _load_gate() -> float:
     return waited - 5.0
 
 
-def _oracle_child(in_path: str, out_path: str) -> int:
-    """Child-process mode: time the DuckDB oracle queries in an isolated
-    process (VERDICT r13 #2 — the control previously shared the bench
-    session's process, so Spark-side GC/thread activity contaminated the
-    ratio denominator). Protocol: warm connection, 1 warmup, adaptive run
-    count — cheap oracles a median of 3 (unchanged since round 12);
-    expensive oracles (first sample >= 5 s) a MIN of 2 instead of a single
-    draw (round 14, declared in OPTIMIZATION_r14.md)."""
+def _time_oracles(sf_dir: str, queries: dict[str, str]) -> dict[str, float]:
+    """Time the DuckDB oracle queries over ``sf_dir``'s parquet tables.
+    Protocol: warm connection, 1 warmup, adaptive run count — cheap
+    oracles a median of 3 (unchanged since round 12); expensive oracles
+    (first sample >= 5 s) a MIN of 2 instead of a single draw (round 14,
+    declared in OPTIMIZATION_r14.md). A failing oracle is left out."""
     import duckdb
 
-    spec = json.loads(Path(in_path).read_text())
     con = duckdb.connect()
     for t in (
         "region nation customer supplier part orders lineitem "
@@ -182,10 +179,10 @@ def _oracle_child(in_path: str, out_path: str) -> int:
     ).split():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{spec['sf_dir']}/{t}.parquet')"
+            f"read_parquet('{sf_dir}/{t}.parquet')"
         )
     result: dict[str, float] = {}
-    for name, sql in spec["queries"].items():
+    for name, sql in queries.items():
         try:
             con.execute(sql).fetchdf()  # warm-up
             samples = []
@@ -212,6 +209,16 @@ def _oracle_child(in_path: str, out_path: str) -> int:
                 result[name] = round(min(samples), 4)
         except Exception:  # pragma: no cover - oracle-side failure
             continue
+    return result
+
+
+def _oracle_child(in_path: str, out_path: str) -> int:
+    """Child-process mode: time the DuckDB oracle queries in an isolated
+    process (VERDICT r13 #2 — the control previously shared the bench
+    session's process, so Spark-side GC/thread activity contaminated the
+    ratio denominator); protocol in ``_time_oracles``."""
+    spec = json.loads(Path(in_path).read_text())
+    result = _time_oracles(spec["sf_dir"], spec["queries"])
     Path(out_path).write_text(json.dumps(result))
     return 0
 
@@ -332,41 +339,7 @@ def main() -> int:
             oracle_sec = {}
         if not oracle_sec:  # pragma: no cover - in-process fallback
             try:
-                import duckdb
-
-                con = duckdb.connect()
-                for t in (
-                    "region nation customer supplier part orders lineitem "
-                    "events documents embeddings"
-                ).split():
-                    con.execute(
-                        f"CREATE VIEW {t} AS SELECT * FROM "
-                        f"read_parquet('{sf_dir}/{t}.parquet')"
-                    )
-                for name, sql in oracle_spec["queries"].items():
-                    try:
-                        con.execute(sql).fetchdf()  # warm-up
-                        samples = []
-                        t0 = time.perf_counter()
-                        con.execute(sql).fetchdf()
-                        samples.append(time.perf_counter() - t0)
-                        if samples[0] < 5.0:
-                            for _ in range(2):
-                                t0 = time.perf_counter()
-                                con.execute(sql).fetchdf()
-                                samples.append(time.perf_counter() - t0)
-                            oracle_sec[name] = round(
-                                statistics.median(samples), 4
-                            )
-                        else:
-                            # min-of-2 for expensive oracles — see
-                            # _oracle_child for the rationale
-                            t0 = time.perf_counter()
-                            con.execute(sql).fetchdf()
-                            samples.append(time.perf_counter() - t0)
-                            oracle_sec[name] = round(min(samples), 4)
-                    except Exception:  # pragma: no cover
-                        continue
+                oracle_sec = _time_oracles(sf_dir, oracle_spec["queries"])
             except Exception:  # pragma: no cover - duckdb unavailable
                 pass
         steal_oracle = _steal_delta_sec(steal1)

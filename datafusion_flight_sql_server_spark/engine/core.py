@@ -131,29 +131,34 @@ class Engine:
         """
         return self.sql_to_plan(sql, params)
 
-    def execute_stream(self, df: DataFrame, batch_rows: int = 65536):
+    def execute_stream(self, df: DataFrame):
         """Yield the result as Arrow record batches with bounded driver memory.
 
         Parity: the reference pipes batch-at-a-time (service.rs:186-236) and
-        never materializes the full result (SURVEY §7 H1). Two properties:
+        never materializes the full result (SURVEY §7 H1). Three properties:
 
         - **Arrow end-to-end, encoded once**: on a classic session the
           result is Spark's own JVM-side Arrow encoding
-          (``Dataset.toArrowBatchRdd``: the same ``ArrowWriter`` that feeds
-          ``mapInArrow``, batched by ``maxRecordsPerBatch``). The driver
-          pulls the serialized record batches with ``PythonRDD.runJob``,
-          which hands them over a local socket as length-framed bytes, and
-          decodes them with ``pa.ipc.read_record_batch`` against the schema
-          the JVM encodes with (``ArrowUtils.toArrowSchema``). No Python
-          worker and no pickling sit on the result path, and the driver
-          never touches individual cells: it decodes whole batches and
-          re-chunks them to ``batch_rows``. This matches the reference's
-          batch-at-a-time RecordBatch pipe (service.rs:186-191).
+          (``Dataset.toArrowBatchRdd``, written by Spark's ``ArrowWriter``).
+          The driver pulls the serialized record batches with
+          ``PythonRDD.runJob``, which hands them over a local socket as
+          length-framed bytes, and decodes them with
+          ``pa.ipc.read_record_batch`` against the schema the JVM encodes
+          with (``ArrowUtils.toArrowSchema``). No Python worker and no
+          pickling sit on the result path, and the driver never touches
+          individual cells.
+        - **Batches pass through as Spark cut them**: batch size is the
+          session's ``spark.sql.execution.arrow.maxRecordsPerBatch`` (the
+          analogue of DataFusion's session ``batch_size``; ``build_session``
+          sets 65536), so embedders size batches through that conf. A batch
+          is only cast, and only when its types differ from the declared
+          schema (``large_string``/``large_binary`` under
+          ``spark.sql.execution.arrow.useLargeVarTypes``).
         - **Bounded memory**: partitions are pulled in groups, so peak
-          driver memory is one group of serialized batches + the re-chunk
-          buffer — a 1000-executor result streams through a bounded window
-          instead of landing whole on the driver the way
-          ``collect()``/``toArrow()`` would.
+          driver memory is one group of serialized batches — a
+          1000-executor result streams through a bounded window instead of
+          landing whole on the driver the way ``collect()``/``toArrow()``
+          would.
 
         The driver pulls partitions in ADAPTIVELY-GROWING GROUPS, one Spark
         job per group, rather than one job per partition the way
@@ -182,15 +187,13 @@ class Engine:
         has been yielded — a failure after the first successful pull
         propagates instead.
         """
-        import pyarrow as pa
-
         from datafusion_flight_sql_server_spark.plans.schema import (
             arrow_schema_for_df,
         )
 
         schema = arrow_schema_for_df(df)
         if getattr(df, "_jdf", None) is None:
-            yield from self._execute_stream_connect(df, batch_rows, schema)
+            yield from self._execute_stream_connect(df, schema)
             return
 
         # Probe to the first non-empty pull inside the try: empty partitions
@@ -214,7 +217,7 @@ class Engine:
                 probed += len(parts)
                 group = min(group * 2, 8)
         except Exception:
-            yield from self._execute_stream_rows(df, batch_rows, schema)
+            yield from self._execute_stream_rows(df, schema)
             return
 
         def _blobs():
@@ -228,53 +231,53 @@ class Engine:
                 observed=max(probed, 1),
             )
 
-        batches = (
-            pa.ipc.read_record_batch(pa.py_buffer(r.ipc), jvm_schema)
-            for r in _blobs()
-        )
-        yield from _rechunk_batches(batches, schema, batch_rows)
+        yield from _decode_jvm_batches(_blobs(), jvm_schema, schema)
 
-    def _execute_stream_connect(self, df: DataFrame, batch_rows: int, schema):
+    def _execute_stream_connect(self, df: DataFrame, schema):
         """Spark Connect stream: executor-encoded IPC blobs through
         ``toLocalIterator``; only an Arrow-conversion failure before the
         first blob drops to the row path."""
+        import pyarrow as pa
+
         try:
             ipc_df = df.mapInArrow(_make_ipc_encoder(), "ipc binary")
             it = ipc_df.toLocalIterator(prefetchPartitions=True)
             head = next(it, None)  # reads through empty partitions
         except Exception:
-            yield from self._execute_stream_rows(df, batch_rows, schema)
+            yield from self._execute_stream_rows(df, schema)
             return
         rows = iter(()) if head is None else _chain_row(head, it)
-        yield from _rechunk_ipc_rows(rows, schema, batch_rows)
+        batches = (b for row in rows for b in pa.ipc.open_stream(row.ipc))
+        yield from _as_declared(batches, schema)
 
     # -- multi-endpoint partitioned results ---------------------------------
 
     def prepare_partitioned_result(
         self, df: DataFrame, max_endpoints: int
-    ) -> tuple[DataFrame, int]:
-        """Stage ``df`` for bucket-parallel DoGet; return (staged, n_buckets).
+    ) -> "_StagedResult | None":
+        """Plan ``df`` for bucket-parallel DoGet: a ``_StagedResult`` with
+        ``max_endpoints`` buckets, or None when ``df`` has no JVM handle
+        (Spark Connect), where the caller serves the reference's single
+        stateless ticket instead.
 
         OUR extension beyond the reference (its FlightInfo always carries one
         endpoint; its own *client* already merges several —
-        table-provider/src/lib.rs:43-53): executors IPC-encode their
-        partitions once (``mapInArrow``, the Connect stream's encoder),
-        tagged with ``spark_partition_id``, and the result persists
-        MEMORY_AND_DISK.
-        Bucket ``b`` of ``n`` serves partitions with ``pid % n == b``, so
+        table-provider/src/lib.rs:43-53). The staged result is ``df``'s
+        JVM Arrow batch RDD — the same batches ``execute_stream`` pulls —
+        persisted MEMORY_AND_DISK once, at the first bucket DoGet. Bucket
+        ``b`` of ``n`` serves partitions ``p % n == b`` of that one RDD, so
         the union over buckets is exactly the result and buckets are
         disjoint.
 
         Laziness contract: NO job runs here — GetFlightInfo stays a
-        plan-only call (clients use it as a schema probe). That is also why
-        the bucket count is taken from config rather than the plan's actual
-        partition count: inspecting it (``df.rdd``) finalizes the AQE plan,
-        which can execute shuffle stages. A result with fewer partitions
-        than buckets just serves some empty streams — one cheap RPC each.
-        The first DoGet wave computes and caches the partitions; Spark's
-        block-level cache locking keeps concurrent bucket reads from
-        recomputing a partition. At 1000-executor scale this is the lever
-        that stops one driver-side ``toLocalIterator`` from being the
+        plan-only call (clients use it as a schema probe). Building the
+        batch RDD finalizes the AQE plan, which executes shuffle stages
+        (``toArrowBatchRdd`` ran 2 jobs on a join+aggregate), so it waits
+        for the first bucket DoGet; for the same reason the bucket count
+        is taken from config rather than the plan's partition count. A
+        result with fewer partitions than buckets just serves some empty
+        streams — one cheap RPC each. At 1000-executor scale this is the
+        lever that stops one driver-side stream from being the
         result-transfer bottleneck: each bucket streams through its own
         gRPC call, and driver memory for ALL concurrent streams together
         is bounded by the shared ``_PULL_POOL`` byte-accounting pool
@@ -289,110 +292,52 @@ class Engine:
         Serving a separate application (the real deployment) has no such
         coupling.
         """
-        from pyspark import StorageLevel
-        from pyspark.sql import functions as F
-
-        staged = (
-            df.mapInArrow(_make_ipc_encoder(), "ipc binary")
-            .withColumn("pid", F.spark_partition_id())
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        n_buckets = max(1, int(max_endpoints))
-        # Spark Connect exposes no RDD API, so a bucket cannot read "its
-        # own partitions" — the fallback would pid-FILTER the staged
-        # relation once per bucket (n_buckets cached scans of the full
-        # result). Degrade to ONE endpoint there (exact reference parity:
-        # its FlightInfo always carries one endpoint) instead of shipping
-        # read amplification. Touching sparkSession.sparkContext does not
-        # finalize the AQE plan, so the laziness contract above holds.
-        try:
-            df.sparkSession.sparkContext
-        except Exception:  # pragma: no cover - Connect session
-            n_buckets = 1
-        return staged, n_buckets
+        if getattr(df, "_jdf", None) is None:
+            return None
+        return _StagedResult(df, max(1, int(max_endpoints)))
 
     @staticmethod
-    def stream_result_bucket(
-        staged: DataFrame, bucket: int, n_buckets: int, schema, batch_rows: int
-    ):
-        """Yield re-chunked Arrow batches for one bucket of a staged result.
+    def stream_result_bucket(staged: "_StagedResult", bucket: int, schema):
+        """Yield the Arrow batches of one bucket of a staged result, cast
+        to the declared ``schema`` only where the types differ.
 
-        Bucket ``b`` IS partition set ``{p : p % n == b}`` of the staged
-        relation (no shuffle happens after the encode), so the bucket reads
-        exactly its own cached partitions via grouped ``runJob`` pulls —
-        no per-bucket full scan through a pid filter, and no
-        one-job-per-partition ``toLocalIterator`` latency (the round-6
-        serving profile measured ~100 ms of scheduling per partition job).
-        The pid-filter path remains as the fallback when the partition
-        count cannot be inspected (Spark Connect)."""
-        from pyspark.sql import functions as F
+        Bucket ``b`` IS partition set ``{p : p % n == b}`` of the persisted
+        batch RDD, so the bucket reads exactly its own cached partitions
+        via grouped ``PythonRDD.runJob`` pulls — no per-bucket full scan,
+        and no one-job-per-partition ``toLocalIterator`` latency (the
+        round-6 serving profile measured ~100 ms of scheduling per
+        partition job). Because the RDD is PERSISTED, a sizes pre-pass is
+        cheap: one job computes (and caches) the bucket's partitions in
+        parallel on the executors and returns only their byte counts.
+        Groups are then planned from TRUE sizes — a HARD driver-memory
+        bound per pull (<= budget, or one partition if a single partition
+        exceeds it), closing the size-cliff exposure an observation-based
+        grower cannot (with ``result_endpoints`` buckets streaming
+        concurrently the exposure multiplies, so the hard bound matters
+        most here)."""
+        jrdd, jvm_schema, sc = staged.batches()
+        n = staged.n_buckets
+        mine = [p for p in range(jrdd.getNumPartitions()) if p % n == bucket]
+        part_bytes = _sized_partitions(sc, jrdd, mine)
+        groups = _plan_groups_by_bytes(mine, part_bytes, budget=_PULL_BUDGET)
+        sizes = dict(zip(mine, part_bytes))
+        group_bytes = [sum(sizes[p] for p in g) for g in groups]
+        puller = _ArrowBatchPuller(sc)
+        blobs = _pull_planned_groups(puller, jrdd, groups, group_bytes)
+        yield from _decode_jvm_batches(blobs, jvm_schema, schema)
 
-        try:
-            rdd = staged.select("pid", "ipc").rdd
-            n_parts = rdd.getNumPartitions()
-            sc = staged.sparkSession.sparkContext
-        except Exception:  # pragma: no cover - Connect fallback
-            # prepare_partitioned_result degrades Connect results to one
-            # bucket, so this path normally streams the WHOLE relation
-            # with no pid filter (no per-bucket rescan). The filtered form
-            # remains only for a ticket that genuinely names a sub-bucket
-            # (e.g. a classic-staged result later served via Connect).
-            src = (
-                staged.select("ipc")
-                if n_buckets == 1
-                else staged.filter(F.col("pid") % n_buckets == bucket).select(
-                    "ipc"
-                )
-            )
-            rows = src.toLocalIterator(prefetchPartitions=True)
-            yield from _rechunk_ipc_rows(rows, schema, batch_rows)
-            return
-
-        mine = [p for p in range(n_parts) if p % n_buckets == bucket]
-
-        # The staged relation is PERSISTED, so a sizes pre-pass is cheap: one
-        # job computes (and caches) the bucket's partitions in parallel on
-        # the executors, returning only per-partition byte counts. Groups
-        # are then planned from TRUE sizes — a HARD driver-memory bound per
-        # pull (<= budget, or one partition if a single partition exceeds
-        # it), closing the size-cliff exposure an observation-based grower
-        # cannot (with result_endpoints buckets streaming concurrently the
-        # exposure multiplies, so the hard bound matters most here). The
-        # same job verifies the pid↔partition-index invariant the bucket
-        # mapping rests on: partition p of the staged relation must hold
-        # exactly the rows tagged pid == p at encode time.
-        sizes = _sized_partitions(sc, rdd, mine)
-        for pid, (part_sizes, part_pids) in zip(mine, sizes):
-            bad = [t for t in part_pids if t != pid]
-            if bad:  # pragma: no cover - invariant guard
-                raise RuntimeError(
-                    f"staged result partition {pid} holds rows tagged "
-                    f"pid={bad[0]}; bucket mapping would drop/duplicate data"
-                )
-        part_bytes = {p: sum(s) for p, (s, _) in zip(mine, sizes)}
-        groups = _plan_groups_by_bytes(
-            mine, [part_bytes[p] for p in mine], budget=_PULL_BUDGET
-        )
-        group_bytes = [sum(part_bytes[p] for p in g) for g in groups]
-        yield from _rechunk_ipc_rows(
-            _pull_planned_groups(sc, rdd, groups, group_bytes),
-            schema,
-            batch_rows,
-        )
-
-    @staticmethod
-    def release_partitioned_result(staged: DataFrame) -> None:
-        staged.unpersist()
-
-    def _execute_stream_rows(self, df: DataFrame, batch_rows: int, schema):
+    def _execute_stream_rows(self, df: DataFrame, schema):
         """Row-at-a-time fallback for plans whose types can't cross Spark's
-        Arrow boundary (rare; same bounded-memory contract, slower)."""
+        Arrow boundary (rare; same bounded-memory contract, slower). Cuts
+        batches by the same ``maxRecordsPerBatch`` conf (<= 0: unlimited)."""
         import pyarrow as pa
 
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        limit = int(df.sparkSession.conf.get(conf))
         buf: list[dict] = []
         for row in df.toLocalIterator(prefetchPartitions=True):
             buf.append(row.asDict(recursive=True))
-            if len(buf) >= batch_rows:
+            if len(buf) == limit:
                 yield pa.RecordBatch.from_pylist(buf, schema=schema)
                 buf = []
         if buf:
@@ -885,25 +830,20 @@ def _grouped_pull(
             group = min(group * 4, 64)
 
 
-def _sized_partitions(sc, rdd, parts: list) -> list:
-    """One job over the PERSISTED blob relation returning, per partition,
-    (list of blob sizes, list of distinct pid tags). Computes and caches
-    the partitions in parallel as a side effect; only integers return to
-    the driver. Nested function: cloudpickle serializes it by value, so
-    workers need no repo import (same posture as ``_make_ipc_encoder``)."""
+def _sized_partitions(sc, jrdd, parts: list) -> list:
+    """Serialized bytes of each of ``parts`` of the JVM batch RDD, in one
+    job that computes (and, once persisted, caches) the partitions in
+    parallel; only one integer per partition returns to the driver. The
+    raw-bytes view (``NoOpSerializer``) hands a Python worker each batch's
+    bytes as is, so the sizes are exactly what ``_ArrowBatchPuller`` pulls.
+    runJob is mapPartitions + collect: it FLATTENS each partition's returned
+    iterable, so each partition returns a one-element list, keeping the
+    result aligned 1:1 with ``parts``."""
+    from pyspark.rdd import RDD
+    from pyspark.serializers import NoOpSerializer
 
-    def _sizes(iterator):
-        sizes, pids = [], set()
-        for row in iterator:
-            sizes.append(len(row.ipc))
-            pids.add(row.pid)
-        # runJob is mapPartitions + collect: it FLATTENS each partition's
-        # returned iterable, so a bare tuple would arrive as two misaligned
-        # elements. One single-element list per partition keeps the result
-        # aligned 1:1 with ``parts``.
-        return [(sizes, sorted(pids))]
-
-    return sc.runJob(rdd, _sizes, parts)
+    raw = RDD(jrdd, sc, NoOpSerializer())
+    return sc.runJob(raw, lambda it: [sum(map(len, it))], parts)
 
 
 def _plan_groups_by_bytes(parts: list, part_bytes: list, budget: int) -> list:
@@ -997,9 +937,10 @@ class _ArrowBatchPuller:
     ``PythonRDD.runJob`` collects the partitions' serialized record batches
     and serves them over a local socket as length-framed bytes, so nothing
     runs in a Python worker and nothing is pickled. ``runJob`` takes the
-    arguments of the ``SparkContext.runJob(rdd, list, parts)`` call that
-    ``_grouped_pull`` makes, so the grouping policy drives it unchanged;
-    ``func`` runs on the driver over the pulled ``_Blob``s."""
+    arguments of the ``SparkContext.runJob(rdd, list, parts)`` calls that
+    ``_grouped_pull`` and ``_pull_planned_groups`` make, so both grouping
+    policies drive it unchanged; ``func`` runs on the driver over the
+    pulled ``_Blob``s."""
 
     def __init__(self, sc) -> None:
         self._sc = sc
@@ -1013,42 +954,67 @@ class _ArrowBatchPuller:
         return func(_Blob(b) for b in _load_from_socket(sock_info, NoOpSerializer()))
 
 
-def _rechunk_ipc_rows(rows, schema, batch_rows: int):
-    """Decode driver-side rows of ``mapInArrow``-encoded IPC streams (the
-    Connect and multi-endpoint bucket streams) and re-chunk them."""
+def _decode_jvm_batches(blobs, jvm_schema, schema):
+    """Decode pulled JVM record batches against the schema the JVM encoded
+    them with, then hand them on as declared (``_as_declared``)."""
     import pyarrow as pa
 
-    batches = (batch for row in rows for batch in pa.ipc.open_stream(row.ipc))
-    return _rechunk_batches(batches, schema, batch_rows)
+    batches = (
+        pa.ipc.read_record_batch(pa.py_buffer(b.ipc), jvm_schema) for b in blobs
+    )
+    return _as_declared(batches, schema)
 
 
-def _rechunk_batches(batches, schema, batch_rows: int):
-    """Re-chunk decoded Arrow batches into ``batch_rows``-sized batches with
-    zero-copy slicing, cast to ``schema`` where the types differ (shared by
-    every result stream)."""
+def _as_declared(batches, schema):
+    """Pass batches through as Spark cut them, dropping empty ones and
+    casting to ``schema`` only where the types differ: under
+    ``spark.sql.execution.arrow.useLargeVarTypes`` Spark encodes
+    ``large_string``/``large_binary``, which Flight's ``GeneratorStream``
+    rejects against the declared ``string``/``binary``."""
     import pyarrow as pa
 
-    buf: list[pa.RecordBatch] = []
-    buffered = 0
+    target = pa.schema([f.remove_metadata() for f in schema])
     for batch in batches:
-        if batch.num_rows == 0:
-            continue
-        if not batch.schema.equals(schema, check_metadata=False):
-            batch = (
-                pa.Table.from_batches([batch])
-                .cast(pa.schema([f.remove_metadata() for f in schema]))
-                .combine_chunks()
-                .to_batches()[0]
-            )
-        buf.append(batch)
-        buffered += batch.num_rows
-        while buffered >= batch_rows:
-            tbl = pa.Table.from_batches(buf).combine_chunks()
-            yield tbl.slice(0, batch_rows).to_batches()[0]
-            rest = tbl.slice(batch_rows)
-            buf = rest.to_batches()
-            buffered = rest.num_rows
-    if buffered:
-        tbl = pa.Table.from_batches(buf).combine_chunks()
-        for batch in tbl.to_batches(max_chunksize=batch_rows):
+        if not batch.schema.equals(target, check_metadata=False):
+            batch = batch.cast(target)
+        if batch.num_rows:
             yield batch
+
+
+class _StagedResult:
+    """A multi-endpoint result: the JVM Arrow batch RDD of ``df``, built
+    and persisted MEMORY_AND_DISK once, by whichever bucket DoGet comes
+    first, and shared by all ``n_buckets`` buckets until ``release``."""
+
+    def __init__(self, df: DataFrame, n_buckets: int) -> None:
+        self.n_buckets = n_buckets
+        self._df = df
+        self._lock = threading.Lock()
+        self._built: tuple | None = None  # (jrdd, jvm_schema, sc)
+        self._released = False
+
+    def batches(self) -> tuple:
+        """``(jrdd, jvm_schema, sc)``, building and persisting on first use.
+        A released result is expired rather than rebuilt, so a DoGet that
+        races the eviction cannot leave a persisted RDD behind."""
+        with self._lock:
+            if self._released:
+                raise RuntimeError(
+                    "partitioned result expired; re-issue GetFlightInfo"
+                )
+            if self._built is None:
+                from pyspark import StorageLevel
+
+                jrdd, jvm_schema = _jvm_arrow_batches(self._df)
+                sc = self._df.sparkSession.sparkContext
+                jrdd.persist(sc._getJavaStorageLevel(StorageLevel.MEMORY_AND_DISK))
+                self._built = (jrdd, jvm_schema, sc)
+            return self._built
+
+    def release(self) -> None:
+        """Unpersist the batch RDD if it was built; later DoGets expire."""
+        with self._lock:
+            self._released = True
+            built, self._built = self._built, None
+        if built is not None:
+            built[0].unpersist()

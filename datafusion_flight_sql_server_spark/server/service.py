@@ -25,9 +25,13 @@ Results stream batch-at-a-time via ``Engine.execute_stream`` — the driver
 never holds a whole result (service.rs:186-191 behavior; SURVEY §7 H1). On
 classic sessions the batches are Spark's own JVM-side Arrow encoding, pulled
 to the driver in partition groups as serialized record batches and decoded
-there: no Python worker and no pickling sit on the result path. Catalog
-listings (GetCatalogs/DbSchemas/Tables/TableTypes) are built on the driver
-from the engine's listing rows and run no Spark job.
+there: no Python worker and no pickling sit on the result path. The
+multi-endpoint buckets stream the same batches from a persisted copy. Batches
+pass through as Spark cut them, so their size is the session's
+``spark.sql.execution.arrow.maxRecordsPerBatch`` — the analogue of
+DataFusion's session ``batch_size``, which is where the reference takes its
+batch size from. Catalog listings (GetCatalogs/DbSchemas/Tables/TableTypes)
+are built on the driver from the engine's listing rows and run no Spark job.
 
 Declared divergences (client-compat debugging starts here):
 
@@ -53,9 +57,9 @@ Declared divergences (client-compat debugging starts here):
 
 from __future__ import annotations
 
+import threading
 import uuid
 from collections import OrderedDict
-from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.flight as fl
@@ -104,12 +108,17 @@ class FlightSqlServiceConfig:
     partitioned result, so clients stream big results over parallel DoGet
     calls instead of one driver-side iterator. The reference's client
     already merges multi-endpoint FlightInfos
-    (table-provider/src/lib.rs:43-53), as do ours and ADBC's."""
+    (table-provider/src/lib.rs:43-53), as do ours and ADBC's. Spark
+    Connect sessions always get the single ticket.
+
+    Result batch size is not a service setting: batches pass through as
+    Spark cuts them, so embedders size them with the session conf
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` (DataFusion's session
+    ``batch_size`` plays that role for the reference)."""
 
     def __init__(
         self,
         schema_with_metadata: bool = False,
-        batch_rows: int = 65536,
         result_endpoints: int = 1,
         max_staged_results: int = 16,
         substrait_local_files_roots: tuple[str, ...] = (),
@@ -118,7 +127,6 @@ class FlightSqlServiceConfig:
         sql_dialect: str = "auto",
     ):
         self.schema_with_metadata = schema_with_metadata
-        self.batch_rows = batch_rows
         self.result_endpoints = result_endpoints
         self.max_staged_results = max_staged_results
         # H3 strict mode: error on untypeable placeholders at
@@ -266,15 +274,6 @@ def _metadata_stream(rows: list[dict], schema: pa.Schema) -> fl.FlightDataStream
     return fl.RecordBatchStream(pa.Table.from_pylist(rows, schema=schema))
 
 
-@dataclass
-class _StagedResult:
-    """A persisted, partition-tagged result serving a multi-endpoint DoGet."""
-
-    staged: object  # DataFrame of (ipc binary, pid int)
-    n_buckets: int
-    schema: pa.Schema
-
-
 def _to_flight_error(exc: Exception) -> Exception:
     """Blanket INTERNAL mapping, like the reference (service.rs:1107-1121)."""
     if isinstance(exc, (fl.FlightError, NotImplementedError)):
@@ -301,13 +300,11 @@ class FlightSqlServer(fl.FlightServerBase):
             provider = StaticSessionStateProvider(engine)
         self._provider = provider
         self.config = config or FlightSqlServiceConfig()
-        # Staged multi-endpoint results: result_id -> _StagedResult. Guarded
-        # by a lock (gRPC serves handlers on a thread pool); LRU-capped with
-        # unpersist-on-evict, and released early once every bucket has been
-        # fully streamed.
-        import threading
-
-        self._staged: "OrderedDict[str, _StagedResult]" = OrderedDict()
+        # Staged multi-endpoint results: result_id -> (engine-side staged
+        # result, declared schema). Guarded by a lock (gRPC serves handlers
+        # on a thread pool); LRU-capped, and released on eviction and at
+        # shutdown.
+        self._staged: "OrderedDict[str, tuple]" = OrderedDict()
         self._staged_lock = threading.Lock()
 
     # -- context mint (service.rs:133-151) ----------------------------------
@@ -432,26 +429,31 @@ class FlightSqlServer(fl.FlightServerBase):
 
         With ``config.result_endpoints > 1`` the single stateless ticket is
         replaced by one endpoint per result bucket (see
-        ``Engine.prepare_partitioned_result``); still no job runs here."""
+        ``Engine.prepare_partitioned_result``) unless the session cannot
+        stage (Spark Connect); still no job runs here."""
         df = engine.sql_to_plan(command.query)
         schema = arrow_schema_for_df(df, self.config.schema_with_metadata)
         if self.config.result_endpoints > 1:
-            return self._info_statement_partitioned(engine, df, schema, descriptor)
+            staged = engine.prepare_partitioned_result(
+                df, self.config.result_endpoints
+            )
+            if staged is not None:
+                return self._info_partitioned(staged, schema, descriptor)
         ticket = CommandTicket(command=command).try_encode()
         return self._flight_info(schema, descriptor, ticket)
 
-    def _info_statement_partitioned(
-        self, engine: Engine, df, schema: pa.Schema, descriptor
-    ) -> fl.FlightInfo:
-        staged, n_buckets = engine.prepare_partitioned_result(
-            df, self.config.result_endpoints
-        )
+    def _info_partitioned(self, staged, schema: pa.Schema, descriptor) -> fl.FlightInfo:
         result_id = uuid.uuid4().hex
+        evicted = []
         with self._staged_lock:
-            self._staged[result_id] = _StagedResult(staged, n_buckets, schema)
+            self._staged[result_id] = (staged, schema)
             while len(self._staged) > self.config.max_staged_results:
-                _, old = self._staged.popitem(last=False)
-                Engine.release_partitioned_result(old.staged)
+                _, (old, _) = self._staged.popitem(last=False)
+                evicted.append(old)
+        # outside the map lock: a release waits for a build in progress
+        for old in evicted:
+            old.release()
+        n_buckets = staged.n_buckets
         endpoints = [
             fl.FlightEndpoint(
                 fl.Ticket(
@@ -576,7 +578,7 @@ class FlightSqlServer(fl.FlightServerBase):
         once per action, retries and speculative tasks replay them too, and
         the reference's stateless tickets allow infinite replay). Results
         are only dropped by the ``max_staged_results`` LRU, whose eviction
-        unpersists the staging; a ticket outliving that gets a clean
+        unpersists the staged batches; a ticket outliving that gets a clean
         'expired' error telling the client to re-issue GetFlightInfo — the
         documented cost of the result affinity this mode trades for
         fan-out."""
@@ -589,28 +591,23 @@ class FlightSqlServer(fl.FlightServerBase):
                 f"unknown or expired partitioned result {t.result_id!r}; "
                 f"re-issue GetFlightInfo"
             )
-        if not 0 <= t.bucket < entry.n_buckets or t.n_buckets != entry.n_buckets:
+        staged, schema = entry
+        if not 0 <= t.bucket < staged.n_buckets or t.n_buckets != staged.n_buckets:
             raise fl.FlightServerError(
                 f"bucket {t.bucket}/{t.n_buckets} out of range for result "
-                f"{t.result_id!r} ({entry.n_buckets} buckets)"
+                f"{t.result_id!r} ({staged.n_buckets} buckets)"
             )
-        batches = Engine.stream_result_bucket(
-            entry.staged,
-            t.bucket,
-            entry.n_buckets,
-            entry.schema,
-            self.config.batch_rows,
-        )
-        return fl.GeneratorStream(entry.schema, batches)
+        batches = Engine.stream_result_bucket(staged, t.bucket, schema)
+        return fl.GeneratorStream(schema, batches)
 
     def shutdown(self, *args, **kwargs):
         """Release staged multi-endpoint results, then stop serving."""
         with self._staged_lock:
-            staged = list(self._staged.values())
+            results = [staged for staged, _ in self._staged.values()]
             self._staged.clear()
-        for entry in staged:
+        for staged in results:
             try:
-                Engine.release_partitioned_result(entry.staged)
+                staged.release()
             except Exception:  # noqa: BLE001 - shutdown is best-effort
                 pass
         return super().shutdown(*args, **kwargs)
@@ -623,7 +620,7 @@ class FlightSqlServer(fl.FlightServerBase):
         # reference's post-hydration wire shape (module docstring,
         # "Declared divergences").
         schema = arrow_schema_for_df(df)
-        batches = engine.execute_stream(df, batch_rows=self.config.batch_rows)
+        batches = engine.execute_stream(df)
         return fl.GeneratorStream(schema, batches)
 
     def _get_catalogs(self, engine: Engine) -> fl.FlightDataStream:

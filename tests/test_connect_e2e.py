@@ -1,8 +1,8 @@
 """Real Spark Connect end-to-end (VERDICT r8 #3).
 
 The engine's Connect branches (``engine/core.py`` — Arrow
-``toLocalIterator`` streaming without an RDD, one-endpoint degradation of
-multi-endpoint results) are policy-tested via no-RDD fakes; this module
+``toLocalIterator`` streaming without an RDD, no staging of multi-endpoint
+results) are policy-tested via no-RDD fakes; this module
 runs them against an ACTUAL Spark Connect server: a local
 ``spark.api.mode=connect`` session launches the in-process Connect
 service, and every assertion goes through a genuine Connect
@@ -81,29 +81,16 @@ _CONNECT_DRIVER = textwrap.dedent(
     df = eng.execute(
         "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey"
     )
-    batches = list(eng.execute_stream(df, batch_rows=2))
+    batches = list(eng.execute_stream(df))
     rows = sum(b.num_rows for b in batches)
     print("VERDICT stream", "OK" if rows == 5 else f"FAIL rows={{rows}}")
 
-    # 3. multi-endpoint degradation: Connect gets exactly ONE bucket
-    staged, n = eng.prepare_partitioned_result(
+    # 3. multi-endpoint degradation: a Connect result is not staged, so
+    # the server serves the single stateless ticket
+    staged = eng.prepare_partitioned_result(
         eng.execute("SELECT o_orderkey FROM orders"), max_endpoints=4
     )
-    print("VERDICT degrade", "OK" if n == 1 else f"FAIL n={{n}}")
-    total = sum(
-        b.num_rows
-        for b in Engine.stream_result_bucket(
-            staged, 0, n,
-            __import__("pyarrow").schema(
-                [("o_orderkey", __import__("pyarrow").int64())]
-            ),
-            65536,
-        )
-    )
-    expected = eng.execute("SELECT COUNT(*) AS c FROM orders").toArrow()
-    exp = expected.column("c").to_pylist()[0]
-    print("VERDICT bucket", "OK" if total == exp else
-          f"FAIL total={{total}} exp={{exp}}")
+    print("VERDICT degrade", "OK" if staged is None else "FAIL staged")
 
     # 4. a 10-query oracle-slice smoke through the Connect session
     import __spark_entry__ as E
@@ -141,4 +128,4 @@ def test_connect_end_to_end():
     assert verdicts, f"no verdicts; stderr tail: {proc.stderr[-2000:]}"
     failing = [v for v in verdicts if " OK" not in v]
     assert not failing, f"{failing}; stderr tail: {proc.stderr[-2000:]}"
-    assert len(verdicts) == 5
+    assert len(verdicts) == 4

@@ -279,10 +279,15 @@ class TestExecuteStream:
     """Streamed delivery (service.rs:186-191; SURVEY §7 H1)."""
 
     def test_multibatch_bounded_stream(self, spark):
-        engine = Engine(spark)
-        df = spark.range(0, 10_000, 1, 8).select(F.col("id").cast("bigint"))
-        batches = list(engine.execute_stream(df, batch_rows=1000))
-        assert len(batches) == 10  # never one giant batch
+        # batch size is the session's maxRecordsPerBatch: Spark's own cut
+        # passes through, never one giant batch
+        session = spark.newSession()
+        session.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1000")
+        engine = Engine(session)
+        df = session.range(0, 10_000, 1, 8).select(F.col("id").cast("bigint"))
+        batches = list(engine.execute_stream(df))
+        assert len(batches) > 1
+        assert all(b.num_rows <= 1000 for b in batches)
         assert sum(b.num_rows for b in batches) == 10_000
         ids = [v for b in batches for v in b.column("id").to_pylist()]
         assert sorted(ids) == list(range(10_000))
@@ -316,7 +321,7 @@ class TestExecuteStream:
             "id % 2 = 0 AS b",
             "timestamp_micros(id) AS ts",
         )
-        table = pa.Table.from_batches(list(engine.execute_stream(df, batch_rows=4096)))
+        table = pa.Table.from_batches(list(engine.execute_stream(df)))
         assert table.num_rows == 20_000
         assert table.column("arr").to_pylist()[1] == [1, 2]
 
@@ -371,7 +376,7 @@ class TestExecuteStream:
         df = _ConnectLike(
             spark.range(0, 5_000, 1, 4).selectExpr("id", "cast(id as string) AS s")
         )
-        batches = list(engine.execute_stream(df, batch_rows=1024))
+        batches = list(engine.execute_stream(df))
         assert sum(b.num_rows for b in batches) == 5_000
         assert len(local_iters) == 1
         # empty results also resolve through the iterator path
@@ -440,7 +445,7 @@ class TestJvmArrowPath:
             "make_dt_interval(cast(id % 5 as int), 2, 3, 4.5) AS dti",
             "map('k', id, 'j', id * 2) AS m",
         )
-        table = pa.Table.from_batches(list(engine.execute_stream(df, batch_rows=4096)))
+        table = pa.Table.from_batches(list(engine.execute_stream(df)))
         assert table.equals(df.toArrow())
         assert [p for c in pulls for p in c] == [0, 1, 2, 3]
 
@@ -453,7 +458,7 @@ class TestJvmArrowPath:
         df = session.range(0, 16_000, 1, 8).selectExpr(
             "(id * 7919) % 16000 AS k"
         ).orderBy(F.desc("k"))
-        batches = list(engine.execute_stream(df, batch_rows=1000))
+        batches = list(engine.execute_stream(df))
         keys = [v for b in batches for v in b.column("k").to_pylist()]
         assert keys == list(range(15_999, -1, -1))
         # the probe plus at least three grouped pulls, in partition order
@@ -468,11 +473,12 @@ class TestJvmArrowPath:
         core._PULL_POOL = pool
         try:
             df = spark.range(0, 24_000, 1, 24).selectExpr("id", "id * 2 AS v")
-            # 1000-row partitions: the probe alone cannot fill a 2500-row
-            # batch, so the first batch is cut while a pooled group is live
-            gen = engine.execute_stream(df, batch_rows=2500)
-            first = next(gen)
-            assert first.num_rows == 2500
+            # one batch per 1000-row partition: the first batch is the
+            # probe's, the second comes from the first pooled group, which
+            # holds its reservation while it streams
+            gen = engine.execute_stream(df)
+            next(gen)
+            next(gen)
             assert pool._avail < pool.total
             gen.close()
             assert pool._avail == pool.total

@@ -2,12 +2,13 @@
 
 These pin the exact contracts the round-7 serving rewrite changed blind
 (VERDICT r7 items #1/#2): ``sc.runJob``'s per-partition FLATTENING of
-returned iterables, the exact-byte group planner's three branches, the
-adaptive ``_grouped_pull`` growth policy, and the pid↔partition-index
-invariant guard's negative case. The fake-SparkContext tests run without a
-JVM so the policy branches stay cheap to exercise; ``_sized_partitions``
-and the guard run against the real session because runJob semantics are
-the thing under test.
+returned iterables, the exact-byte group planner's three branches and the
+adaptive ``_grouped_pull`` growth policy. Both grouping policies drive the
+same puller over Spark's JVM Arrow batch RDD: the single-endpoint stream
+and the persisted multi-endpoint buckets. The fake-SparkContext tests run
+without a JVM so the policy branches stay cheap to exercise;
+``_sized_partitions`` runs against the real session because runJob
+semantics are the thing under test.
 """
 
 import pytest
@@ -15,7 +16,9 @@ import pytest
 from datafusion_flight_sql_server_spark.engine.core import (
     _PULL_BUDGET,
     Engine,
+    _ArrowBatchPuller,
     _grouped_pull,
+    _jvm_arrow_batches,
     _plan_groups_by_bytes,
     _sized_partitions,
 )
@@ -151,102 +154,58 @@ class TestSizedPartitions:
     def test_one_element_per_partition(self, spark):
         """Pins the r7 regression: runJob is mapPartitions + collect, so it
         FLATTENS each partition's returned iterable. ``_sized_partitions``
-        must therefore return exactly len(parts) elements, each a
-        (sizes, pids) pair — never 2N interleaved lists."""
-        from pyspark.sql import Row
-
+        must therefore return exactly len(parts) integers, one per
+        partition — and each is exactly the bytes the puller then pulls."""
         sc = spark.sparkContext
-        data = [Row(pid=i // 3, ipc=bytes(i + 1)) for i in range(12)]
-        rdd = sc.parallelize(data, 4)
+        df = spark.range(0, 12_000, 1, 4).selectExpr("id", "cast(id AS string) AS s")
+        jrdd, _ = _jvm_arrow_batches(df)
         parts = list(range(4))
-        sizes = _sized_partitions(sc, rdd, parts)
+        sizes = _sized_partitions(sc, jrdd, parts)
         assert len(sizes) == len(parts)
-        for part_sizes, part_pids in sizes:
-            assert isinstance(part_sizes, list)
-            assert isinstance(part_pids, list)
-            assert all(isinstance(s, int) for s in part_sizes)
-        assert sum(s for ps, _ in sizes for s in ps) == sum(
-            len(r.ipc) for r in data
-        )
+        assert all(isinstance(s, int) and s > 0 for s in sizes)
+        puller = _ArrowBatchPuller(sc)
+        assert sizes == [
+            sum(len(b.ipc) for b in puller.runJob(jrdd, list, [p])) for p in parts
+        ]
 
     def test_subset_of_partitions(self, spark):
-        from pyspark.sql import Row
-
         sc = spark.sparkContext
-        rdd = sc.parallelize(
-            [Row(pid=0, ipc=b"abc"), Row(pid=1, ipc=b"de")], 2
-        )
-        sizes = _sized_partitions(sc, rdd, [1])
+        jrdd, _ = _jvm_arrow_batches(spark.range(0, 10, 1, 2))
+        sizes = _sized_partitions(sc, jrdd, [1])
         assert len(sizes) == 1
-
-
-# -- pid invariant guard: negative case --------------------------------------
-
-
-class TestPidInvariantGuard:
-    def test_mistagged_partition_raises(self, spark):
-        """A staged relation whose pid tags disagree with the physical
-        partition index must RAISE (bucket mapping would silently drop or
-        duplicate data), not stream."""
-        import pyarrow as pa
-
-        sc = spark.sparkContext
-        # Two physical partitions, both tagged pid=0: partition 1's tag is
-        # wrong by construction.
-        rdd = sc.parallelize([(0, b"x"), (0, b"y")], 2)
-        staged = spark.createDataFrame(rdd, "pid int, ipc binary")
-        schema = pa.schema([("a", pa.int64())])
-        gen = Engine.stream_result_bucket(
-            staged, bucket=0, n_buckets=1, schema=schema, batch_rows=1024
-        )
-        with pytest.raises(RuntimeError, match="pid"):
-            list(gen)
 
 
 # -- Connect degradation ------------------------------------------------------
 
 
 class TestConnectDegradation:
-    def test_no_rdd_access_degrades_to_one_bucket(self, spark):
-        """A session without RDD access (Spark Connect) must get exactly
-        ONE bucket — reference parity — because the bucket fallback would
-        otherwise pid-filter-rescan the staged relation once per bucket."""
-        from datafusion_flight_sql_server_spark.engine.core import Engine
+    def test_no_jvm_handle_is_not_staged(self, spark):
+        """A DataFrame without a JVM handle (Spark Connect) is not staged:
+        the server mints the reference's single stateless ticket instead,
+        because a bucket cannot read "its own partitions" without the RDD
+        API."""
 
         class _ConnectLikeDF:
-            """Delegates plan building but denies sparkContext, like a
+            """Delegates plan building but refuses ``_jdf``, like a
             Connect-session DataFrame."""
 
             def __init__(self, df):
                 self._df = df
 
-            def mapInArrow(self, *a, **k):
-                return self._df.mapInArrow(*a, **k)
-
-            @property
-            def sparkSession(self):
-                class _S:
-                    @property
-                    def sparkContext(self):
-                        raise RuntimeError("Connect: no sparkContext")
-
-                return _S()
+            def __getattr__(self, name):
+                if name == "_jdf":
+                    raise AttributeError("JVM_ATTRIBUTE_NOT_SUPPORTED: _jdf")
+                return getattr(self._df, name)
 
         eng = Engine(spark)
         df = spark.range(100).selectExpr("id", "id * 2 AS v")
-        staged, n = eng.prepare_partitioned_result(
-            _ConnectLikeDF(df), max_endpoints=4
-        )
-        try:
-            assert n == 1
-        finally:
-            staged.unpersist()
+        assert eng.prepare_partitioned_result(_ConnectLikeDF(df), 4) is None
         # classic sessions keep the configured bucket count
-        staged2, n2 = eng.prepare_partitioned_result(df, max_endpoints=4)
+        staged = eng.prepare_partitioned_result(df, max_endpoints=4)
         try:
-            assert n2 == 4
+            assert staged.n_buckets == 4
         finally:
-            staged2.unpersist()
+            staged.release()
 
 
 # -- _PullBudgetPool (round 9: aggregate budget across concurrent pulls) ------
