@@ -180,12 +180,13 @@ class Engine:
         once and streams result batches over gRPC, with client-side
         prefetch bounding driver memory.
         The row-at-a-time fallback is reserved for plans whose types cannot
-        pass Spark's Arrow conversion at all. Each path probes through empty
-        partitions to the FIRST NON-EMPTY pull inside its try scope: a
-        runtime Arrow-conversion failure only surfaces when a batch is
-        actually converted, and falling back is only safe before any batch
-        has been yielded — a failure after the first successful pull
-        propagates instead.
+        pass Spark's Arrow conversion at all. On a classic session that is
+        decided by the JVM's schema conversion alone, before any job runs,
+        so a runtime query error (``DIVIDE_BY_ZERO`` under ANSI) surfaces
+        as itself instead of re-running the query on the row path. Connect
+        has no job-free schema step: it probes through empty partitions to
+        the FIRST NON-EMPTY pull inside its try scope, since a conversion
+        failure only surfaces when a batch is actually converted.
         """
         from datafusion_flight_sql_server_spark.plans.schema import (
             arrow_schema_for_df,
@@ -196,29 +197,30 @@ class Engine:
             yield from self._execute_stream_connect(df, schema)
             return
 
-        # Probe to the first non-empty pull inside the try: empty partitions
-        # convert nothing, so only a pull that returns batches proves the
-        # Arrow path works. Probe groups stay small (<=8) — they are sized
-        # blind, before any byte observation exists. The probe does NOT
-        # draw from _PULL_POOL: with no observation there is nothing to
-        # account, and an 8-partition probe is the same exposure class as
-        # toLocalIterator's single-partition pull; every sized pull after
-        # it reserves from the shared pool.
-        probe: list = []
-        probed = 0
         try:
-            jrdd, jvm_schema = _jvm_arrow_batches(df)
-            n_parts = jrdd.getNumPartitions()
-            puller = _ArrowBatchPuller(df.sparkSession.sparkContext)
-            group = 1
-            while probed < n_parts and not probe:
-                parts = list(range(probed, min(probed + group, n_parts)))
-                probe.extend(puller.runJob(jrdd, list, parts))
-                probed += len(parts)
-                group = min(group * 2, 8)
+            jvm_schema = _jvm_arrow_schema(df)
         except Exception:
             yield from self._execute_stream_rows(df, schema)
             return
+
+        # Probe to the first non-empty pull: empty partitions yield no
+        # batches. Probe groups stay small (<=8) — they are sized blind,
+        # before any byte observation exists. The probe does NOT draw from
+        # _PULL_POOL: with no observation there is nothing to account, and
+        # an 8-partition probe is the same exposure class as
+        # toLocalIterator's single-partition pull; every sized pull after
+        # it reserves from the shared pool.
+        jrdd = df._jdf.toArrowBatchRdd().toJavaRDD()
+        n_parts = jrdd.getNumPartitions()
+        puller = _ArrowBatchPuller(df.sparkSession.sparkContext)
+        probe: list = []
+        probed = 0
+        group = 1
+        while probed < n_parts and not probe:
+            parts = list(range(probed, min(probed + group, n_parts)))
+            probe.extend(puller.runJob(jrdd, list, parts))
+            probed += len(parts)
+            group = min(group * 2, 8)
 
         def _blobs():
             yield from probe
@@ -249,82 +251,6 @@ class Engine:
         rows = iter(()) if head is None else _chain_row(head, it)
         batches = (b for row in rows for b in pa.ipc.open_stream(row.ipc))
         yield from _as_declared(batches, schema)
-
-    # -- multi-endpoint partitioned results ---------------------------------
-
-    def prepare_partitioned_result(
-        self, df: DataFrame, max_endpoints: int
-    ) -> "_StagedResult | None":
-        """Plan ``df`` for bucket-parallel DoGet: a ``_StagedResult`` with
-        ``max_endpoints`` buckets, or None when ``df`` has no JVM handle
-        (Spark Connect), where the caller serves the reference's single
-        stateless ticket instead.
-
-        OUR extension beyond the reference (its FlightInfo always carries one
-        endpoint; its own *client* already merges several —
-        table-provider/src/lib.rs:43-53). The staged result is ``df``'s
-        JVM Arrow batch RDD — the same batches ``execute_stream`` pulls —
-        persisted MEMORY_AND_DISK once, at the first bucket DoGet. Bucket
-        ``b`` of ``n`` serves partitions ``p % n == b`` of that one RDD, so
-        the union over buckets is exactly the result and buckets are
-        disjoint.
-
-        Laziness contract: NO job runs here — GetFlightInfo stays a
-        plan-only call (clients use it as a schema probe). Building the
-        batch RDD finalizes the AQE plan, which executes shuffle stages
-        (``toArrowBatchRdd`` ran 2 jobs on a join+aggregate), so it waits
-        for the first bucket DoGet; for the same reason the bucket count
-        is taken from config rather than the plan's partition count. A
-        result with fewer partitions than buckets just serves some empty
-        streams — one cheap RPC each. At 1000-executor scale this is the
-        lever that stops one driver-side stream from being the
-        result-transfer bottleneck: each bucket streams through its own
-        gRPC call, and driver memory for ALL concurrent streams together
-        is bounded by the shared ``_PULL_POOL`` byte-accounting pool
-        (per-stream: one byte-budgeted group of cached partitions at a
-        time).
-
-        LOOPBACK caveat: if the *same* Spark application both serves the
-        result and scans it back (the in-process federation pattern), keep
-        ``max_endpoints`` strictly below the app's task slots — the scan's
-        tasks block on DoGet while the server needs free slots to compute
-        the staged partitions, so claiming every slot deadlocks the app.
-        Serving a separate application (the real deployment) has no such
-        coupling.
-        """
-        if getattr(df, "_jdf", None) is None:
-            return None
-        return _StagedResult(df, max(1, int(max_endpoints)))
-
-    @staticmethod
-    def stream_result_bucket(staged: "_StagedResult", bucket: int, schema):
-        """Yield the Arrow batches of one bucket of a staged result, cast
-        to the declared ``schema`` only where the types differ.
-
-        Bucket ``b`` IS partition set ``{p : p % n == b}`` of the persisted
-        batch RDD, so the bucket reads exactly its own cached partitions
-        via grouped ``PythonRDD.runJob`` pulls — no per-bucket full scan,
-        and no one-job-per-partition ``toLocalIterator`` latency (the
-        round-6 serving profile measured ~100 ms of scheduling per
-        partition job). Because the RDD is PERSISTED, a sizes pre-pass is
-        cheap: one job computes (and caches) the bucket's partitions in
-        parallel on the executors and returns only their byte counts.
-        Groups are then planned from TRUE sizes — a HARD driver-memory
-        bound per pull (<= budget, or one partition if a single partition
-        exceeds it), closing the size-cliff exposure an observation-based
-        grower cannot (with ``result_endpoints`` buckets streaming
-        concurrently the exposure multiplies, so the hard bound matters
-        most here)."""
-        jrdd, jvm_schema, sc = staged.batches()
-        n = staged.n_buckets
-        mine = [p for p in range(jrdd.getNumPartitions()) if p % n == bucket]
-        part_bytes = _sized_partitions(sc, jrdd, mine)
-        groups = _plan_groups_by_bytes(mine, part_bytes, budget=_PULL_BUDGET)
-        sizes = dict(zip(mine, part_bytes))
-        group_bytes = [sum(sizes[p] for p in g) for g in groups]
-        puller = _ArrowBatchPuller(sc)
-        blobs = _pull_planned_groups(puller, jrdd, groups, group_bytes)
-        yield from _decode_jvm_batches(blobs, jvm_schema, schema)
 
     def _execute_stream_rows(self, df: DataFrame, schema):
         """Row-at-a-time fallback for plans whose types can't cross Spark's
@@ -699,15 +625,13 @@ def _chain_row(head, rest):
     yield from rest
 
 
-# Driver-memory budget per result-pull GROUP, shared by BOTH serving
-# paths (the uncached adaptive _grouped_pull and the persisted bucket
-# stream's exact-size group planner) so the two cannot silently drift.
+# Driver-memory budget per result-pull GROUP of ``_grouped_pull``.
 _PULL_BUDGET = 128 << 20
 
 # Aggregate budget across ALL concurrent pulls (VERDICT r8 "what's wrong"
-# #1): the per-group constant alone lets N concurrent DoGets — exactly
-# what the multi-endpoint design encourages — pin N x 128 MB on the
-# driver. Every group reservation draws from this shared pool, so total
+# #1): the per-group constant alone lets N concurrent DoGets pin
+# N x 128 MB on the driver. Every group reservation draws from this
+# shared pool, so total
 # in-flight pull bytes stay <= _PULL_POOL_TOTAL no matter how many
 # streams run. 4x the group budget: four full-size groups can move
 # concurrently; more streams interleave their groups instead of stacking.
@@ -783,9 +707,7 @@ def _grouped_pull(
     sc, rdd, parts: list, max_part: int, group: int = 4, observed: int = 1
 ):
     """Pull ``parts`` of ``rdd`` in adaptively-growing ``sc.runJob`` groups
-    (the UNCACHED ``execute_stream`` path, where ``sc`` is the
-    ``_ArrowBatchPuller``; the persisted bucket streams plan groups from
-    exact sizes via ``_sized_partitions`` instead).
+    (``execute_stream``, where ``sc`` is the ``_ArrowBatchPuller``).
 
     Every group is capped so group x 2 x largest-partition-OBSERVED fits
     the 128 MB budget: expected group bytes stay under half the budget.
@@ -830,54 +752,6 @@ def _grouped_pull(
             group = min(group * 4, 64)
 
 
-def _sized_partitions(sc, jrdd, parts: list) -> list:
-    """Serialized bytes of each of ``parts`` of the JVM batch RDD, in one
-    job that computes (and, once persisted, caches) the partitions in
-    parallel; only one integer per partition returns to the driver. The
-    raw-bytes view (``NoOpSerializer``) hands a Python worker each batch's
-    bytes as is, so the sizes are exactly what ``_ArrowBatchPuller`` pulls.
-    runJob is mapPartitions + collect: it FLATTENS each partition's returned
-    iterable, so each partition returns a one-element list, keeping the
-    result aligned 1:1 with ``parts``."""
-    from pyspark.rdd import RDD
-    from pyspark.serializers import NoOpSerializer
-
-    raw = RDD(jrdd, sc, NoOpSerializer())
-    return sc.runJob(raw, lambda it: [sum(map(len, it))], parts)
-
-
-def _plan_groups_by_bytes(parts: list, part_bytes: list, budget: int) -> list:
-    """Greedy contiguous grouping under an exact byte budget: each group's
-    TRUE bytes stay <= budget (a single over-budget partition forms its own
-    group — it must land on the driver whole regardless), and group length
-    is capped at 64 tasks per job."""
-    groups: list[list] = []
-    cur: list = []
-    cur_bytes = 0
-    for p, b in zip(parts, part_bytes):
-        if cur and (cur_bytes + b > budget or len(cur) >= 64):
-            groups.append(cur)
-            cur, cur_bytes = [], 0
-        cur.append(p)
-        cur_bytes += b
-    if cur:
-        groups.append(cur)
-    return groups
-
-
-def _pull_planned_groups(sc, rdd, groups: list, group_bytes: list = ()):
-    """Pull pre-planned groups, reserving each group's TRUE bytes from the
-    shared aggregate pool (``group_bytes`` parallel to ``groups``; absent
-    entries reserve the full per-group budget conservatively)."""
-    for i, chunk in enumerate(groups):
-        est = group_bytes[i] if i < len(group_bytes) else _PULL_BUDGET
-        take = _PULL_POOL.acquire(est)
-        try:
-            yield from sc.runJob(rdd, list, chunk)
-        finally:
-            _PULL_POOL.release(take)
-
-
 def _make_ipc_encoder():
     """Executor-side Arrow-IPC encoder for ``mapInArrow``.
 
@@ -905,12 +779,12 @@ def _make_ipc_encoder():
     return _ipc_encode_batches
 
 
-def _jvm_arrow_batches(df):
-    """Spark's JVM-side Arrow encoding of a classic DataFrame: the JavaRDD
-    of its serialized record batches (``Dataset.toArrowBatchRdd``) and the
-    Arrow schema the JVM encodes them with, read from the JVM's own
+def _jvm_arrow_schema(df):
+    """The Arrow schema Spark's JVM encodes a classic DataFrame's batches
+    (``Dataset.toArrowBatchRdd``) with, read from the JVM's own
     ``ArrowUtils.toArrowSchema`` message rather than re-derived in Python.
-    Raises when the plan's types cannot cross Spark's Arrow conversion."""
+    Runs no job; raises when the plan's types cannot cross Spark's Arrow
+    conversion."""
     import pyarrow as pa
 
     jdf = df._jdf
@@ -921,8 +795,7 @@ def _jvm_arrow_batches(df):
         True,  # errorOnDuplicatedFieldNames: Arrow structs need unique names
         conf.arrowUseLargeVarTypes(),
     )
-    schema = pa.ipc.read_schema(pa.py_buffer(jschema.serializeAsMessage()))
-    return jdf.toArrowBatchRdd().toJavaRDD(), schema
+    return pa.ipc.read_schema(pa.py_buffer(jschema.serializeAsMessage()))
 
 
 class _Blob(NamedTuple):
@@ -938,9 +811,8 @@ class _ArrowBatchPuller:
     and serves them over a local socket as length-framed bytes, so nothing
     runs in a Python worker and nothing is pickled. ``runJob`` takes the
     arguments of the ``SparkContext.runJob(rdd, list, parts)`` calls that
-    ``_grouped_pull`` and ``_pull_planned_groups`` make, so both grouping
-    policies drive it unchanged; ``func`` runs on the driver over the
-    pulled ``_Blob``s."""
+    ``_grouped_pull`` makes, so the grouping policy drives it unchanged;
+    ``func`` runs on the driver over the pulled ``_Blob``s."""
 
     def __init__(self, sc) -> None:
         self._sc = sc
@@ -979,42 +851,3 @@ def _as_declared(batches, schema):
             batch = batch.cast(target)
         if batch.num_rows:
             yield batch
-
-
-class _StagedResult:
-    """A multi-endpoint result: the JVM Arrow batch RDD of ``df``, built
-    and persisted MEMORY_AND_DISK once, by whichever bucket DoGet comes
-    first, and shared by all ``n_buckets`` buckets until ``release``."""
-
-    def __init__(self, df: DataFrame, n_buckets: int) -> None:
-        self.n_buckets = n_buckets
-        self._df = df
-        self._lock = threading.Lock()
-        self._built: tuple | None = None  # (jrdd, jvm_schema, sc)
-        self._released = False
-
-    def batches(self) -> tuple:
-        """``(jrdd, jvm_schema, sc)``, building and persisting on first use.
-        A released result is expired rather than rebuilt, so a DoGet that
-        races the eviction cannot leave a persisted RDD behind."""
-        with self._lock:
-            if self._released:
-                raise RuntimeError(
-                    "partitioned result expired; re-issue GetFlightInfo"
-                )
-            if self._built is None:
-                from pyspark import StorageLevel
-
-                jrdd, jvm_schema = _jvm_arrow_batches(self._df)
-                sc = self._df.sparkSession.sparkContext
-                jrdd.persist(sc._getJavaStorageLevel(StorageLevel.MEMORY_AND_DISK))
-                self._built = (jrdd, jvm_schema, sc)
-            return self._built
-
-    def release(self) -> None:
-        """Unpersist the batch RDD if it was built; later DoGets expire."""
-        with self._lock:
-            self._released = True
-            built, self._built = self._built, None
-        if built is not None:
-            built[0].unpersist()

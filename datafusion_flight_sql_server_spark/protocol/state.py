@@ -11,14 +11,6 @@ server replica can serve the DoGet — the reference's core design
 - ``QueryHandle`` is ``{string query = 1; optional bytes parameters = 2}``
   (state.rs:113-120); ``parameters`` holds the client's Arrow IPC parameter
   stream verbatim.
-- ``PartitionedResultTicket`` is OUR extension (no reference counterpart):
-  when the server is configured for multi-endpoint results, each
-  FlightEndpoint's ticket names one bucket of a server-held partitioned
-  result. Unlike the two messages above it is deliberately NOT stateless —
-  partition-parallel serving requires result affinity to the server that
-  planned it, the standard trade for scaling DoGet fan-out. Tickets are
-  opaque to clients per the Flight spec, so the magic-prefix framing is
-  wire-safe.
 """
 
 from __future__ import annotations
@@ -39,16 +31,6 @@ _TICKET_FIELDS = (Field(2, "command", "bytes"),)
 _HANDLE_FIELDS = (
     Field(1, "query", "string"),
     Field(2, "parameters", "bytes"),
-)
-
-#: Framing prefix for partitioned-result tickets. 0xFF can never begin a
-#: valid protobuf message (tag 31, wire type 7 — reserved), so the prefix
-#: cannot collide with CommandTicket/Any bytes.
-_PART_TICKET_MAGIC = b"\xffSPFS-PART\x00"
-_PART_FIELDS = (
-    Field(1, "result_id", "string"),
-    Field(2, "bucket", "varint"),
-    Field(3, "n_buckets", "varint"),
 )
 
 
@@ -99,43 +81,3 @@ class QueryHandle:
     def __str__(self) -> str:  # Display parity (state.rs:107-111)
         return f"Query({self.query})"
 
-
-@dataclass
-class PartitionedResultTicket:
-    """One bucket of a server-held partitioned result (multi-endpoint DoGet).
-
-    ``bucket`` ∈ [0, n_buckets); the server streams the shuffle partitions
-    whose id maps to that bucket. See ``server.service.FlightSqlServer``
-    for the lifecycle (created at GetFlightInfo, released once every bucket
-    has been fully streamed)."""
-
-    result_id: str
-    bucket: int
-    n_buckets: int
-
-    def encode(self) -> bytes:
-        return _PART_TICKET_MAGIC + encode_message(
-            _PART_FIELDS,
-            {
-                "result_id": self.result_id,
-                "bucket": self.bucket,
-                "n_buckets": self.n_buckets,
-            },
-        )
-
-    @staticmethod
-    def matches(data: bytes) -> bool:
-        return data.startswith(_PART_TICKET_MAGIC)
-
-    @classmethod
-    def try_decode(cls, data: bytes) -> "PartitionedResultTicket":
-        if not cls.matches(data):
-            raise ValueError("not a partitioned-result ticket")
-        msg = decode_message(_PART_FIELDS, data[len(_PART_TICKET_MAGIC) :])
-        if not msg["result_id"] or msg["n_buckets"] is None:
-            raise ValueError("partitioned-result ticket missing fields")
-        return cls(
-            result_id=msg["result_id"],
-            bucket=int(msg["bucket"] or 0),
-            n_buckets=int(msg["n_buckets"]),
-        )

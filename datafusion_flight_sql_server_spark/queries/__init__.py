@@ -34,8 +34,8 @@ from datafusion_flight_sql_server_spark.queries import analytics_q  # noqa: F401
 #: registered query driver-verified at least once.
 #: Tier 0 = PERMANENTLY PINNED infrastructure-coupled queries —
 #: ``scan_flight`` transits the live Flight serving path
-#: (execute_stream / multi-endpoint buckets), so a serving-engine change
-#: can break it with no change to its own source; the round-7 rotation
+#: (execute_stream), so a serving-engine change can break it with no
+#: change to its own source; the round-7 rotation
 #: proved rotating it out masks exactly that (the r7 serving regression
 #: shipped under a 50/50-green CORRECTNESS file). It stays in the prefix
 #: every round.

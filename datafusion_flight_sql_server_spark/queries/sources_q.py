@@ -664,20 +664,9 @@ def _flight_server(spark: SparkSession):
     with _FLIGHT_LOCK:
         entry = _FLIGHT_SINGLETON.get(app_id)
         if entry is None:
-            from datafusion_flight_sql_server_spark.server.service import (
-                FlightSqlServiceConfig,
-            )
-
-            # Two endpoints per result: the scan consumes them as two Spark
-            # partitions (parallel DoGet). Kept at 2 — strictly below any
-            # plausible local[N] slot count — because this is the LOOPBACK
-            # topology where the same app serves and scans
-            # (Engine.prepare_partitioned_result docstring).
-            srv = FlightSqlServer(
-                Engine(spark),
-                location="grpc://0.0.0.0:0",
-                config=FlightSqlServiceConfig(result_endpoints=2),
-            )
+            # Default config, as deployed: one stateless endpoint per
+            # result, which the scan reads as one Spark partition.
+            srv = FlightSqlServer(Engine(spark), location="grpc://0.0.0.0:0")
             threading.Thread(target=srv.serve, daemon=True).start()
             # The socket binds in __init__ (so srv.port is valid here) but
             # gRPC only accepts requests once serve() is running on the
@@ -711,9 +700,9 @@ def _flight_server(spark: SparkSession):
     "server → executor-side Arrow IPC — and the "
     "result must hash-match DuckDB reading the parquet directly. The "
     "WHERE clause rides the DataSource filter pushdown into the remote "
-    "SQL. One daemon server per application, started lazily; it serves "
-    "TWO FlightEndpoints per result (round-4 multi-endpoint DoGet), which "
-    "the scan consumes as two parallel Spark partitions.",
+    "SQL. One daemon server per application, started lazily with the "
+    "default config; like the reference it answers with one stateless "
+    "FlightEndpoint, which the scan reads as one Spark partition.",
     tags=("source", "protocol"),
 )
 def q_scan_flight(spark: SparkSession, sf: str) -> DataFrame:

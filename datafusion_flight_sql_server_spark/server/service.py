@@ -25,13 +25,16 @@ Results stream batch-at-a-time via ``Engine.execute_stream`` — the driver
 never holds a whole result (service.rs:186-191 behavior; SURVEY §7 H1). On
 classic sessions the batches are Spark's own JVM-side Arrow encoding, pulled
 to the driver in partition groups as serialized record batches and decoded
-there: no Python worker and no pickling sit on the result path. The
-multi-endpoint buckets stream the same batches from a persisted copy. Batches
+there: no Python worker and no pickling sit on the result path. Batches
 pass through as Spark cut them, so their size is the session's
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` — the analogue of
 DataFusion's session ``batch_size``, which is where the reference takes its
 batch size from. Catalog listings (GetCatalogs/DbSchemas/Tables/TableTypes)
 are built on the driver from the engine's listing rows and run no Spark job.
+
+Like the reference, every statement's FlightInfo carries ONE endpoint
+whose ticket holds the whole command, so the server keeps no per-result
+state and any replica can serve the DoGet (state.rs:55-58).
 
 Declared divergences (client-compat debugging starts here):
 
@@ -56,10 +59,6 @@ Declared divergences (client-compat debugging starts here):
 """
 
 from __future__ import annotations
-
-import threading
-import uuid
-from collections import OrderedDict
 
 import pyarrow as pa
 import pyarrow.flight as fl
@@ -90,7 +89,6 @@ from datafusion_flight_sql_server_spark.protocol.flightsql import (
 )
 from datafusion_flight_sql_server_spark.protocol.state import (
     CommandTicket,
-    PartitionedResultTicket,
     QueryHandle,
 )
 from datafusion_flight_sql_server_spark.server.session import (
@@ -102,15 +100,6 @@ from datafusion_flight_sql_server_spark.server.session import (
 class FlightSqlServiceConfig:
     """Service configuration (reference: config.rs:1-14).
 
-    ``result_endpoints`` (OUR extension; default 1 = reference behavior):
-    when > 1, GetFlightInfo for a statement returns up to that many
-    FlightEndpoints, each ticket naming one bucket of a server-staged
-    partitioned result, so clients stream big results over parallel DoGet
-    calls instead of one driver-side iterator. The reference's client
-    already merges multi-endpoint FlightInfos
-    (table-provider/src/lib.rs:43-53), as do ours and ADBC's. Spark
-    Connect sessions always get the single ticket.
-
     Result batch size is not a service setting: batches pass through as
     Spark cuts them, so embedders size them with the session conf
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` (DataFusion's session
@@ -119,16 +108,12 @@ class FlightSqlServiceConfig:
     def __init__(
         self,
         schema_with_metadata: bool = False,
-        result_endpoints: int = 1,
-        max_staged_results: int = 16,
         substrait_local_files_roots: tuple[str, ...] = (),
         strict_parameter_types: bool = False,
         substrait_extension_tables: dict | None = None,
         sql_dialect: str = "auto",
     ):
         self.schema_with_metadata = schema_with_metadata
-        self.result_endpoints = result_endpoints
-        self.max_staged_results = max_staged_results
         # H3 strict mode: error on untypeable placeholders at
         # create_prepared_statement time (like DataFusion's
         # parameter_schema_for_plan surfacing a planning error,
@@ -300,12 +285,6 @@ class FlightSqlServer(fl.FlightServerBase):
             provider = StaticSessionStateProvider(engine)
         self._provider = provider
         self.config = config or FlightSqlServiceConfig()
-        # Staged multi-endpoint results: result_id -> (engine-side staged
-        # result, declared schema). Guarded by a lock (gRPC serves handlers
-        # on a thread pool); LRU-capped, and released on eviction and at
-        # shutdown.
-        self._staged: "OrderedDict[str, tuple]" = OrderedDict()
-        self._staged_lock = threading.Lock()
 
     # -- context mint (service.rs:133-151) ----------------------------------
 
@@ -425,45 +404,11 @@ class FlightSqlServer(fl.FlightServerBase):
     def _info_statement(
         self, engine: Engine, command: CommandStatementQuery, descriptor
     ) -> fl.FlightInfo:
-        """service.rs:313-347: plan, derive schema, mint stateless ticket.
-
-        With ``config.result_endpoints > 1`` the single stateless ticket is
-        replaced by one endpoint per result bucket (see
-        ``Engine.prepare_partitioned_result``) unless the session cannot
-        stage (Spark Connect); still no job runs here."""
+        """service.rs:313-347: plan, derive schema, mint stateless ticket."""
         df = engine.sql_to_plan(command.query)
         schema = arrow_schema_for_df(df, self.config.schema_with_metadata)
-        if self.config.result_endpoints > 1:
-            staged = engine.prepare_partitioned_result(
-                df, self.config.result_endpoints
-            )
-            if staged is not None:
-                return self._info_partitioned(staged, schema, descriptor)
         ticket = CommandTicket(command=command).try_encode()
         return self._flight_info(schema, descriptor, ticket)
-
-    def _info_partitioned(self, staged, schema: pa.Schema, descriptor) -> fl.FlightInfo:
-        result_id = uuid.uuid4().hex
-        evicted = []
-        with self._staged_lock:
-            self._staged[result_id] = (staged, schema)
-            while len(self._staged) > self.config.max_staged_results:
-                _, (old, _) = self._staged.popitem(last=False)
-                evicted.append(old)
-        # outside the map lock: a release waits for a build in progress
-        for old in evicted:
-            old.release()
-        n_buckets = staged.n_buckets
-        endpoints = [
-            fl.FlightEndpoint(
-                fl.Ticket(
-                    PartitionedResultTicket(result_id, b, n_buckets).encode()
-                ),
-                [],
-            )
-            for b in range(n_buckets)
-        ]
-        return fl.FlightInfo(schema, descriptor, endpoints, -1, -1)
 
     def _info_prepared(
         self, engine: Engine, command: CommandPreparedStatementQuery, descriptor
@@ -518,10 +463,7 @@ class FlightSqlServer(fl.FlightServerBase):
 
     def do_get(self, context, ticket) -> fl.FlightDataStream:
         try:
-            raw = bytes(ticket.ticket)
-            if PartitionedResultTicket.matches(raw):
-                return self._do_get_partitioned(PartitionedResultTicket.try_decode(raw))
-            command = self._decode_ticket(raw)
+            command = self._decode_ticket(bytes(ticket.ticket))
             engine = self._ctx(context)
             if isinstance(command, CommandStatementQuery):
                 # service.rs:220-236: re-plan and stream. NO dialect
@@ -567,50 +509,6 @@ class FlightSqlServer(fl.FlightServerBase):
         except Exception:
             pass
         return CommandTicket.try_decode(raw).command
-
-    def _do_get_partitioned(
-        self, t: PartitionedResultTicket
-    ) -> fl.FlightDataStream:
-        """Stream one bucket of a staged multi-endpoint result.
-
-        Tickets stay REPLAYABLE while the result is staged (clients re-read
-        endpoints legitimately — Spark replays a scan's partition tickets
-        once per action, retries and speculative tasks replay them too, and
-        the reference's stateless tickets allow infinite replay). Results
-        are only dropped by the ``max_staged_results`` LRU, whose eviction
-        unpersists the staged batches; a ticket outliving that gets a clean
-        'expired' error telling the client to re-issue GetFlightInfo — the
-        documented cost of the result affinity this mode trades for
-        fan-out."""
-        with self._staged_lock:
-            entry = self._staged.get(t.result_id)
-            if entry is not None:
-                self._staged.move_to_end(t.result_id)
-        if entry is None:
-            raise fl.FlightServerError(
-                f"unknown or expired partitioned result {t.result_id!r}; "
-                f"re-issue GetFlightInfo"
-            )
-        staged, schema = entry
-        if not 0 <= t.bucket < staged.n_buckets or t.n_buckets != staged.n_buckets:
-            raise fl.FlightServerError(
-                f"bucket {t.bucket}/{t.n_buckets} out of range for result "
-                f"{t.result_id!r} ({staged.n_buckets} buckets)"
-            )
-        batches = Engine.stream_result_bucket(staged, t.bucket, schema)
-        return fl.GeneratorStream(schema, batches)
-
-    def shutdown(self, *args, **kwargs):
-        """Release staged multi-endpoint results, then stop serving."""
-        with self._staged_lock:
-            results = [staged for staged, _ in self._staged.values()]
-            self._staged.clear()
-        for staged in results:
-            try:
-                staged.release()
-            except Exception:  # noqa: BLE001 - shutdown is best-effort
-                pass
-        return super().shutdown(*args, **kwargs)
 
     def _stream_df(self, engine: Engine, df) -> fl.FlightDataStream:
         # No dictionary-hydration pass here, deliberately: the reference

@@ -1,9 +1,8 @@
 """Real Spark Connect end-to-end (VERDICT r8 #3).
 
-The engine's Connect branches (``engine/core.py`` — Arrow
-``toLocalIterator`` streaming without an RDD, no staging of multi-endpoint
-results) are policy-tested via no-RDD fakes; this module
-runs them against an ACTUAL Spark Connect server: a local
+The engine's Connect branch (``engine/core.py`` — Arrow
+``toLocalIterator`` streaming without an RDD) is policy-tested via no-RDD
+fakes; this module runs it against an ACTUAL Spark Connect server: a local
 ``spark.api.mode=connect`` session launches the in-process Connect
 service, and every assertion goes through a genuine Connect
 ``SparkSession`` (gRPC transport, no RDD API, plans executed server-side).
@@ -85,14 +84,7 @@ _CONNECT_DRIVER = textwrap.dedent(
     rows = sum(b.num_rows for b in batches)
     print("VERDICT stream", "OK" if rows == 5 else f"FAIL rows={{rows}}")
 
-    # 3. multi-endpoint degradation: a Connect result is not staged, so
-    # the server serves the single stateless ticket
-    staged = eng.prepare_partitioned_result(
-        eng.execute("SELECT o_orderkey FROM orders"), max_endpoints=4
-    )
-    print("VERDICT degrade", "OK" if staged is None else "FAIL staged")
-
-    # 4. a 10-query oracle-slice smoke through the Connect session
+    # 3. a 10-query oracle-slice smoke through the Connect session
     import __spark_entry__ as E
     qs = E.queries()
     slice_names = [
@@ -128,4 +120,4 @@ def test_connect_end_to_end():
     assert verdicts, f"no verdicts; stderr tail: {proc.stderr[-2000:]}"
     failing = [v for v in verdicts if " OK" not in v]
     assert not failing, f"{failing}; stderr tail: {proc.stderr[-2000:]}"
-    assert len(verdicts) == 4
+    assert len(verdicts) == 3

@@ -571,6 +571,15 @@ class TestMalformedInputs:
             ).read_all()
         assert client.execute("SELECT 1 AS x").num_rows == 1
 
+    def test_foreign_prefixed_ticket_rejected_cleanly(self, client):
+        # 0xFF cannot begin a protobuf message (tag 31, wire type 7), so a
+        # ticket framed that way decodes as neither command form
+        with pytest.raises(fl.FlightError):
+            client._client.do_get(
+                fl.Ticket(b"\xffSPFS-PART\x00\x0c\xde\xad"), client._options
+            ).read_all()
+        assert client.execute("SELECT 1 AS x").num_rows == 1
+
     def test_empty_ticket_rejected_cleanly(self, client):
         with pytest.raises(fl.FlightError):
             client._client.do_get(fl.Ticket(b""), client._options).read_all()
@@ -606,174 +615,184 @@ class TestMalformedInputs:
         assert client.execute("SELECT 1 AS x").num_rows == 1
 
 
-class TestMultiEndpoint:
-    """Opt-in multi-endpoint DoGet (round-3 review item #6): with
-    ``result_endpoints > 1`` the server stages the result partition-tagged
-    and returns one FlightEndpoint per bucket, so big results stream over
-    parallel DoGet calls instead of one driver-side iterator. The default
-    stays single-endpoint (reference parity); the reference's own client
-    merges multi-endpoint FlightInfos (table-provider/src/lib.rs:43-53),
-    as do ours and the flightsql DataSource."""
+class TestSingleEndpointServing:
+    """Every statement's FlightInfo carries one stateless endpoint, like the
+    reference's (service.rs:313-347): GetFlightInfo runs no job, the ticket
+    replays, and concurrent DoGets share the driver's pull pool."""
 
-    SQL = "SELECT id, grp FROM wide_result"
+    SQL = "SELECT id FROM wide_result"
     N = 200_000
 
     @pytest.fixture(scope="class")
-    def multi_server(self, spark):
+    def wide_view(self, spark):
         _register_fixtures(spark)
         spark.range(0, self.N).selectExpr(
             "id", "CAST(id % 97 AS INT) AS grp"
         ).repartition(8, "grp").createOrReplaceTempView("wide_result")
-        srv = FlightSqlServer(
-            Engine(spark),
-            location="grpc://0.0.0.0:0",
-            config=FlightSqlServiceConfig(result_endpoints=4),
-        )
-        threading.Thread(target=srv.serve, daemon=True).start()
-        yield srv
-        srv.shutdown()
 
-    @pytest.fixture(scope="class")
-    def multi_client(self, multi_server):
-        ex = FlightSQLExecutor(f"grpc://localhost:{multi_server.port}")
-        yield ex
-        ex.close()
-
-    def test_flight_info_returns_configured_endpoints(self, multi_client):
+    def test_flight_info_starts_no_spark_job(self, spark, server, wide_view):
         from datafusion_flight_sql_server_spark.protocol.flightsql import (
             CommandStatementQuery,
         )
 
-        info = multi_client.flight_info(CommandStatementQuery(query=self.SQL))
-        assert len(info.endpoints) == 4
-        # every ticket distinct, all buckets of one result
-        tickets = [bytes(ep.ticket.ticket) for ep in info.endpoints]
-        assert len(set(tickets)) == 4
+        jsc = spark.sparkContext._jsc.sc()
 
-    def test_multi_endpoint_merge_matches_single_endpoint(
-        self, multi_client, server
-    ):
-        multi = multi_client.execute(self.SQL).sort_by("id").combine_chunks()
-        single_ex = FlightSQLExecutor(f"grpc://localhost:{server.port}")
+        def jobs() -> int:
+            jsc.listenerBus().waitUntilEmpty()
+            return jsc.statusStore().jobsList(None).size()
+
+        ex = FlightSQLExecutor(f"grpc://localhost:{server.port}")
         try:
-            single = single_ex.execute(self.SQL).sort_by("id").combine_chunks()
-        finally:
-            single_ex.close()
-        assert multi.num_rows == single.num_rows == self.N
-        assert multi.schema.equals(single.schema)
-        assert multi.equals(single)
-
-    def test_buckets_disjoint_complete_and_replayable(
-        self, multi_server, multi_client
-    ):
-        from datafusion_flight_sql_server_spark.protocol.flightsql import (
-            CommandStatementQuery,
-        )
-
-        info = multi_client.flight_info(
-            CommandStatementQuery(query="SELECT id FROM wide_result")
-        )
-        raw = fl.FlightClient(f"grpc://localhost:{multi_server.port}")
-        try:
-            counts = []
-            ids: list[int] = []
-            for ep in info.endpoints:
-                bucket_ids = raw.do_get(ep.ticket).read_all().column("id").to_pylist()
-                counts.append(len(bucket_ids))
-                ids.extend(bucket_ids)
-            # union over buckets is exactly the result, no dup, no loss
-            assert sorted(ids) == list(range(self.N))
-            # tickets replay while staged (Spark re-reads a scan's
-            # partition tickets once per action; retries replay them too)
-            replay = raw.do_get(info.endpoints[0].ticket).read_all()
-            assert replay.num_rows == counts[0]
-        finally:
-            raw.close()
-
-    def test_buckets_stream_concurrently(self, multi_server, multi_client):
-        """All buckets pulled SIMULTANEOUSLY from separate threads — the
-        real multi-endpoint consumption pattern (the reference client
-        select_alls its endpoint streams, table-provider/src/lib.rs:43-53).
-        Exercises the sizes pre-pass + grouped pulls under concurrency:
-        each stream plans groups against the same persisted relation, and
-        the union must still be exact."""
-        from datafusion_flight_sql_server_spark.protocol.flightsql import (
-            CommandStatementQuery,
-        )
-
-        info = multi_client.flight_info(
-            CommandStatementQuery(query="SELECT id FROM wide_result")
-        )
-        results: dict[int, list[int]] = {}
-        errors: list[Exception] = []
-        barrier = threading.Barrier(len(info.endpoints))
-
-        def pull(i, ticket):
-            raw = fl.FlightClient(f"grpc://localhost:{multi_server.port}")
-            try:
-                barrier.wait()
-                results[i] = (
-                    raw.do_get(ticket).read_all().column("id").to_pylist()
+            before = jobs()
+            info = ex.flight_info(
+                CommandStatementQuery(
+                    query="SELECT grp, count(*) AS c FROM wide_result GROUP BY grp"
                 )
-            except Exception as exc:  # pragma: no cover
-                errors.append(exc)
-            finally:
-                raw.close()
+            )
+            assert jobs() == before
+            assert len(info.endpoints) == 1
+            # the shuffle runs once the endpoint is read
+            merged = ex.do_get(info.endpoints[0].ticket)
+        finally:
+            ex.close()
+        assert merged.num_rows == 97
+        assert sum(merged.column("c").to_pylist()) == self.N
+        assert jobs() > before
 
-        threads = [
-            threading.Thread(target=pull, args=(i, ep.ticket))
-            for i, ep in enumerate(info.endpoints)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(120)
-        assert not errors
-        assert len(results) == len(info.endpoints)
-        ids = [x for b in results.values() for x in b]
-        assert sorted(ids) == list(range(self.N))
+    def test_statement_ticket_replayable(self, server, wide_view):
+        # the ticket carries the whole command, so a client may re-read it
+        # (Spark replays a scan's partition tickets once per action, and
+        # retries and speculative tasks replay them too)
+        from datafusion_flight_sql_server_spark.protocol.flightsql import (
+            CommandStatementQuery,
+        )
+
+        ex = FlightSQLExecutor(f"grpc://localhost:{server.port}")
+        try:
+            info = ex.flight_info(CommandStatementQuery(query=self.SQL))
+            assert len(info.endpoints) == 1
+            first = ex.do_get(info.endpoints[0].ticket)
+            replay = ex.do_get(info.endpoints[0].ticket)
+        finally:
+            ex.close()
+        assert sorted(first.column("id").to_pylist()) == list(range(self.N))
+        assert replay.sort_by("id").equals(first.sort_by("id"))
+
+    @pytest.mark.parametrize(
+        "kind",
+        [
+            "statement",
+            "repartitioned_statement",
+            "prepared",
+            "catalogs",
+            "tables",
+            "table_types",
+            "sql_info",
+        ],
+    )
+    def test_every_flight_info_has_one_endpoint(self, server, wide_view, kind):
+        # one location-free endpoint per command, whatever the result's
+        # partitioning: the client may send the ticket to any replica
+        from datafusion_flight_sql_server_spark.protocol import flightsql as q
+
+        ex = FlightSQLExecutor(f"grpc://localhost:{server.port}")
+        try:
+            command = {
+                "statement": lambda: q.CommandStatementQuery(query=self.SQL),
+                "repartitioned_statement": lambda: q.CommandStatementQuery(
+                    query="SELECT /*+ REPARTITION(8) */ * FROM wide_result"
+                ),
+                "prepared": lambda: q.CommandPreparedStatementQuery(
+                    prepared_statement_handle=ex.prepare(self.SQL).handle
+                ),
+                "catalogs": q.CommandGetCatalogs,
+                "tables": q.CommandGetTables,
+                "table_types": q.CommandGetTableTypes,
+                "sql_info": q.CommandGetSqlInfo,
+            }[kind]()
+            info = ex.flight_info(command)
+            assert len(info.endpoints) == 1
+            assert list(info.endpoints[0].locations) == []
+            table = ex.do_get(info.endpoints[0].ticket)
+        finally:
+            ex.close()
+        assert table.num_rows > 0
+        if kind.endswith("statement") or kind == "prepared":
+            assert table.num_rows == self.N
+
+    def test_ticket_served_by_another_replica(self, spark, server, wide_view):
+        # the ticket holds the whole command, so a server that never saw
+        # the GetFlightInfo serves the DoGet (state.rs:55-58)
+        from datafusion_flight_sql_server_spark.protocol.flightsql import (
+            CommandStatementQuery,
+        )
+
+        replica = FlightSqlServer(Engine(spark), location="grpc://0.0.0.0:0")
+        threading.Thread(target=replica.serve, daemon=True).start()
+        ex = FlightSQLExecutor(f"grpc://localhost:{server.port}")
+        other = FlightSQLExecutor(f"grpc://localhost:{replica.port}")
+        try:
+            info = ex.flight_info(CommandStatementQuery(query=self.SQL))
+            got = other.do_get(info.endpoints[0].ticket)
+        finally:
+            ex.close()
+            other.close()
+            replica.shutdown()
+        assert sorted(got.column("id").to_pylist()) == list(range(self.N))
+
+    def test_runtime_error_surfaces_over_do_get(self, spark):
+        # a query that fails while streaming reaches the client as its own
+        # error, and the server keeps serving
+        session = spark.newSession()
+        session.conf.set("spark.sql.ansi.enabled", "true")
+        srv = FlightSqlServer(Engine(session), location="grpc://0.0.0.0:0")
+        threading.Thread(target=srv.serve, daemon=True).start()
+        ex = FlightSQLExecutor(f"grpc://localhost:{srv.port}")
+        try:
+            with pytest.raises(fl.FlightError, match="DIVIDE_BY_ZERO"):
+                ex.execute("SELECT id, 10 DIV (id - id) AS z FROM range(0, 1000, 1, 2)")
+            assert ex.execute("SELECT 1 AS x").num_rows == 1
+        finally:
+            ex.close()
+            srv.shutdown()
+
+    @pytest.mark.parametrize("option", ["result_endpoints", "max_staged_results"])
+    def test_config_has_no_staged_result_options(self, option):
+        # an embedder still passing a removed option fails loudly instead
+        # of silently getting one endpoint
+        with pytest.raises(TypeError, match=option):
+            FlightSqlServiceConfig(**{option: 2})
 
     def test_concurrent_streams_bounded_aggregate_pull_bytes(
-        self, multi_server, multi_client
+        self, server, wide_view
     ):
-        """Round-9 soak (VERDICT r8 #2): concurrent bucket streams draw
-        their group reservations from ONE shared pool, so aggregate
-        in-flight pull bytes stay <= the pool total — N streams can no
-        longer stack N full per-stream budgets on the driver. Run with a
-        pool smaller than the result so the streams genuinely contend
-        (every group must wait its turn), and assert the union is still
-        exact and the pool's high-water mark never passed its total."""
+        """Round-9 soak (VERDICT r8 #2): concurrent DoGets draw their group
+        reservations from ONE shared pool, so aggregate in-flight pull
+        bytes stay <= the pool total — N streams can no longer stack N
+        full per-stream budgets on the driver. Run with a pool smaller
+        than the result so the streams genuinely contend (every group must
+        wait its turn), and assert every stream is still exact, the pool's
+        high-water mark never passed its total, and it is full again."""
         from datafusion_flight_sql_server_spark.engine import core
-        from datafusion_flight_sql_server_spark.protocol.flightsql import (
-            CommandStatementQuery,
-        )
 
-        info = multi_client.flight_info(
-            CommandStatementQuery(query="SELECT id FROM wide_result")
-        )
         saved = core._PULL_POOL
-        pool = core._PullBudgetPool(256 << 10)  # << the staged result
+        pool = core._PullBudgetPool(256 << 10)  # << the result
         core._PULL_POOL = pool
         results: dict[int, list[int]] = {}
         errors: list[Exception] = []
-        barrier = threading.Barrier(len(info.endpoints))
+        barrier = threading.Barrier(4)
 
-        def pull(i, ticket):
-            raw = fl.FlightClient(f"grpc://localhost:{multi_server.port}")
+        def pull(i):
+            ex = FlightSQLExecutor(f"grpc://localhost:{server.port}")
             try:
                 barrier.wait()
-                results[i] = (
-                    raw.do_get(ticket).read_all().column("id").to_pylist()
-                )
+                results[i] = ex.execute(self.SQL).column("id").to_pylist()
             except Exception as exc:  # pragma: no cover
                 errors.append(exc)
             finally:
-                raw.close()
+                ex.close()
 
-        threads = [
-            threading.Thread(target=pull, args=(i, ep.ticket))
-            for i, ep in enumerate(info.endpoints)
-        ]
+        threads = [threading.Thread(target=pull, args=(i,)) for i in range(4)]
         try:
             for t in threads:
                 t.start()
@@ -782,271 +801,19 @@ class TestMultiEndpoint:
         finally:
             core._PULL_POOL = saved
         assert not errors
-        ids = [x for b in results.values() for x in b]
-        assert sorted(ids) == list(range(self.N))
+        assert len(results) == 4
+        for ids in results.values():
+            assert sorted(ids) == list(range(self.N))
         # the streams really contended AND the bound held
         assert 0 < pool.peak <= pool.total
-
-    def test_pull_pool_fifo_large_reservation_not_starved(self):
-        """ADVICE r9: reservations are granted FIFO — a blocked
-        full-pool reservation cannot be overtaken by later small
-        acquires that would otherwise fit in the remaining bytes (the
-        unordered notify_all race let smalls starve it indefinitely)."""
-        import time
-
-        from datafusion_flight_sql_server_spark.engine import core
-
-        pool = core._PullBudgetPool(100)
-        held = pool.acquire(60)
-        order: list[str] = []
-
-        def runner(tag, nbytes):
-            got = pool.acquire(nbytes)
-            order.append(tag)
-            pool.release(got)
-
-        big = threading.Thread(target=runner, args=("big", 100))
-        big.start()
-        deadline = time.monotonic() + 10
-        while len(pool._waiters) < 1 and time.monotonic() < deadline:
-            time.sleep(0.005)  # big is enqueued (blocked: 60 held)
-        small = threading.Thread(target=runner, args=("small", 10))
-        small.start()
-        while len(pool._waiters) < 2 and time.monotonic() < deadline:
-            time.sleep(0.005)
-        # 40 bytes are free — the pre-fix pool would grant the small
-        # here, jumping the queue; FIFO keeps it behind the big
-        time.sleep(0.1)
-        assert order == []
-        pool.release(held)  # pool back to 100 → big first, then small
-        big.join(10)
-        small.join(10)
-        assert order == ["big", "small"]
         assert pool._avail == pool.total and not pool._waiters
-
-    def test_lru_eviction_expires_tickets(self, spark):
-        from datafusion_flight_sql_server_spark.protocol.flightsql import (
-            CommandStatementQuery,
-        )
-
-        srv = FlightSqlServer(
-            Engine(spark),
-            location="grpc://0.0.0.0:0",
-            config=FlightSqlServiceConfig(
-                result_endpoints=2, max_staged_results=1
-            ),
-        )
-        threading.Thread(target=srv.serve, daemon=True).start()
-        ex = FlightSQLExecutor(f"grpc://localhost:{srv.port}")
-        try:
-            old = ex.flight_info(CommandStatementQuery(query="SELECT 1 AS x"))
-            ex.flight_info(CommandStatementQuery(query="SELECT 2 AS y"))  # evicts
-            with pytest.raises(fl.FlightError, match="expired|unknown"):
-                ex._client.do_get(old.endpoints[0].ticket, ex._options).read_all()
-        finally:
-            ex.close()
-            srv.shutdown()
-
-    def test_unknown_and_garbage_partition_tickets(self, multi_client):
-        from datafusion_flight_sql_server_spark.protocol.state import (
-            _PART_TICKET_MAGIC,
-            PartitionedResultTicket,
-        )
-
-        bogus = PartitionedResultTicket("no-such-result", 0, 4).encode()
-        with pytest.raises(fl.FlightError, match="expired|unknown"):
-            multi_client._client.do_get(
-                fl.Ticket(bogus), multi_client._options
-            ).read_all()
-        with pytest.raises(fl.FlightError):
-            multi_client._client.do_get(
-                fl.Ticket(_PART_TICKET_MAGIC + b"\x0c\xde\xad"),
-                multi_client._options,
-            ).read_all()
-        # server survived both
-        assert multi_client.execute("SELECT 1 AS x").num_rows == 1
-
-    def test_datasource_reads_endpoints_as_partitions(self, spark, multi_server):
-        # Loopback scan (same app serves and reads): endpoints must stay
-        # below the task-slot count (local[4] here) or the scan's blocked
-        # DoGet tasks starve the inner jobs that produce the staged result
-        # (prepare_partitioned_result docstring) — so this server serves 2.
-        from datafusion_flight_sql_server_spark.sources import FlightSQLDataSource
-
-        srv = FlightSqlServer(
-            Engine(spark),
-            location="grpc://0.0.0.0:0",
-            config=FlightSqlServiceConfig(result_endpoints=2),
-        )
-        threading.Thread(target=srv.serve, daemon=True).start()
-        try:
-            spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-            spark.dataSource.register(FlightSQLDataSource)
-            df = (
-                spark.read.format("flightsql")
-                .option("uri", f"grpc://localhost:{srv.port}")
-                .option("query", self.SQL)
-                .load()
-            )
-            # one Spark input partition per Flight endpoint
-            assert df.rdd.getNumPartitions() == 2
-            assert df.count() == self.N
-            total = df.agg({"id": "sum"}).collect()[0][0]
-            assert total == self.N * (self.N - 1) // 2
-        finally:
-            srv.shutdown()
-
-
-def _serve(engine, **config) -> FlightSqlServer:
-    srv = FlightSqlServer(
-        engine,
-        location="grpc://0.0.0.0:0",
-        config=FlightSqlServiceConfig(**config),
-    )
-    threading.Thread(target=srv.serve, daemon=True).start()
-    return srv
-
-
-def _read_endpoints(port: int, info) -> pa.Table:
-    raw = fl.FlightClient(f"grpc://localhost:{port}")
-    try:
-        return pa.concat_tables(
-            raw.do_get(ep.ticket).read_all() for ep in info.endpoints
-        )
-    finally:
-        raw.close()
-
-
-class TestStagedBatchRdd:
-    """Multi-endpoint buckets stream Spark's JVM Arrow batches from one
-    persisted batch RDD, built at the first bucket DoGet: GetFlightInfo
-    runs no job, no Python-worker encoder or pickled-row pull serves a
-    bucket, and eviction and shutdown leave no persisted RDD behind."""
-
-    N = 50_000
-
-    @pytest.fixture(scope="class")
-    def staged_view(self, spark):
-        _register_fixtures(spark)
-        spark.range(0, self.N).selectExpr(
-            "id", "CAST(id % 97 AS INT) AS grp"
-        ).repartition(8, "grp").createOrReplaceTempView("staged_wide")
-
-    @pytest.fixture(scope="class")
-    def staged_server(self, spark, staged_view):
-        srv = _serve(Engine(spark), result_endpoints=4)
-        yield srv
-        srv.shutdown()
-
-    @staticmethod
-    def _info(port: int, sql: str):
-        from datafusion_flight_sql_server_spark.protocol.flightsql import (
-            CommandStatementQuery,
-        )
-
-        ex = FlightSQLExecutor(f"grpc://localhost:{port}")
-        try:
-            return ex.flight_info(CommandStatementQuery(query=sql))
-        finally:
-            ex.close()
-
-    @staticmethod
-    def _persisted(spark) -> int:
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-    def test_flight_info_starts_no_spark_job(self, spark, staged_server):
-        jsc = spark.sparkContext._jsc.sc()
-
-        def jobs() -> int:
-            jsc.listenerBus().waitUntilEmpty()
-            return jsc.statusStore().jobsList(None).size()
-
-        before = jobs()
-        info = self._info(
-            staged_server.port,
-            "SELECT grp, count(*) AS c FROM staged_wide GROUP BY grp",
-        )
-        assert jobs() == before
-        assert len(info.endpoints) == 4
-        # the shuffle runs once the buckets are read
-        merged = _read_endpoints(staged_server.port, info)
-        assert merged.num_rows == 97
-        assert sum(merged.column("c").to_pylist()) == self.N
-        assert jobs() > before
-
-    def test_buckets_use_no_python_encoder_or_rows(
-        self, spark, staged_server, server, monkeypatch
-    ):
-        from datafusion_flight_sql_server_spark.engine import core
-
-        def _boom(*a, **k):
-            raise AssertionError("bucket stream left the JVM Arrow batches")
-
-        monkeypatch.setattr(core, "_make_ipc_encoder", _boom)
-        monkeypatch.setattr(type(spark.range(1)), "rdd", property(_boom))
-        sql = "SELECT id, grp FROM staged_wide"
-        info = self._info(staged_server.port, sql)
-        assert len(info.endpoints) == 4
-        multi = _read_endpoints(staged_server.port, info).sort_by("id")
-        single_ex = FlightSQLExecutor(f"grpc://localhost:{server.port}")
-        try:
-            single = single_ex.execute(sql).sort_by("id")
-        finally:
-            single_ex.close()
-        assert multi.num_rows == self.N
-        assert multi.combine_chunks().equals(single.combine_chunks())
-
-    def test_lru_eviction_unpersists_streamed_result(self, spark, staged_view):
-        before = self._persisted(spark)
-        srv = _serve(Engine(spark), result_endpoints=2, max_staged_results=1)
-        try:
-            info = self._info(srv.port, "SELECT id FROM staged_wide")
-            assert _read_endpoints(srv.port, info).num_rows == self.N
-            assert self._persisted(spark) == before + 1
-            self._info(srv.port, "SELECT grp FROM staged_wide")  # evicts
-            assert self._persisted(spark) == before
-        finally:
-            srv.shutdown()
-
-    def test_shutdown_unpersists_streamed_result(self, spark, staged_view):
-        """Eight buckets start at once, more than the cores: they build
-        and persist ONE batch RDD between them, and shutdown drops it."""
-        before = self._persisted(spark)
-        srv = _serve(Engine(spark), result_endpoints=8)
-        try:
-            info = self._info(srv.port, "SELECT id FROM staged_wide")
-            rows: list[int] = []
-            barrier = threading.Barrier(len(info.endpoints))
-
-            def pull(ticket):
-                raw = fl.FlightClient(f"grpc://localhost:{srv.port}")
-                try:
-                    barrier.wait(timeout=60)
-                    rows.append(raw.do_get(ticket).read_all().num_rows)
-                finally:
-                    raw.close()
-
-            threads = [
-                threading.Thread(target=pull, args=(ep.ticket,))
-                for ep in info.endpoints
-            ]
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join(120)
-            assert not any(t.is_alive() for t in threads)
-            assert sum(rows) == self.N and len(rows) == 8
-            assert self._persisted(spark) == before + 1
-        finally:
-            srv.shutdown()
-        assert self._persisted(spark) == before
 
     def test_large_var_types_cast_to_declared_schema(self, spark, server):
         """Under ``useLargeVarTypes`` Spark encodes large_string and
-        large_binary; the streams cast them to the declared string/binary,
+        large_binary; the stream casts them to the declared string/binary,
         which Flight would otherwise reject."""
         from datafusion_flight_sql_server_spark.engine.core import (
-            _jvm_arrow_batches,
+            _jvm_arrow_schema,
         )
 
         session = spark.newSession()
@@ -1056,7 +823,7 @@ class TestStagedBatchRdd:
             "CAST(CAST(id AS STRING) AS BINARY) AS b "
             "FROM range(0, 5000, 1, 4)"
         )
-        _, jvm_schema = _jvm_arrow_batches(session.sql(sql))
+        jvm_schema = _jvm_arrow_schema(session.sql(sql))
         assert jvm_schema.field("s").type == pa.large_string()
         assert jvm_schema.field("b").type == pa.large_binary()
         expected = FlightSQLExecutor(f"grpc://localhost:{server.port}")
@@ -1066,24 +833,124 @@ class TestStagedBatchRdd:
             expected.close()
         assert want.schema.field("s").type == pa.string()
         assert want.schema.field("b").type == pa.binary()
-        for endpoints in (1, 4):
-            srv = _serve(Engine(session), result_endpoints=endpoints)
-            try:
-                info = self._info(srv.port, sql)
-                assert len(info.endpoints) == endpoints
-                got = _read_endpoints(srv.port, info)
-            finally:
-                srv.shutdown()
-            assert got.schema.equals(want.schema)
-            assert got.sort_by("id").combine_chunks().equals(want)
+        srv = FlightSqlServer(Engine(session), location="grpc://0.0.0.0:0")
+        threading.Thread(target=srv.serve, daemon=True).start()
+        ex = FlightSQLExecutor(f"grpc://localhost:{srv.port}")
+        try:
+            got = ex.execute(sql)
+        finally:
+            ex.close()
+            srv.shutdown()
+        assert got.schema.equals(want.schema)
+        assert got.sort_by("id").combine_chunks().equals(want)
+
+
+class _TwoEndpointServer(FlightSqlServer):
+    """Answers a statement with two endpoints, the even and the odd ids, as
+    Flight SQL servers that split results do; this server never does."""
+
+    def _info_statement(self, engine, command, descriptor):
+        from datafusion_flight_sql_server_spark.protocol.flightsql import (
+            CommandStatementQuery,
+        )
+        from datafusion_flight_sql_server_spark.protocol.state import (
+            CommandTicket,
+        )
+
+        info = super()._info_statement(engine, command, descriptor)
+        endpoints = [
+            fl.FlightEndpoint(
+                fl.Ticket(
+                    CommandTicket(
+                        command=CommandStatementQuery(
+                            query=f"SELECT * FROM ({command.query}) AS t "
+                            f"WHERE id % 2 = {r}"
+                        )
+                    ).try_encode()
+                ),
+                [],
+            )
+            for r in (0, 1)
+        ]
+        return fl.FlightInfo(info.schema, descriptor, endpoints, -1, -1)
+
+
+class TestClientEndpointMerge:
+    """The client merges every endpoint of a FlightInfo, as the reference's
+    table provider does (table-provider/src/lib.rs:43-53): the executor
+    concatenates them and the flightsql DataSource reads one Spark
+    partition per endpoint."""
+
+    SQL = "SELECT id, CAST(id % 97 AS INT) AS grp FROM range(0, 20000, 1, 4)"
+    N = 20_000
+
+    @pytest.fixture(scope="class")
+    def two_endpoint_server(self, spark):
+        srv = _TwoEndpointServer(Engine(spark), location="grpc://0.0.0.0:0")
+        threading.Thread(target=srv.serve, daemon=True).start()
+        yield srv
+        srv.shutdown()
+
+    def test_executor_merges_endpoints(self, two_endpoint_server, client):
+        from datafusion_flight_sql_server_spark.protocol.flightsql import (
+            CommandStatementQuery,
+        )
+
+        ex = FlightSQLExecutor(f"grpc://localhost:{two_endpoint_server.port}")
+        try:
+            info = ex.flight_info(CommandStatementQuery(query=self.SQL))
+            assert len(info.endpoints) == 2
+            merged = ex.execute(self.SQL).sort_by("id").combine_chunks()
+        finally:
+            ex.close()
+        single = client.execute(self.SQL).sort_by("id").combine_chunks()
+        assert merged.num_rows == single.num_rows == self.N
+        assert merged.equals(single)
+
+    def test_datasource_reads_endpoints_as_partitions(
+        self, spark, two_endpoint_server
+    ):
+        from datafusion_flight_sql_server_spark.sources import FlightSQLDataSource
+
+        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+        spark.dataSource.register(FlightSQLDataSource)
+        df = (
+            spark.read.format("flightsql")
+            .option("uri", f"grpc://localhost:{two_endpoint_server.port}")
+            .option("query", self.SQL)
+            .load()
+        )
+        # one Spark input partition per Flight endpoint
+        assert df.rdd.getNumPartitions() == 2
+        assert df.count() == self.N
+        total = df.agg({"id": "sum"}).collect()[0][0]
+        assert total == self.N * (self.N - 1) // 2
+
+    def test_datasource_reads_single_endpoint_as_one_partition(self, spark, server):
+        # this repo's server answers with one endpoint, so the scan has
+        # one input partition holding the whole result
+        from datafusion_flight_sql_server_spark.sources import FlightSQLDataSource
+
+        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+        spark.dataSource.register(FlightSQLDataSource)
+        df = (
+            spark.read.format("flightsql")
+            .option("uri", f"grpc://localhost:{server.port}")
+            .option("query", self.SQL)
+            .load()
+        )
+        assert df.rdd.getNumPartitions() == 1
+        assert df.count() == self.N
+        total = df.agg({"id": "sum"}).collect()[0][0]
+        assert total == self.N * (self.N - 1) // 2
 
 
 class TestMixedTrafficSoak:
     """Round 10 (VERDICT r9 #6): every traffic KIND the server handles,
     simultaneously, against ONE server — dialect-rewritten statements,
     prepared statements with per-thread parameter bindings, a Substrait
-    plan, multi-endpoint bucket streams under a contended shared pull
-    pool, and catalog metadata calls — asserting isolation (every thread
+    plan, concurrent result streams under a contended shared pull pool,
+    and catalog metadata calls — asserting isolation (every thread
     sees exactly its own values: a cross-bound parameter or swapped
     ticket would show), pool bounds (peak <= total), and zero errors.
     Each piece is soak-tested individually elsewhere; this is the mix.
@@ -1099,11 +966,7 @@ class TestMixedTrafficSoak:
             "id", "CAST(id % 97 AS INT) AS grp"
         ).repartition(8, "grp").createOrReplaceTempView("soak_wide")
         eng = Engine(spark)
-        srv = FlightSqlServer(
-            eng,
-            location="grpc://0.0.0.0:0",
-            config=FlightSqlServiceConfig(result_endpoints=4),
-        )
+        srv = FlightSqlServer(eng, location="grpc://0.0.0.0:0")
         srv._soak_engine = eng  # the soak asserts on its describe memo
         threading.Thread(target=srv.serve, daemon=True).start()
         yield srv
@@ -1172,15 +1035,14 @@ class TestMixedTrafficSoak:
             info = ex.flight_info(
                 CommandStatementQuery(query="SELECT id FROM soak_wide")
             )
-            assert len(info.endpoints) == 4
+            assert len(info.endpoints) == 1
             total, count = 0, 0
             raw = fl.FlightClient(uri)
             try:
-                for ep in info.endpoints:
-                    for chunk in raw.do_get(ep.ticket):
-                        col = chunk.data.column(0)
-                        count += len(col)
-                        total += sum(col.to_pylist())
+                for chunk in raw.do_get(info.endpoints[0].ticket):
+                    col = chunk.data.column(0)
+                    count += len(col)
+                    total += sum(col.to_pylist())
             finally:
                 raw.close()
             assert count == self.N and total == sum_ids
@@ -1236,7 +1098,7 @@ class TestMixedTrafficSoak:
             return real_table(ref)
 
         saved = core._PULL_POOL
-        pool = core._PullBudgetPool(512 << 10)  # << the staged streams
+        pool = core._PullBudgetPool(512 << 10)  # << the streamed results
         core._PULL_POOL = pool
         spark.table = counting_table
         try:

@@ -505,6 +505,80 @@ class TestJvmArrowPath:
         assert len(row_path) == 1
         assert table.column("id").to_pylist() == list(range(50))
 
+    def test_runtime_error_surfaces_without_row_path(self, spark):
+        # Only the job-free schema conversion may fall back: a query that
+        # fails at run time raises its own error and is not re-run on the
+        # row path, for a plain projection and a shuffle alike.
+        engine = Engine(spark)
+        row_path = []
+        engine._execute_stream_rows = lambda *a, **k: row_path.append(a) or iter(())
+        session = spark.newSession()
+        session.conf.set("spark.sql.ansi.enabled", "true")
+        for sql in (
+            "SELECT id, 10 DIV (id - id) AS z FROM range(0, 1000, 1, 2)",
+            "SELECT id % 3 AS g, sum(10 DIV (id - id)) AS z "
+            "FROM range(0, 1000, 1, 2) GROUP BY id % 3",
+        ):
+            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+                list(engine.execute_stream(session.sql(sql)))
+        assert row_path == []
+
+    @pytest.mark.parametrize(
+        "sql, condition",
+        [
+            (
+                "SELECT CAST(concat('x', id) AS INT) AS v "
+                "FROM range(0, 1000, 1, 2)",
+                "CAST_INVALID_INPUT",
+            ),
+            (
+                "SELECT id + 9223372036854775807 AS v FROM range(1, 1000, 1, 2)",
+                "ARITHMETIC_OVERFLOW",
+            ),
+        ],
+        ids=["cast_invalid_input", "arithmetic_overflow"],
+    )
+    def test_ansi_runtime_errors_keep_their_condition(self, spark, sql, condition):
+        # every ANSI run-time failure, not only division, is the query's
+        # own error: its plan converts to Arrow, so the row path stays out
+        engine = Engine(spark)
+        row_path = []
+        engine._execute_stream_rows = lambda *a, **k: row_path.append(a) or iter(())
+        session = spark.newSession()
+        session.conf.set("spark.sql.ansi.enabled", "true")
+        with pytest.raises(Exception, match=condition):
+            list(engine.execute_stream(session.sql(sql)))
+        assert row_path == []
+
+    def test_error_in_pooled_group_returns_pull_pool(self, spark):
+        # the failing partition is the last of 24, so the probe's batches
+        # reach the consumer first and the error comes out of a pooled
+        # group pull, which must hand its reservation back
+        from datafusion_flight_sql_server_spark.engine import core
+
+        engine = Engine(spark)
+        row_path = []
+        engine._execute_stream_rows = lambda *a, **k: row_path.append(a) or iter(())
+        session = spark.newSession()
+        session.conf.set("spark.sql.ansi.enabled", "true")
+        df = session.range(0, 24_000, 1, 24).selectExpr(
+            "id", "10 DIV (CASE WHEN id >= 23500 THEN 0 ELSE 1 END) AS z"
+        )
+        pool = core._PullBudgetPool(core._PULL_POOL_TOTAL)
+        saved = core._PULL_POOL
+        core._PULL_POOL = pool
+        seen = []
+        try:
+            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+                for batch in engine.execute_stream(df):
+                    seen.append(batch.num_rows)
+        finally:
+            core._PULL_POOL = saved
+        assert sum(seen) >= 1000
+        assert pool.peak > 0
+        assert pool._avail == pool.total and not pool._waiters
+        assert row_path == []
+
 
 class TestProbePoisoning:
     def test_paging_placeholder_does_not_poison_plan_probe(self, spark):

@@ -774,32 +774,97 @@ def test_phase_split_merge_matches_single_phase(spark, rows):
                 )
 
 
-# -- round 8: group planner invariants ----------------------------------------
+# -- result pull path: grouped pulls and the shared byte pool ----------------
 
-_part_sizes = st.lists(
-    st.integers(min_value=0, max_value=500), min_size=0, max_size=200
+
+class _SizedIpc:
+    """A pulled blob of ``n`` bytes, without allocating them."""
+
+    def __init__(self, n: int):
+        self.n = n
+
+    def __len__(self) -> int:
+        return self.n
+
+
+class _SizedRow:
+    def __init__(self, n: int):
+        self.ipc = _SizedIpc(n)
+
+
+@given(
+    sizes=st.lists(
+        st.integers(min_value=0, max_value=300 << 20), min_size=0, max_size=150
+    ),
+    max_part=st.integers(min_value=1, max_value=200 << 20),
+    observed=st.integers(min_value=1, max_value=8),
 )
-
-
-@given(sizes=_part_sizes, budget=st.integers(min_value=1, max_value=600))
 @settings(max_examples=200, deadline=None)
-def test_plan_groups_by_bytes_invariants(sizes, budget):
-    """For ANY size distribution and budget: groups tile the input in
-    order (no loss, no dup), every multi-partition group fits the budget
-    (an oversized partition may stand alone), and no group exceeds the
-    64-task cap."""
-    from datafusion_flight_sql_server_spark.engine.core import (
-        _plan_groups_by_bytes,
-    )
+def test_grouped_pull_tiles_partitions_within_pool(sizes, max_part, observed):
+    """For ANY partition sizes (size cliffs included) and probe state: the
+    groups tile the partitions in order (no loss, no duplicate), no group
+    exceeds the 64-task cap or the observed+1 sample bound, every
+    reservation fits the pool, and the pool is whole again at the end."""
+    from datafusion_flight_sql_server_spark.engine import core
 
-    parts = list(range(len(sizes)))
-    groups = _plan_groups_by_bytes(parts, sizes, budget)
-    assert [p for g in groups for p in g] == parts
-    for g in groups:
-        assert len(g) <= 64
-        total = sum(sizes[p] for p in g)
-        if len(g) > 1:
-            assert total <= budget
+    calls: list = []
+    held: list = []
+
+    class _SC:
+        def runJob(self, rdd, func, parts):
+            calls.append(list(parts))
+            held.append(pool.total - pool._avail)
+            return [_SizedRow(sizes[p]) for p in parts]
+
+    pool = core._PullBudgetPool(core._PULL_POOL_TOTAL)
+    saved = core._PULL_POOL
+    core._PULL_POOL = pool
+    try:
+        parts = list(range(len(sizes)))
+        rows = list(
+            core._grouped_pull(_SC(), None, parts, max_part, observed=observed)
+        )
+    finally:
+        core._PULL_POOL = saved
+    assert [p for c in calls for p in c] == parts
+    assert len(rows) == len(parts)
+    seen = observed
+    for c, h in zip(calls, held):
+        assert 1 <= len(c) <= min(64, seen + 1)
+        assert 0 < h <= core._PULL_BUDGET
+        seen += len(c)
+    assert pool._avail == pool.total and not pool._waiters
+
+
+@given(
+    ops=st.lists(
+        st.tuples(st.booleans(), st.integers(min_value=-5, max_value=300)),
+        max_size=60,
+    )
+)
+@settings(max_examples=200, deadline=None)
+def test_pull_pool_accounting(ops):
+    """Single-threaded acquire/release sequences: every grant is the
+    request clamped to [1, total], free bytes always equal total minus the
+    grants held, and ``peak`` is the high-water mark of held bytes."""
+    from datafusion_flight_sql_server_spark.engine.core import _PullBudgetPool
+
+    pool = _PullBudgetPool(200)
+    held: list[int] = []
+    high = 0
+    for acquire, n in ops:
+        want = min(max(n, 1), pool.total)
+        if acquire and want <= pool._avail:
+            assert pool.acquire(n) == want
+            held.append(want)
+        elif held:
+            pool.release(held.pop(0))
+        high = max(high, sum(held))
+        assert pool._avail == pool.total - sum(held)
+        assert pool.peak == high
+    for taken in held:
+        pool.release(taken)
+    assert pool._avail == pool.total and not pool._waiters
 
 
 # -- round 13: ngram-Jaccard prefix+positional filter losslessness ------------

@@ -1,26 +1,20 @@
 """Direct policy tests for the result-serving internals in engine/core.py.
 
-These pin the exact contracts the round-7 serving rewrite changed blind
-(VERDICT r7 items #1/#2): ``sc.runJob``'s per-partition FLATTENING of
-returned iterables, the exact-byte group planner's three branches and the
-adaptive ``_grouped_pull`` growth policy. Both grouping policies drive the
-same puller over Spark's JVM Arrow batch RDD: the single-endpoint stream
-and the persisted multi-endpoint buckets. The fake-SparkContext tests run
-without a JVM so the policy branches stay cheap to exercise;
-``_sized_partitions`` runs against the real session because runJob
-semantics are the thing under test.
+These pin the adaptive ``_grouped_pull`` growth policy that
+``execute_stream`` drives over Spark's JVM Arrow batch RDD (VERDICT r7
+items #1/#2), and the shared ``_PullBudgetPool`` that bounds the bytes all
+concurrent streams pull. The fake-SparkContext tests run without a JVM so
+the policy branches stay cheap to exercise.
 """
+
+import threading
 
 import pytest
 
 from datafusion_flight_sql_server_spark.engine.core import (
     _PULL_BUDGET,
     Engine,
-    _ArrowBatchPuller,
     _grouped_pull,
-    _jvm_arrow_batches,
-    _plan_groups_by_bytes,
-    _sized_partitions,
 )
 
 MB = 1 << 20
@@ -52,37 +46,6 @@ class _FakeSC:
     def runJob(self, rdd, func, parts):
         self.calls.append(list(parts))
         return [_FakeRow(self.sizes[p]) for p in parts]
-
-
-# -- _plan_groups_by_bytes ---------------------------------------------------
-
-
-class TestPlanGroupsByBytes:
-    def test_budget_split_exact(self):
-        # 5 partitions of 50 each under budget 120 -> [2, 2, 1]: each
-        # group's TRUE bytes stay <= budget.
-        groups = _plan_groups_by_bytes([0, 1, 2, 3, 4], [50] * 5, budget=120)
-        assert groups == [[0, 1], [2, 3], [4]]
-        for g in groups:
-            assert sum(50 for _ in g) <= 120
-
-    def test_oversized_partition_gets_own_group(self):
-        # A single over-budget partition must land on the driver whole:
-        # it forms its own group and does not absorb neighbours.
-        groups = _plan_groups_by_bytes([0, 1, 2], [10, 500, 10], budget=100)
-        assert groups == [[0], [1], [2]]
-
-    def test_task_cap_64(self):
-        # Zero-byte partitions would otherwise form one giant group; the
-        # per-job task cap bounds scheduler payload at 64.
-        groups = _plan_groups_by_bytes(list(range(150)), [0] * 150, budget=100)
-        assert [len(g) for g in groups] == [64, 64, 22]
-        assert [p for g in groups for p in g] == list(range(150))
-
-    def test_groups_are_contiguous_and_complete(self):
-        parts = list(range(17))
-        groups = _plan_groups_by_bytes(parts, [30] * 17, budget=100)
-        assert [p for g in groups for p in g] == parts
 
 
 # -- _grouped_pull policy ----------------------------------------------------
@@ -146,66 +109,31 @@ class TestGroupedPull:
         assert len(rows) == 23
         assert [p for c in sc.calls for p in c] == list(range(23))
 
+    def test_failed_pull_releases_its_reservation(self):
+        # a query error raised by a group's job propagates to the stream
+        # and gives the group's pool reservation back
+        from datafusion_flight_sql_server_spark.engine import core
 
-# -- _sized_partitions: real runJob flatten semantics ------------------------
+        class _FailingSC(_FakeSC):
+            def runJob(self, rdd, func, parts):
+                if len(self.calls) == 1:
+                    raise RuntimeError("[DIVIDE_BY_ZERO] task failed")
+                return super().runJob(rdd, func, parts)
 
-
-class TestSizedPartitions:
-    def test_one_element_per_partition(self, spark):
-        """Pins the r7 regression: runJob is mapPartitions + collect, so it
-        FLATTENS each partition's returned iterable. ``_sized_partitions``
-        must therefore return exactly len(parts) integers, one per
-        partition — and each is exactly the bytes the puller then pulls."""
-        sc = spark.sparkContext
-        df = spark.range(0, 12_000, 1, 4).selectExpr("id", "cast(id AS string) AS s")
-        jrdd, _ = _jvm_arrow_batches(df)
-        parts = list(range(4))
-        sizes = _sized_partitions(sc, jrdd, parts)
-        assert len(sizes) == len(parts)
-        assert all(isinstance(s, int) and s > 0 for s in sizes)
-        puller = _ArrowBatchPuller(sc)
-        assert sizes == [
-            sum(len(b.ipc) for b in puller.runJob(jrdd, list, [p])) for p in parts
-        ]
-
-    def test_subset_of_partitions(self, spark):
-        sc = spark.sparkContext
-        jrdd, _ = _jvm_arrow_batches(spark.range(0, 10, 1, 2))
-        sizes = _sized_partitions(sc, jrdd, [1])
-        assert len(sizes) == 1
-
-
-# -- Connect degradation ------------------------------------------------------
-
-
-class TestConnectDegradation:
-    def test_no_jvm_handle_is_not_staged(self, spark):
-        """A DataFrame without a JVM handle (Spark Connect) is not staged:
-        the server mints the reference's single stateless ticket instead,
-        because a bucket cannot read "its own partitions" without the RDD
-        API."""
-
-        class _ConnectLikeDF:
-            """Delegates plan building but refuses ``_jdf``, like a
-            Connect-session DataFrame."""
-
-            def __init__(self, df):
-                self._df = df
-
-            def __getattr__(self, name):
-                if name == "_jdf":
-                    raise AttributeError("JVM_ATTRIBUTE_NOT_SUPPORTED: _jdf")
-                return getattr(self._df, name)
-
-        eng = Engine(spark)
-        df = spark.range(100).selectExpr("id", "id * 2 AS v")
-        assert eng.prepare_partitioned_result(_ConnectLikeDF(df), 4) is None
-        # classic sessions keep the configured bucket count
-        staged = eng.prepare_partitioned_result(df, max_endpoints=4)
+        saved = core._PULL_POOL
+        pool = core._PullBudgetPool(64 * MB)
+        core._PULL_POOL = pool
+        sc = _FailingSC([1 * MB] * 12)
+        rows = []
         try:
-            assert staged.n_buckets == 4
+            with pytest.raises(RuntimeError, match="DIVIDE_BY_ZERO"):
+                for row in _grouped_pull(sc, None, list(range(12)), max_part=MB):
+                    rows.append(row)
         finally:
-            staged.release()
+            core._PULL_POOL = saved
+        assert len(sc.calls) == 1 and len(rows) == len(sc.calls[0])
+        assert 0 < pool.peak <= pool.total
+        assert pool._avail == pool.total and not pool._waiters
 
 
 # -- _PullBudgetPool (round 9: aggregate budget across concurrent pulls) ------
@@ -288,6 +216,43 @@ class TestPullBudgetPool:
         assert pool.acquire(100) == 100  # pool still fully grantable
         pool.release(100)
 
+    def test_pull_pool_fifo_large_reservation_not_starved(self):
+        """ADVICE r9: reservations are granted FIFO — a blocked
+        full-pool reservation cannot be overtaken by later small
+        acquires that would otherwise fit in the remaining bytes (the
+        unordered notify_all race let smalls starve it indefinitely)."""
+        import time
+
+        from datafusion_flight_sql_server_spark.engine import core
+
+        pool = core._PullBudgetPool(100)
+        held = pool.acquire(60)
+        order: list[str] = []
+
+        def runner(tag, nbytes):
+            got = pool.acquire(nbytes)
+            order.append(tag)
+            pool.release(got)
+
+        big = threading.Thread(target=runner, args=("big", 100))
+        big.start()
+        deadline = time.monotonic() + 10
+        while len(pool._waiters) < 1 and time.monotonic() < deadline:
+            time.sleep(0.005)  # big is enqueued (blocked: 60 held)
+        small = threading.Thread(target=runner, args=("small", 10))
+        small.start()
+        while len(pool._waiters) < 2 and time.monotonic() < deadline:
+            time.sleep(0.005)
+        # 40 bytes are free — the pre-fix pool would grant the small
+        # here, jumping the queue; FIFO keeps it behind the big
+        time.sleep(0.1)
+        assert order == []
+        pool.release(held)  # pool back to 100 → big first, then small
+        big.join(10)
+        small.join(10)
+        assert order == ["big", "small"]
+        assert pool._avail == pool.total and not pool._waiters
+
     def test_grouped_pull_draws_from_shared_pool(self):
         """Two interleaved _grouped_pull streams never exceed the pool
         total even though each alone is entitled to a full group budget."""
@@ -325,9 +290,9 @@ class TestPullBudgetPool:
             core._PULL_POOL = saved
 
     def test_execute_stream_draws_from_shared_pool(self, spark):
-        """The adaptive (uncached) serving path accounts its sized pulls
-        against the same aggregate pool as the bucket streams — only the
-        blind <=8-partition probe is exempt (documented)."""
+        """The serving path accounts its sized pulls against the shared
+        aggregate pool — only the blind <=8-partition probe is exempt
+        (documented)."""
         from datafusion_flight_sql_server_spark.engine import core
 
         eng = Engine(spark)
