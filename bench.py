@@ -11,8 +11,9 @@ are not a trend line on this bursty shared host, the same-process ratio is):
 The stdout line is kept under ~1.9 KB so the driver's 2,000-char tail
 captures the WHOLE JSON (BENCH_r01-r11 all stored `parsed: null` because
 the full per-query detail overflowed the tail); the complete result —
-as-given timings, floor-adjusted view, rows, per-query oracle seconds —
-is written to examples/bench_last_full.json instead of stdout.
+as-given timings, floor-adjusted view, rows, per-query oracle seconds and
+estimator, per-query job/stage/shuffle counts — is written to
+examples/bench_last_full.json instead of stdout.
 
 Protocol (BASELINE.md): wall-clock sec/query, median of 5 timed runs after one
 warm-up, warm SparkSession, results fully materialized on the driver via the
@@ -45,6 +46,7 @@ if _REPO not in sys.path:
 from datafusion_flight_sql_server_spark.engine.session import build_session
 from datafusion_flight_sql_server_spark.queries import REGISTRY
 from datafusion_flight_sql_server_spark.queries.catalog import run_query_cleanups
+from perfbench.server import SparkCounters
 
 #: The headline set benched against the DuckDB baseline (BASELINE.md): the
 #: four TPC-H queries plus one representative per operator family.
@@ -164,12 +166,16 @@ def _load_gate() -> float:
     return waited - 5.0
 
 
-def _time_oracles(sf_dir: str, queries: dict[str, str]) -> dict[str, float]:
+def _time_oracles(
+    sf_dir: str, queries: dict[str, str]
+) -> tuple[dict[str, float], dict[str, str]]:
     """Time the DuckDB oracle queries over ``sf_dir``'s parquet tables.
     Protocol: warm connection, 1 warmup, adaptive run count — cheap
     oracles a median of 3 (unchanged since round 12); expensive oracles
     (first sample >= 5 s) a MIN of 2 instead of a single draw (round 14,
-    declared in OPTIMIZATION_r14.md). A failing oracle is left out."""
+    declared in OPTIMIZATION_r14.md). Returns the seconds and, per query,
+    the estimator used ("median3" or "min2"). A failing oracle is left
+    out of both."""
     import duckdb
 
     con = duckdb.connect()
@@ -182,6 +188,7 @@ def _time_oracles(sf_dir: str, queries: dict[str, str]) -> dict[str, float]:
             f"read_parquet('{sf_dir}/{t}.parquet')"
         )
     result: dict[str, float] = {}
+    estimator: dict[str, str] = {}
     for name, sql in queries.items():
         try:
             con.execute(sql).fetchdf()  # warm-up
@@ -195,6 +202,7 @@ def _time_oracles(sf_dir: str, queries: dict[str, str]) -> dict[str, float]:
                     con.execute(sql).fetchdf()
                     samples.append(time.perf_counter() - t0)
                 result[name] = round(statistics.median(samples), 4)
+                estimator[name] = "median3"
             else:
                 # Expensive oracle (round 14, declared measurement fix):
                 # a SINGLE draw of an 80-140 s query was the dominant
@@ -207,9 +215,10 @@ def _time_oracles(sf_dir: str, queries: dict[str, str]) -> dict[str, float]:
                 con.execute(sql).fetchdf()
                 samples.append(time.perf_counter() - t0)
                 result[name] = round(min(samples), 4)
+                estimator[name] = "min2"
         except Exception:  # pragma: no cover - oracle-side failure
             continue
-    return result
+    return result, estimator
 
 
 def _oracle_child(in_path: str, out_path: str) -> int:
@@ -218,8 +227,8 @@ def _oracle_child(in_path: str, out_path: str) -> int:
     session's process, so Spark-side GC/thread activity contaminated the
     ratio denominator); protocol in ``_time_oracles``."""
     spec = json.loads(Path(in_path).read_text())
-    result = _time_oracles(spec["sf_dir"], spec["queries"])
-    Path(out_path).write_text(json.dumps(result))
+    sec, estimator = _time_oracles(spec["sf_dir"], spec["queries"])
+    Path(out_path).write_text(json.dumps({"sec": sec, "estimator": estimator}))
     return 0
 
 
@@ -228,6 +237,29 @@ def _materialize(df) -> int:
     if hasattr(df, "toArrow"):
         return df.toArrow().num_rows
     return len(df.collect())  # pragma: no cover - pre-4.0 fallback
+
+
+def _timed_runs(
+    spark, counters: SparkCounters, fn, data_dir: str
+) -> tuple[float, dict]:
+    """Median seconds of TIMED_RUNS runs of ``fn``, each on a freshly built
+    DataFrame (re-collecting one DataFrame reuses its materialized shuffle
+    stages), and the status-store counts of the last run. The counts are
+    read outside the timed window: they cost a listener-bus drain."""
+    samples = []
+    for i in range(TIMED_RUNS):
+        # Operators that reuse an intermediate persist() it (e.g. the
+        # minhash shingle sets); Spark's CacheManager matches by plan,
+        # so without a clear the NEXT run would start from the previous
+        # run's materialized blocks — fast but input-cold dishonest.
+        spark.catalog.clearCache()
+        run_query_cleanups()  # drop Python-side refs to released caches
+        if i == TIMED_RUNS - 1:
+            counters.read()  # the last run's counts start here
+        t0 = time.perf_counter()
+        _materialize(fn(spark, data_dir))
+        samples.append(time.perf_counter() - t0)
+    return round(statistics.median(samples), 4), counters.read()
 
 
 def main() -> int:
@@ -270,30 +302,28 @@ def main() -> int:
     floor = round(statistics.median(floor_samples), 4)
 
     names = [n for n in HEADLINE if n in REGISTRY]
+    # Jobs, stages and shuffle bytes per query: structure that hypervisor
+    # steal cannot move, read from the status store with the UI off.
+    counters = SparkCounters(spark)
+    counts: dict[str, dict[str, dict]] = {}
 
-    def _time_set(data_dir: str) -> tuple[dict[str, float], dict[str, int]]:
+    def _time_set(
+        label: str, data_dir: str
+    ) -> tuple[dict[str, float], dict[str, int]]:
         timings: dict[str, float] = {}
         rows: dict[str, int] = {}
+        set_counts = counts[label] = {}
         for name in names:
             fn = REGISTRY[name].fn
             for _ in range(WARMUP_RUNS):
                 rows[name] = _materialize(fn(spark, data_dir))
-            samples = []
-            for _ in range(TIMED_RUNS):
-                # Operators that reuse an intermediate persist() it (e.g. the
-                # minhash shingle sets); Spark's CacheManager matches by plan,
-                # so without a clear the NEXT run would start from the previous
-                # run's materialized blocks — fast but input-cold dishonest.
-                spark.catalog.clearCache()
-                run_query_cleanups()  # drop Python-side refs to released caches
-                t0 = time.perf_counter()
-                _materialize(fn(spark, data_dir))
-                samples.append(time.perf_counter() - t0)
-            timings[name] = round(statistics.median(samples), 4)
+            timings[name], set_counts[name] = _timed_runs(
+                spark, counters, fn, data_dir
+            )
         return timings, rows
 
     steal0 = _steal_jiffies()
-    timings, rows = _time_set(sf_dir)
+    timings, rows = _time_set("asgiven", sf_dir)
     steal_asgiven = _steal_delta_sec(steal0)
 
     # DuckDB oracle medians (VERDICT r5 #9: same-HOST, same-session
@@ -305,6 +335,7 @@ def main() -> int:
     # run count); in-process fallback if the subprocess fails.
     # Disable: SPARK_GRAFT_BENCH_ORACLE=0.
     oracle_sec: dict[str, float] = {}
+    oracle_estimator: dict[str, str] = {}
     steal_oracle = None
     if os.environ.get("SPARK_GRAFT_BENCH_ORACLE", "1") != "0":
         steal1 = _steal_jiffies()
@@ -334,12 +365,16 @@ def main() -> int:
                     capture_output=True,
                 ).returncode
                 if rc == 0 and Path(out_path).exists():
-                    oracle_sec = json.loads(Path(out_path).read_text())
+                    child = json.loads(Path(out_path).read_text())
+                    oracle_sec = child["sec"]
+                    oracle_estimator = child["estimator"]
         except Exception:  # pragma: no cover - subprocess unavailable
             oracle_sec = {}
         if not oracle_sec:  # pragma: no cover - in-process fallback
             try:
-                oracle_sec = _time_oracles(sf_dir, oracle_spec["queries"])
+                oracle_sec, oracle_estimator = _time_oracles(
+                    sf_dir, oracle_spec["queries"]
+                )
             except Exception:  # pragma: no cover - duckdb unavailable
                 pass
         steal_oracle = _steal_delta_sec(steal1)
@@ -373,10 +408,11 @@ def main() -> int:
                     out,
                     row_group_size=max(8192, tbl.num_rows // 32 or 1),
                 )
-        presplit, _ = _time_set(str(split_dir))
+        presplit, _ = _time_set("presplit", str(split_dir))
         steal_presplit = _steal_delta_sec(steal2)
     except Exception:  # pragma: no cover - pre-split is best-effort
         presplit = {}
+        counts.pop("presplit", None)
         steal_presplit = None
 
     # the ratio reads presplit (the layout any real deployment has; falls
@@ -418,6 +454,8 @@ def main() -> int:
         # same-process DuckDB oracle medians at sf_dir (empty when duckdb
         # is unavailable or disabled) — read ratio = presplit/oracle
         "oracle_sec": oracle_sec,
+        # per query: "median3" (cheap oracle) or "min2" (first sample >= 5 s)
+        "oracle_estimator": oracle_estimator,
         "spark_oracle_ratio": ratio_total,
         "ratios": ratios,
         "loadavg_start": load_start,
@@ -427,6 +465,10 @@ def main() -> int:
         "steal_oracle_sec": steal_oracle,
         "steal_presplit_sec": steal_presplit,
         "oracle_isolated_process": bool(oracle_sec) or None,
+        # status-store delta of each query's last timed run, per set
+        # ("asgiven", "presplit"): jobs, stages, skipped_stages, tasks,
+        # shuffle_read/write_bytes, executor_cpu_ns, gc_ms
+        "counts": counts,
     }
     full_path = Path(_REPO) / "examples" / "bench_last_full.json"
     try:

@@ -110,12 +110,14 @@ import re
 import struct
 from contextvars import ContextVar
 
-from datafusion_flight_sql_server_spark.protocol.wire import decode_varint
-
-WT_VARINT = 0
-WT_I64 = 1
-WT_LEN = 2
-WT_I32 = 5
+from datafusion_flight_sql_server_spark.protocol.wire import (
+    WT_I32,
+    WT_I64,
+    WT_LEN,
+    WT_VARINT,
+    decode_varint,
+    iter_fields,
+)
 
 
 class SubstraitUnsupported(NotImplementedError):
@@ -140,31 +142,8 @@ def _fields(data: bytes) -> dict[int, list[tuple[int, object]]]:
             f"wire value {data!r}"
         )
     out: dict[int, list[tuple[int, object]]] = {}
-    pos = 0
     try:
-        while pos < len(data):
-            key, pos = decode_varint(data, pos)
-            num, wt = key >> 3, key & 0x7
-            if wt == WT_VARINT:
-                value, pos = decode_varint(data, pos)
-            elif wt == WT_LEN:
-                length, pos = decode_varint(data, pos)
-                if pos + length > len(data):
-                    raise ValueError("truncated length-delimited field")
-                value = data[pos : pos + length]
-                pos += length
-            elif wt == WT_I32:
-                if pos + 4 > len(data):
-                    raise ValueError("truncated fixed32 field")
-                value = data[pos : pos + 4]
-                pos += 4
-            elif wt == WT_I64:
-                if pos + 8 > len(data):
-                    raise ValueError("truncated fixed64 field")
-                value = data[pos : pos + 8]
-                pos += 8
-            else:
-                raise ValueError(f"unsupported wire type {wt}")
+        for num, wt, value in iter_fields(data):
             out.setdefault(num, []).append((wt, value))
     except ValueError as exc:
         raise SubstraitMalformed(f"malformed Substrait bytes: {exc}") from exc

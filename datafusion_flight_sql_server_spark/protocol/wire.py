@@ -4,7 +4,9 @@ The environment ships no ``google.protobuf``, so the handful of Flight SQL
 messages this engine speaks are encoded/decoded directly at the wire level.
 Only the features those messages use are implemented: varint (wire type 0)
 and length-delimited (wire type 2) fields, optional/repeated scalars, and
-nested messages. The encoding rules are the public protobuf spec; field
+nested messages; fixed32/fixed64 fields are read (and skipped when
+unknown). ``iter_fields`` is the one field reader, shared with the
+Substrait consumer. The encoding rules are the public protobuf spec; field
 numbers come from Arrow's FlightSql.proto and the reference's prost derives
 (reference: datafusion-flight-sql-server/src/state.rs:45-49,113-120).
 """
@@ -12,10 +14,14 @@ numbers come from Arrow's FlightSql.proto and the reference's prost derives
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any
+from typing import Any, Iterator
 
 WT_VARINT = 0
+WT_I64 = 1
 WT_LEN = 2
+WT_I32 = 5
+
+_FIXED_SIZES = {WT_I32: (4, "fixed32"), WT_I64: (8, "fixed64")}
 
 
 def encode_varint(value: int) -> bytes:
@@ -49,6 +55,32 @@ def decode_varint(data: bytes, pos: int) -> tuple[int, int]:
         shift += 7
         if shift > 70:
             raise ValueError("varint too long")
+
+
+def iter_fields(data: bytes) -> Iterator[tuple[int, int, Any]]:
+    """Yield ``(field_number, wire_type, raw)`` for each field of one
+    message: ``raw`` is an int for a varint and a slice of ``data`` for the
+    other wire types. Raises ValueError on a truncated field of any wire
+    type or on a wire type protobuf no longer uses (groups)."""
+    pos = 0
+    while pos < len(data):
+        key, pos = decode_varint(data, pos)
+        field_number, wire_type = key >> 3, key & 0x7
+        if wire_type == WT_VARINT:
+            value, pos = decode_varint(data, pos)
+            yield field_number, wire_type, value
+            continue
+        if wire_type == WT_LEN:
+            length, pos = decode_varint(data, pos)
+            what = "length-delimited"
+        elif wire_type in _FIXED_SIZES:
+            length, what = _FIXED_SIZES[wire_type]
+        else:
+            raise ValueError(f"unsupported wire type {wire_type}")
+        if pos + length > len(data):
+            raise ValueError(f"truncated {what} field")
+        yield field_number, wire_type, data[pos : pos + length]
+        pos += length
 
 
 def _tag(field_number: int, wire_type: int) -> bytes:
@@ -113,28 +145,8 @@ def decode_message(fields: tuple[Field, ...], data: bytes) -> dict[str, Any]:
     forward-compat rule); repeated fields accumulate in order."""
     by_number = {f.number: f for f in fields}
     result: dict[str, Any] = {f.name: [] if f.repeated else None for f in fields}
-    pos = 0
-    while pos < len(data):
-        key, pos = decode_varint(data, pos)
-        field_number, wire_type = key >> 3, key & 0x7
+    for field_number, _, value in iter_fields(data):
         f = by_number.get(field_number)
-        if wire_type == WT_VARINT:
-            raw, pos = decode_varint(data, pos)
-            value: Any = raw
-        elif wire_type == WT_LEN:
-            length, pos = decode_varint(data, pos)
-            if pos + length > len(data):
-                raise ValueError("truncated length-delimited field")
-            value = data[pos : pos + length]
-            pos += length
-        elif wire_type == 5:  # fixed32 — skip (never produced by our peers)
-            value = data[pos : pos + 4]
-            pos += 4
-        elif wire_type == 1:  # fixed64 — skip
-            value = data[pos : pos + 8]
-            pos += 8
-        else:
-            raise ValueError(f"unsupported wire type {wire_type}")
         if f is None:
             continue  # unknown field
         if f.kind == "string":

@@ -37,6 +37,10 @@ Usage::
 
 from __future__ import annotations
 
+import math
+from datetime import date
+from decimal import Decimal
+
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -89,33 +93,56 @@ class FlightEndpointPartition(InputPartition):
         self.token = token
 
 
-def _sql_literal(value) -> str:
+def _sql_literal(value) -> str | None:
+    """Remote SQL for a pushed filter's value, or None when the value has no
+    exact literal here (the filter then stays with Spark)."""
     if value is None:
         return "NULL"
-    if isinstance(value, str):
-        return "'" + value.replace("'", "''") + "'"
     if isinstance(value, bool):
         return "TRUE" if value else "FALSE"
-    return str(value)
+    if isinstance(value, int):
+        return str(value)
+    if isinstance(value, float):
+        return repr(value) if math.isfinite(value) else None
+    if isinstance(value, str):
+        # a backslash is an escape in Spark's literals and plain text in
+        # ANSI ones, so no one rendering is exact for every remote
+        if "\\" in value:
+            return None
+        return "'" + value.replace("'", "''") + "'"
+    if isinstance(value, Decimal):
+        return format(value, "f") if value.is_finite() else None
+    if type(value) is date:  # not a datetime, which subclasses date
+        return f"DATE'{value.isoformat()}'"
+    return None
+
+
+def _column_sql(attribute: tuple[str, ...]) -> str:
+    """The full column path, each part backtick-quoted (``s.x`` is the
+    struct field, not a top-level ``x``)."""
+    return ".".join("`" + part.replace("`", "``") + "`" for part in attribute)
+
+
+_COMPARISONS = {
+    EqualTo: "=",
+    GreaterThan: ">",
+    GreaterThanOrEqual: ">=",
+    LessThan: "<",
+    LessThanOrEqual: "<=",
+}
 
 
 def _filter_to_sql(f: Filter) -> str | None:
     """Unparse a pushed filter to remote SQL; None = cannot push."""
-    if isinstance(f, EqualTo):
-        return f"{f.attribute[-1]} = {_sql_literal(f.value)}"
-    if isinstance(f, GreaterThan):
-        return f"{f.attribute[-1]} > {_sql_literal(f.value)}"
-    if isinstance(f, GreaterThanOrEqual):
-        return f"{f.attribute[-1]} >= {_sql_literal(f.value)}"
-    if isinstance(f, LessThan):
-        return f"{f.attribute[-1]} < {_sql_literal(f.value)}"
-    if isinstance(f, LessThanOrEqual):
-        return f"{f.attribute[-1]} <= {_sql_literal(f.value)}"
     if isinstance(f, IsNull):
-        return f"{f.attribute[-1]} IS NULL"
+        return f"{_column_sql(f.attribute)} IS NULL"
     if isinstance(f, IsNotNull):
-        return f"{f.attribute[-1]} IS NOT NULL"
-    return None
+        return f"{_column_sql(f.attribute)} IS NOT NULL"
+    op = _COMPARISONS.get(type(f))
+    literal = _sql_literal(f.value) if op else None
+    if literal is None:
+        return None
+    return f"{_column_sql(f.attribute)} {op} {literal}"
 
 
 class FlightSQLReader(DataSourceReader):

@@ -1,7 +1,14 @@
-"""bench.py's pre-session load gate: loadavg is read after each 5 s sampling
-window, and only the wait beyond the first window is reported."""
+"""bench.py's measurement helpers: the pre-session load gate (loadavg is read
+after each 5 s sampling window, and only the wait beyond the first window is
+reported), the oracle estimator record, and the per-query status-store
+counts."""
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 import bench
+from tests.conftest import SF_SMALL
 
 
 class _Host:
@@ -45,3 +52,41 @@ def test_wait_is_capped(monkeypatch):
     windows = int(bench.LOAD_GATE_MAX_WAIT_SEC // 5)
     waited, _ = _gate(monkeypatch, [9.0] * windows)
     assert waited == bench.LOAD_GATE_MAX_WAIT_SEC - 5.0
+
+
+def _oracle_over_temp_parquet(tmp_path):
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"v": list(range(100))}), path)
+    return bench._time_oracles(
+        SF_SMALL, {"q": f"SELECT sum(v) FROM read_parquet('{path}')"}
+    )
+
+
+def test_cheap_oracle_records_median3(tmp_path):
+    sec, estimator = _oracle_over_temp_parquet(tmp_path)
+    assert estimator == {"q": "median3"}
+    assert sec["q"] < 5.0
+
+
+def test_expensive_oracle_records_min2(tmp_path, monkeypatch):
+    # every clock read advances 6 s, so the first sample is 6 s (>= 5 s)
+    clock = iter(range(0, 600, 6))
+    monkeypatch.setattr(bench.time, "perf_counter", lambda: next(clock))
+    sec, estimator = _oracle_over_temp_parquet(tmp_path)
+    assert estimator == {"q": "min2"}
+    assert sec == {"q": 6.0}
+
+
+def test_counts_repeat_for_the_same_query(spark, monkeypatch):
+    monkeypatch.setattr(bench, "TIMED_RUNS", 2)
+    counters = bench.SparkCounters(spark)
+
+    def aggregation(session, _data_dir):  # a new DataFrame per run
+        return session.range(0, 2000, 1, 4).groupBy(F.col("id") % 7).count()
+
+    _, first = bench._timed_runs(spark, counters, aggregation, "")
+    _, second = bench._timed_runs(spark, counters, aggregation, "")
+    structure = ("jobs", "stages", "skipped_stages")
+    assert [first[k] for k in structure] == [second[k] for k in structure]
+    assert first["jobs"] >= 1
+    assert first["shuffle_write_bytes"] > 0

@@ -91,3 +91,41 @@ def test_join_remote_with_local(spark, uri):
 def test_missing_option_rejected(spark, uri):
     with pytest.raises(Exception, match="table.*query|query.*table"):
         spark.read.format("flightsql").option("uri", uri).load().collect()
+
+
+@pytest.fixture(scope="module")
+def typed_view(spark, server):
+    # s.x and the top-level x hold different values, so a filter on the
+    # struct field that reached the remote as plain x would pick wrong rows;
+    # n holds a backslash, which SQL dialects disagree on inside literals
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW remote_typed AS SELECT * FROM VALUES "
+        "(1, DATE'2024-01-01', named_struct('x', 10L), 20L, 'a'), "
+        "(2, DATE'2024-01-03', named_struct('x', 20L), 10L, 'b'), "
+        "(3, DATE'2024-01-03', named_struct('x', 30L), 30L, "
+        "concat('a', char(92), 'b')) "
+        "AS t(id, d, s, x, n)"
+    )
+    return "remote_typed"
+
+
+@pytest.mark.parametrize(
+    "condition, ids",
+    [
+        ("d = DATE'2024-01-03'", [2, 3]),
+        ("s.x = 20", [2]),
+        ("n = 'a\\\\b'", [3]),  # Spark SQL for the string a\b
+    ],
+    ids=["date_literal", "struct_field", "backslash_string"],
+)
+def test_pushed_filter_keeps_value_and_column_path(
+    spark, uri, typed_view, condition, ids
+):
+    df = (
+        spark.read.format("flightsql")
+        .option("uri", uri)
+        .option("table", typed_view)
+        .load()
+        .filter(condition)
+    )
+    assert sorted(r.id for r in df.collect()) == ids

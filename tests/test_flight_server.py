@@ -28,6 +28,7 @@ from datafusion_flight_sql_server_spark.server import (
     FlightSqlServer,
     FlightSqlServiceConfig,
 )
+from tests.test_protocol import TRUNCATED_TAILS
 
 
 def _register_fixtures(spark):
@@ -590,6 +591,22 @@ class TestMalformedInputs:
             client._client.get_flight_info(
                 fl.FlightDescriptor.for_command(b"\x00\xff\x13garbage"),
                 client._options,
+            )
+        assert client.execute("SELECT 1 AS x").num_rows == 1
+
+    @pytest.mark.parametrize(
+        "tail", TRUNCATED_TAILS.values(), ids=TRUNCATED_TAILS
+    )
+    def test_truncated_descriptor_rejected_cleanly(self, client, tail):
+        from datafusion_flight_sql_server_spark.protocol.flightsql import (
+            CommandStatementQuery,
+        )
+
+        cmd = CommandStatementQuery(query="SELECT 1 AS x").pack()
+        cmd.value += tail
+        with pytest.raises(fl.FlightServerError, match="truncated"):
+            client._client.get_flight_info(
+                fl.FlightDescriptor.for_command(cmd.encode()), client._options
             )
         assert client.execute("SELECT 1 AS x").num_rows == 1
 

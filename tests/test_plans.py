@@ -247,32 +247,14 @@ class TestQualifierMetadata:
 
 
 class TestPlanCache:
-    """Optional plan cache (SURVEY §7 H5) — off by default like the
-    stateless reference; opt-in returns identical DataFrames for repeated
-    (sql, params)."""
+    """No plan cache, like the stateless reference: every call re-plans
+    and re-runs the statement gate."""
 
-    def test_disabled_by_default(self, spark):
+    def test_every_call_replans(self, spark):
         engine = Engine(spark)
         a = engine.sql_to_plan("SELECT * FROM users")
         b = engine.sql_to_plan("SELECT * FROM users")
         assert a is not b
-
-    def test_cache_hit_and_param_sensitivity(self, spark):
-        engine = Engine(spark, plan_cache_size=4)
-        a = engine.sql_to_plan("SELECT * FROM users WHERE id = $1", [1])
-        b = engine.sql_to_plan("SELECT * FROM users WHERE id = $1", [1])
-        c = engine.sql_to_plan("SELECT * FROM users WHERE id = $1", [2])
-        assert a is b and a is not c
-        assert [r.id for r in c.collect()] == [2]
-
-    def test_lru_eviction_and_clear(self, spark):
-        engine = Engine(spark, plan_cache_size=2)
-        a = engine.sql_to_plan("SELECT 1 AS x")
-        engine.sql_to_plan("SELECT 2 AS x")
-        engine.sql_to_plan("SELECT 3 AS x")  # evicts "SELECT 1"
-        assert engine.sql_to_plan("SELECT 1 AS x") is not a
-        engine.clear_plan_cache()
-        assert len(engine._plan_cache) == 0
 
 
 class TestExecuteStream:

@@ -153,6 +153,35 @@ class TestMessages:
         assert decoded.query == "q"
 
 
+#: A field tag and the cut-off start of its value, one per wire type:
+#: fixed32 (field 9) with 1 of 4 bytes, fixed64 (field 9) with none of 8,
+#: length-delimited (field 9) announcing 3 bytes with 1 present, and a
+#: varint (field 9) whose continuation bit promises a next byte.
+TRUNCATED_TAILS = {
+    "fixed32": bytes([0x4D, 0x01]),
+    "fixed64": bytes([0x49]),
+    "length_delimited": bytes([0x4A, 0x03, 0x61]),
+    "varint": bytes([0x48, 0x80]),
+}
+
+
+class TestTruncatedFields:
+    """Every wire type is checked for truncation, known field or not."""
+
+    @pytest.mark.parametrize("tail", TRUNCATED_TAILS.values(), ids=TRUNCATED_TAILS)
+    def test_truncated_field_raises(self, tail):
+        valid = CommandStatementQuery(query="select 1").encode()
+        with pytest.raises(ValueError, match="truncated"):
+            CommandStatementQuery.decode(valid + tail)
+
+    @pytest.mark.parametrize(
+        "field", [bytes([0x4D]) + b"\x01\x02\x03\x04", bytes([0x49]) + bytes(8)]
+    )
+    def test_complete_unknown_fixed_field_skipped(self, field):
+        valid = CommandStatementQuery(query="select 1").encode()
+        assert CommandStatementQuery.decode(valid + field).query == "select 1"
+
+
 class TestVarint:
     @pytest.mark.parametrize("n", [0, 1, 127, 128, 300, 2**32, 2**63 - 1])
     def test_round_trip(self, n):
