@@ -17,15 +17,21 @@ datafusion-flight-sql-server/src/service.rs:153-191):
 
 from __future__ import annotations
 
+import functools
+import logging
+import os
 import re
 import threading
-from collections import deque
+from collections import OrderedDict, deque
 from typing import NamedTuple
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_flight_sql_server_spark.plans.gate import SQLOptions
 from datafusion_flight_sql_server_spark.plans.params import bind_sql
+
+_log = logging.getLogger(__name__)
 
 
 class Engine:
@@ -59,16 +65,23 @@ class Engine:
         under the same (catalog, namespace, name, type) key, which the
         live-listing prune never evicts for in-place REPLACEs (ADVICE
         r11). The post-invalidation runs in ``finally`` so a failed DDL
-        (which may have partially mutated the catalog) is covered too."""
+        (which may have partially mutated the catalog) is covered too.
+        DML joins DDL and commands in clearing the result cache
+        (``execute_stream``) at the same two points."""
         category = self.options.verify(self.spark, sql)
-        mutates = category in ("ddl", "statement")
+        mutates = category != "query"
         if mutates:
-            self.invalidate_info_schema_cache()
+            self._invalidate(category)
         try:
             return bind_sql(self.spark, sql, params)
         finally:
             if mutates:
-                self.invalidate_info_schema_cache()
+                self._invalidate(category)
+
+    def _invalidate(self, category: str) -> None:
+        _RESULT_CACHE.clear()
+        if category != "dml":
+            self.invalidate_info_schema_cache()
 
     def invalidate_info_schema_cache(self) -> None:
         """Drop the session-scoped information_schema schema/definition
@@ -89,7 +102,7 @@ class Engine:
         """
         return self.sql_to_plan(sql, params)
 
-    def execute_stream(self, df: DataFrame):
+    def execute_stream(self, df: DataFrame, schema=None):
         """Yield the result as Arrow record batches with bounded driver memory.
 
         Parity: the reference pipes batch-at-a-time (service.rs:186-236) and
@@ -116,7 +129,8 @@ class Engine:
           driver memory is one group of serialized batches — a
           1000-executor result streams through a bounded window instead of
           landing whole on the driver the way ``collect()``/``toArrow()``
-          would.
+          would. Whole results of 4 MB or less may be retained for reuse,
+          32 MB across all of them (``_RESULT_CACHE``).
 
         The driver pulls partitions in ADAPTIVELY-GROWING GROUPS, one Spark
         job per group, rather than one job per partition the way
@@ -145,19 +159,56 @@ class Engine:
         has no job-free schema step: it probes through empty partitions to
         the FIRST NON-EMPTY pull inside its try scope, since a conversion
         failure only surfaces when a batch is actually converted.
+
+        **Result reuse** (classic sessions only): a repeated deterministic
+        statement over local files is served from ``_RESULT_CACHE``
+        without starting a Spark job; the statement gate and bind still
+        ran for it in ``sql_to_plan``. A statement is reusable only when
+        its analyzed plan, subqueries included, is deterministic, holds
+        no UDF (``_UDF_PATTERNS``) and no clock or session function
+        (``current_timestamp``, ``current_user``, …), and every leaf is a
+        file scan (``HadoopFsRelation``), a ``LocalRelation``, a
+        ``OneRowRelation``, a ``Range`` or a reference to a CTE defined in
+        the same plan. The
+        key is the session, its SQL conf, the declared Arrow ``schema``,
+        the analyzed plan (bucketed by ``semanticHash``, confirmed by
+        ``sameResult``) and the path, size, ``mtime_ns`` and inode of
+        every input file; a non-``file:`` input is never reused. Only a
+        stream that ran to its end within 4 MB is admitted. An in-place
+        rewrite that keeps a file's size and inode within one tick of
+        the filesystem clock is not seen.
+
+        ``schema`` is the declared Arrow schema (``arrow_schema_for_df``);
+        the service passes the one it already derived.
         """
         from datafusion_flight_sql_server_spark.plans.schema import (
             arrow_schema_for_df,
         )
 
-        schema = arrow_schema_for_df(df)
+        if schema is None:
+            schema = arrow_schema_for_df(df)
         if getattr(df, "_jdf", None) is None:
             yield from self._execute_stream_connect(df, schema)
             return
+        entry = _RESULT_CACHE.lookup(df, schema)
+        if entry is not None and entry.batches is not None:
+            yield from entry.batches
+            return
+        batches = self._execute_stream_classic(df, schema)
+        if entry is not None:
+            batches = _RESULT_CACHE.admitting(entry, batches)
+        yield from batches
 
+    def _execute_stream_classic(self, df: DataFrame, schema):
+        """Classic stream: Spark's JVM Arrow batches, pulled in groups."""
         try:
             jvm_schema = _jvm_arrow_schema(df)
-        except Exception:
+        except Exception as exc:
+            _log.warning(
+                "result types cannot cross Spark's Arrow conversion; "
+                "streaming row at a time: %s",
+                exc,
+            )
             yield from self._execute_stream_rows(df, schema)
             return
 
@@ -347,6 +398,15 @@ class Engine:
         SQL and its rows were silently dropped)."""
         return "`" + name.replace("`", "``") + "`"
 
+    @classmethod
+    def _table_ref(cls, namespace: str | None, name: str) -> str:
+        """A listed table as SQL: qualified by its namespace so a temp
+        view sharing the name does not shadow it, and backtick-quoted so
+        dotted or special names stay single-part."""
+        if namespace is None:
+            return cls._bq(name)
+        return f"{cls._bq(namespace)}.{cls._bq(name)}"
+
     def _catalog_tables(self) -> list:
         """Every table/view across ALL databases, plus session temp
         views (ADVICE round 10: bare ``listTables()`` only covers the
@@ -400,14 +460,7 @@ class Engine:
         db = self.spark.catalog.currentDatabase()
 
         def _ref(t) -> str:
-            # qualify catalog tables by namespace so a temp view
-            # sharing the name does not shadow their schema;
-            # backticks (escaped) keep dotted/special names single-part
-            return (
-                f"{self._bq(t.namespace[0])}.{self._bq(t.name)}"
-                if t.namespace
-                else self._bq(t.name)
-            )
+            return self._table_ref(t.namespace[0] if t.namespace else None, t.name)
 
         def _key(t) -> tuple:
             return (t.catalog, tuple(t.namespace or ()), t.name, _table_type(t))
@@ -522,14 +575,15 @@ class Engine:
         table-provider/src/lib.rs:91-101 — ``select * from {t} limit 1``)."""
         return self.spark.sql(f"SELECT * FROM {table} LIMIT 1").schema
 
-    def table_arrow_schema(self, table: str):
-        """Arrow schema of a registered table (GetTables include_schema path,
-        service.rs:689-691)."""
+    def table_arrow_schema(self, name: str, namespace: str | None = None):
+        """Arrow schema of a listed table (GetTables include_schema path,
+        service.rs:689-691), resolved as ``namespace``.``name`` or, with no
+        namespace, as the temp view ``name``."""
         from datafusion_flight_sql_server_spark.plans.schema import (
             arrow_schema_for_df,
         )
 
-        return arrow_schema_for_df(self.spark.table(table))
+        return arrow_schema_for_df(self.spark.table(self._table_ref(namespace, name)))
 
     def plan_for_schema(self, sql: str) -> DataFrame:
         """Plan for schema derivation only: unbound placeholders are
@@ -595,6 +649,13 @@ _PULL_BUDGET = 128 << 20
 # concurrently; more streams interleave their groups instead of stacking.
 _PULL_POOL_TOTAL = 512 << 20
 
+# Result reuse (``execute_stream``): bytes of retained Arrow buffers in
+# total and per entry, and an entry count, since every entry pins one
+# analyzed JVM plan for its ``sameResult`` check.
+_RESULT_CACHE_BYTES = 32 << 20
+_RESULT_ENTRY_BYTES = 4 << 20
+_RESULT_CACHE_ENTRIES = 256
+
 
 class _PullBudgetPool:
     """Byte-accounting semaphore for concurrent result pulls.
@@ -659,6 +720,239 @@ class _PullBudgetPool:
 
 
 _PULL_POOL = _PullBudgetPool(_PULL_POOL_TOTAL)
+
+
+#: Catalyst tree patterns (``TreeNode.containsPattern``, which covers
+#: subquery plans) of user-defined functions: Python UDFs, UDAFs and
+#: UDTFs, Scala UDFs and SQL functions. JVM aggregate UDFs
+#: (``UserDefinedAggregateFunction``, typed ``Aggregator``) and catalog
+#: (DSv2) functions carry no pattern, and finding them would take a
+#: py4j walk of every expression; they are not detected.
+_UDF_PATTERNS = (
+    "PYTHON_UDF",
+    "SCALA_UDF",
+    "SQL_FUNCTION_EXPRESSION",
+    "SQL_SCALAR_FUNCTION",
+    "SQL_TABLE_FUNCTION",
+    "EVAL_PYTHON_UDF",
+    "EVAL_PYTHON_UDTF",
+)
+#: Leaves whose rows are fixed by the plan itself. File scans
+#: (``LogicalRelation`` over ``HadoopFsRelation``) are checked apart: their
+#: rows are fixed by the plan plus the stat of every input file.
+_PLAN_LEAVES = frozenset({"LocalRelation", "OneRowRelation", "Range", "CTERelationRef"})
+_BYPASS_REASONS = (
+    "not_deterministic",
+    "udf",
+    "clock_function",
+    "leaf",
+    "non_local_file",
+    "over_cap",
+    "incomplete",
+)
+
+
+class _Entry:
+    """One result under its bucket ``key`` and analyzed JVM ``plan``;
+    ``batches`` stays None until a complete stream fills it. Hashed by
+    identity."""
+
+    __slots__ = ("key", "plan", "batches", "nbytes")
+
+    def __init__(self, key, plan):
+        self.key = key
+        self.plan = plan
+        self.batches = None
+        self.nbytes = 0
+
+
+class _ResultCache:
+    """Bounded LRU of complete Arrow results (``execute_stream``).
+
+    Entries sit in buckets keyed by (session UUID, SQL conf, declared
+    schema, ``semanticHash`` of the analyzed plan, input-file stats); a
+    hit also needs ``sameResult`` against the entry's plan. One lock
+    guards the LRU, the buckets and the counters, and no py4j call runs
+    while it is held: ``sameResult`` checks run on a snapshot of the
+    bucket."""
+
+    def __init__(self, max_bytes: int, max_entry_bytes: int, max_entries: int):
+        self.max_bytes = max_bytes
+        self.max_entry_bytes = max_entry_bytes
+        self.max_entries = max_entries
+        self._lock = threading.Lock()
+        self._lru: OrderedDict = OrderedDict()  # _Entry -> None, oldest first
+        self._buckets: dict = {}  # key -> [_Entry]
+        self._bytes = 0
+        self._counts = dict.fromkeys(
+            ("hits", "misses", "admitted", "evicted", *_BYPASS_REASONS), 0
+        )
+
+    def stats(self) -> dict:
+        """Counter snapshot: hits, misses, bypasses by reason, admitted,
+        evicted (by the bounds; ``clear`` is not counted), retained bytes
+        and entries."""
+        with self._lock:
+            c = dict(self._counts)
+            return {
+                "hits": c["hits"],
+                "misses": c["misses"],
+                "bypasses": {r: c[r] for r in _BYPASS_REASONS},
+                "admitted": c["admitted"],
+                "evicted": c["evicted"],
+                "bytes": self._bytes,
+                "entries": len(self._lru),
+            }
+
+    def clear(self) -> None:
+        with self._lock:
+            self._lru.clear()
+            self._buckets.clear()
+            self._bytes = 0
+
+    def _count(self, name: str) -> None:
+        with self._lock:
+            self._counts[name] += 1
+
+    def lookup(self, df, schema) -> _Entry | None:
+        """The cached entry on a hit; on a miss an empty entry to admit
+        through ``admitting``; None when the statement is not reusable."""
+        key, plan = _result_key(df, schema)
+        if plan is None:
+            self._count(key)
+            return None
+        with self._lock:
+            candidates = list(self._buckets.get(key, ()))
+        for entry in candidates:
+            if entry.plan.sameResult(plan):
+                with self._lock:
+                    if entry in self._lru:
+                        self._lru.move_to_end(entry)
+                    self._counts["hits"] += 1
+                return entry
+        self._count("misses")
+        return _Entry(key, plan)
+
+    def admitting(self, entry: _Entry, batches):
+        """Pass ``batches`` through; admit them as ``entry`` once the
+        stream has run to its end within ``max_entry_bytes``. An error, a
+        close by the consumer (``GeneratorExit``) or the crossing batch
+        drops what was collected."""
+        kept: list | None = []
+        nbytes = 0
+        complete = False
+        try:
+            for batch in batches:
+                if kept is not None:
+                    nbytes += batch.get_total_buffer_size()
+                    if nbytes > self.max_entry_bytes:
+                        kept = None
+                        self._count("over_cap")
+                    else:
+                        kept.append(batch)
+                yield batch
+            complete = True
+        finally:
+            if kept is not None:
+                if complete:
+                    entry.batches, entry.nbytes = kept, nbytes
+                    self._admit(entry)
+                else:
+                    self._count("incomplete")
+
+    def _admit(self, entry: _Entry) -> None:
+        # Concurrent misses of one statement admit it once: compare against
+        # the bucket outside the lock, and insert only when no entry
+        # appeared in the bucket since the last comparison.
+        seen: set = set()
+        while True:
+            with self._lock:
+                fresh = [e for e in self._buckets.get(entry.key, ()) if e not in seen]
+                if not fresh:
+                    self._insert(entry)
+                    return
+            if any(e.plan.sameResult(entry.plan) for e in fresh):
+                return
+            seen.update(fresh)
+
+    def _insert(self, entry: _Entry) -> None:
+        """Add ``entry`` and evict to the bounds; the caller holds the lock."""
+        self._lru[entry] = None
+        self._buckets.setdefault(entry.key, []).append(entry)
+        self._bytes += entry.nbytes
+        self._counts["admitted"] += 1
+        while self._bytes > self.max_bytes or len(self._lru) > self.max_entries:
+            old, _ = self._lru.popitem(last=False)
+            bucket = self._buckets[old.key]
+            bucket.remove(old)
+            if not bucket:
+                del self._buckets[old.key]
+            self._bytes -= old.nbytes
+            self._counts["evicted"] += 1
+
+
+def _result_key(df, schema) -> tuple:
+    """(bucket key, analyzed JVM plan) of a reusable statement, or
+    (bypass reason, None). The cheap plan-wide checks run first; the
+    session and conf reads last."""
+    jdf = df._jdf
+    plan = jdf.queryExecution().analyzed()
+    if not plan.deterministic():
+        return "not_deterministic", None
+    jvm = df.sparkSession._jvm
+    udf_patterns, clock_pattern = _tree_patterns(jvm)
+    if any(plan.containsPattern(p) for p in udf_patterns):
+        return "udf", None
+    if plan.containsPattern(clock_pattern):
+        return "clock_function", None
+    paths: list[str] = []
+    subqueries = plan.subqueriesAll()
+    for root in [plan] + [subqueries.apply(i) for i in range(subqueries.size())]:
+        leaves = root.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            kind = leaf.getClass().getSimpleName()
+            if kind == "LogicalRelation":
+                relation = leaf.relation()
+                if relation.getClass().getSimpleName() != "HadoopFsRelation":
+                    return "leaf", None
+                paths.extend(relation.inputFiles())
+            elif kind not in _PLAN_LEAVES:
+                return "leaf", None
+    files = []
+    for path in sorted(set(paths)):
+        url = urlsplit(path)
+        if url.scheme != "file":
+            return "non_local_file", None
+        try:
+            st = os.stat(unquote(url.path))
+        except OSError:  # gone since listing: let the run report it
+            return "non_local_file", None
+        files.append((path, st.st_size, st.st_mtime_ns, st.st_ino))
+    jsession = jdf.sparkSession()
+    key = (
+        jsession.sessionUUID(),
+        # the same set of confs prints in the same order (a different
+        # order would only cost a miss)
+        jsession.sessionState().conf().getAllConfs().toString(),
+        schema.serialize().to_pybytes(),
+        plan.semanticHash(),
+        tuple(files),
+    )
+    return key, plan
+
+
+@functools.lru_cache(maxsize=1)
+def _tree_patterns(jvm) -> tuple:
+    """(``_UDF_PATTERNS``, ``CURRENT_LIKE``) as JVM enum values, resolved
+    once per gateway: each lookup by name is a py4j round trip."""
+    patterns = jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+    return [getattr(patterns, p)() for p in _UDF_PATTERNS], patterns.CURRENT_LIKE()
+
+
+_RESULT_CACHE = _ResultCache(
+    _RESULT_CACHE_BYTES, _RESULT_ENTRY_BYTES, _RESULT_CACHE_ENTRIES
+)
 
 
 def _grouped_pull(

@@ -36,8 +36,9 @@ def register_sf_tables(
 ) -> dict[str, DataFrame]:
     """Register every scale-factor parquet table as a temp view.
 
-    Returns {name: DataFrame}. Cheap to call repeatedly (no I/O beyond the
-    parquet footer read at plan time).
+    Returns {name: DataFrame}. Not cheap: ``spark.read.parquet`` runs one
+    schema-inference Spark job per table, measured on a 4-vCPU host at
+    0.3-0.5 s of CPU each, and 3.7 s for the first table on a fresh JVM.
     """
     _ensure_runtime_confs(spark)
     out: dict[str, DataFrame] = {}

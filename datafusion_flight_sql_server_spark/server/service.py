@@ -22,7 +22,8 @@ datafusion-flight-sql-server/src/service.rs:194-1014) on
   middleware (examples/bearer_auth_flight_sql.rs:95-114).
 
 Results stream batch-at-a-time via ``Engine.execute_stream`` — the driver
-never holds a whole result (service.rs:186-191 behavior; SURVEY §7 H1). On
+never holds a whole result over 4 MB (service.rs:186-191 behavior; SURVEY
+§7 H1; smaller ones may be kept for reuse, see "Declared divergences"). On
 classic sessions the batches are Spark's own JVM-side Arrow encoding, pulled
 to the driver in partition groups as serialized record batches and decoded
 there: no Python worker and no pickling sit on the result path. Batches
@@ -50,6 +51,17 @@ Declared divergences (client-compat debugging starts here):
   everything beyond it (joins, aggregates, computed projections, DML)
   NOT_IMPLEMENTED with the unsupported construct named — those clients
   must send SQL text instead.
+- **Result reuse** (the reference re-executes every DoGet,
+  service.rs:186-190): on a classic session a DoGet whose statement was
+  already answered whole may be served from the engine's bounded result
+  cache without starting a Spark job (``Engine.execute_stream``). The gate
+  and bind still run on every DoGet, and tickets stay stateless. A result is
+  reused only for the same session, SQL conf, declared schema and analyzed
+  plan (``sameResult``) over unchanged local input files (path, size,
+  mtime, inode), when the plan is deterministic, holds no UDF and no clock
+  or session function, and reads only local files, inline rows or
+  ``range``. Results over 4 MB are never kept, and 32 MB in total; a DDL,
+  DML or command statement through the gate clears the cache.
 - **Dictionary hydration** (service.rs:1072-1083): the reference re-encodes
   dictionary-encoded result fields to their value types before shipping
   ("hydration"). Spark's Arrow export never emits dictionary-encoded
@@ -518,7 +530,7 @@ class FlightSqlServer(fl.FlightServerBase):
         # reference's post-hydration wire shape (module docstring,
         # "Declared divergences").
         schema = arrow_schema_for_df(df)
-        batches = engine.execute_stream(df)
+        batches = engine.execute_stream(df, schema)
         return fl.GeneratorStream(schema, batches)
 
     def _get_catalogs(self, engine: Engine) -> fl.FlightDataStream:
@@ -544,7 +556,7 @@ class FlightSqlServer(fl.FlightServerBase):
             return _metadata_stream(rows, GET_TABLES_SCHEMA)
         for r in rows:
             r["table_schema"] = encode_schema(
-                engine.table_arrow_schema(r["table_name"])
+                engine.table_arrow_schema(r["table_name"], r["db_schema_name"])
             )
         return _metadata_stream(rows, GET_TABLES_SCHEMA_WITH_SCHEMA)
 

@@ -39,3 +39,12 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture(autouse=True)
+def _empty_result_cache():
+    """The engine's result cache is process-wide: every test starts with it
+    empty, so test order cannot turn one test's run into another's hit."""
+    from datafusion_flight_sql_server_spark.engine import core
+
+    core._RESULT_CACHE.clear()

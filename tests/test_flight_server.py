@@ -28,6 +28,7 @@ from datafusion_flight_sql_server_spark.server import (
     FlightSqlServer,
     FlightSqlServiceConfig,
 )
+from datafusion_flight_sql_server_spark.server.service import decode_schema_bytes
 from tests.test_protocol import TRUNCATED_TAILS
 
 
@@ -287,6 +288,69 @@ class TestMetadataRunsNoSparkJob:
         tables = client.get_tables()
         assert jobs() == before
         assert {"users", "orders"} <= set(tables.column("table_name").to_pylist())
+
+
+class TestGetTablesIncludeSchema:
+    """Each listed row's schema is the schema of THAT row's table."""
+
+    def test_special_character_temp_view(self, spark, client):
+        spark.sql("SELECT 1 AS dash_col").createOrReplaceTempView("`my-view`")
+        try:
+            tables = client.get_tables(include_schema=True)
+        finally:
+            spark.catalog.dropTempView("my-view")
+        names = tables.column("table_name").to_pylist()
+        row = names.index("my-view")
+        schema = decode_schema_bytes(tables.column("table_schema")[row].as_py())
+        assert schema.names == ["dash_col"]
+
+    def test_base_table_beside_same_named_temp_view(self, spark, client, tmp_path):
+        spark.sql(
+            "CREATE TABLE default.shadow (tid INT, other STRING) USING parquet "
+            f"LOCATION '{tmp_path}/shadow'"
+        )
+        spark.sql("SELECT 1 AS only_col").createOrReplaceTempView("shadow")
+        try:
+            tables = client.get_tables(
+                table_name_filter_pattern="shadow", include_schema=True
+            )
+        finally:
+            spark.catalog.dropTempView("shadow")
+            spark.sql("DROP TABLE default.shadow")
+        schemas = {
+            (ns, kind): decode_schema_bytes(blob).names
+            for ns, kind, blob in zip(
+                tables.column("db_schema_name").to_pylist(),
+                tables.column("table_type").to_pylist(),
+                tables.column("table_schema").to_pylist(),
+            )
+        }
+        assert schemas == {
+            ("default", "BASE TABLE"): ["tid", "other"],
+            (None, "TEMPORARY"): ["only_col"],
+        }
+
+
+class TestDeclaredSchemaOncePerDoGet:
+    def test_statement_do_get_derives_schema_once(self, client, monkeypatch):
+        from datafusion_flight_sql_server_spark.plans import schema as schema_mod
+        from datafusion_flight_sql_server_spark.protocol.flightsql import (
+            CommandStatementQuery,
+        )
+        from datafusion_flight_sql_server_spark.server import service
+
+        info = client.flight_info(CommandStatementQuery(query="SELECT * FROM users"))
+        calls = []
+        derive = schema_mod.arrow_schema_for_df
+
+        def _count(*a, **k):
+            calls.append(1)
+            return derive(*a, **k)
+
+        monkeypatch.setattr(schema_mod, "arrow_schema_for_df", _count)
+        monkeypatch.setattr(service, "arrow_schema_for_df", _count)
+        assert client.do_get(info.endpoints[0].ticket).num_rows == 3
+        assert len(calls) == 1
 
 
 class TestSchemaMetadata:
@@ -803,7 +867,10 @@ class TestSingleEndpointServing:
             ex = FlightSQLExecutor(f"grpc://localhost:{server.port}")
             try:
                 barrier.wait()
-                results[i] = ex.execute(self.SQL).column("id").to_pylist()
+                # a distinct (always-true) filter per stream: identical
+                # statements could be served from the result cache
+                sql = f"{self.SQL} WHERE id >= -{i}"
+                results[i] = ex.execute(sql).column("id").to_pylist()
             except Exception as exc:  # pragma: no cover
                 errors.append(exc)
             finally:
@@ -1049,8 +1116,12 @@ class TestMixedTrafficSoak:
             }
 
         def role_stream(ex, i, t):
+            # distinct per thread and round, so every stream pulls from
+            # Spark instead of the result cache
             info = ex.flight_info(
-                CommandStatementQuery(query="SELECT id FROM soak_wide")
+                CommandStatementQuery(
+                    query=f"SELECT id FROM soak_wide WHERE id >= -{t * iters + i}"
+                )
             )
             assert len(info.endpoints) == 1
             total, count = 0, 0

@@ -487,6 +487,19 @@ class TestJvmArrowPath:
         assert len(row_path) == 1
         assert table.column("id").to_pylist() == list(range(50))
 
+    def test_row_fallback_logs_the_conversion_error(self, spark, caplog):
+        engine = Engine(spark)
+        df = spark.range(0, 5, 1, 1).selectExpr(
+            "id", "named_struct('a', id, 'a', id + 1) AS st"
+        )
+        with caplog.at_level("WARNING", logger="datafusion_flight_sql_server_spark"):
+            table = pa.Table.from_batches(list(engine.execute_stream(df)))
+        assert table.num_rows == 5
+        warnings = [r for r in caplog.records if r.levelname == "WARNING"]
+        assert len(warnings) == 1
+        assert "row at a time" in warnings[0].getMessage()
+        assert "DUPLICATED_FIELD_NAME_IN_ARROW_STRUCT" in warnings[0].getMessage()
+
     def test_runtime_error_surfaces_without_row_path(self, spark):
         # Only the job-free schema conversion may fall back: a query that
         # fails at run time raises its own error and is not re-run on the
