@@ -18,20 +18,16 @@ datafusion-flight-sql-server/src/service.rs:153-191):
 from __future__ import annotations
 
 import functools
-import logging
 import os
 import re
 import threading
 from collections import OrderedDict, deque
-from typing import NamedTuple
 from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_flight_sql_server_spark.plans.gate import SQLOptions
 from datafusion_flight_sql_server_spark.plans.params import bind_sql
-
-_log = logging.getLogger(__name__)
 
 
 class Engine:
@@ -137,12 +133,12 @@ class Engine:
         ``toLocalIterator`` does: at local job-launch latency (~100 ms) a
         32-partition result paid ~3 s of pure scheduling — measured 40x
         the cost of the query itself on a small result (round-6 serving
-        profile; the whole prepared-statement round trip was 3.2 s). A
-        1-partition probe gives low first-byte latency, then groups grow
-        x4 while pulled bytes stay small — so job count is O(log n) on
-        small results. Growth is bounded by OBSERVED batch sizes: every
-        group is capped so group x 2 x largest-batch-seen fits the 128 MB
-        budget, and every sized group reserves from the shared
+        profile; the whole prepared-statement round trip was 3.2 s). The
+        first group is one partition, for low first-byte latency, then
+        groups grow while pulled bytes stay small — so job count is
+        O(log n) on small results. Growth is bounded by OBSERVED batch
+        sizes: every group is capped so group x 2 x largest-batch-seen
+        fits the 128 MB budget, and every group reserves from the shared
         ``_PULL_POOL`` (see ``_grouped_pull``).
 
         Spark Connect (no ``_jdf``) has no JVM handle, so executors encode
@@ -151,14 +147,11 @@ class Engine:
         one-job-per-partition loop: the Connect server executes the plan
         once and streams result batches over gRPC, with client-side
         prefetch bounding driver memory.
-        The row-at-a-time fallback is reserved for plans whose types cannot
-        pass Spark's Arrow conversion at all. On a classic session that is
-        decided by the JVM's schema conversion alone, before any job runs,
-        so a runtime query error (``DIVIDE_BY_ZERO`` under ANSI) surfaces
-        as itself instead of re-running the query on the row path. Connect
-        has no job-free schema step: it probes through empty partitions to
-        the FIRST NON-EMPTY pull inside its try scope, since a conversion
-        failure only surfaces when a batch is actually converted.
+
+        A result whose types cannot cross Spark's Arrow conversion (struct
+        fields with duplicate names) raises Spark's own error, as
+        ``DataFrame.toArrow()`` does; on a classic session it does so
+        before any Spark job runs.
 
         **Result reuse** (classic sessions only): a repeated deterministic
         statement over local files is served from ``_RESULT_CACHE``
@@ -201,82 +194,27 @@ class Engine:
 
     def _execute_stream_classic(self, df: DataFrame, schema):
         """Classic stream: Spark's JVM Arrow batches, pulled in groups."""
-        try:
-            jvm_schema = _jvm_arrow_schema(df)
-        except Exception as exc:
-            _log.warning(
-                "result types cannot cross Spark's Arrow conversion; "
-                "streaming row at a time: %s",
-                exc,
-            )
-            yield from self._execute_stream_rows(df, schema)
-            return
-
-        # Probe to the first non-empty pull: empty partitions yield no
-        # batches. Probe groups stay small (<=8) — they are sized blind,
-        # before any byte observation exists. The probe does NOT draw from
-        # _PULL_POOL: with no observation there is nothing to account, and
-        # an 8-partition probe is the same exposure class as
-        # toLocalIterator's single-partition pull; every sized pull after
-        # it reserves from the shared pool.
+        jvm_schema = _jvm_arrow_schema(df)
         jrdd = df._jdf.toArrowBatchRdd().toJavaRDD()
-        n_parts = jrdd.getNumPartitions()
-        puller = _ArrowBatchPuller(df.sparkSession.sparkContext)
-        probe: list = []
-        probed = 0
-        group = 1
-        while probed < n_parts and not probe:
-            parts = list(range(probed, min(probed + group, n_parts)))
-            probe.extend(puller.runJob(jrdd, list, parts))
-            probed += len(parts)
-            group = min(group * 2, 8)
-
-        def _blobs():
-            yield from probe
-            max_part = max([len(r.ipc) for r in probe] or [1 << 20])
-            yield from _grouped_pull(
-                puller,
-                jrdd,
-                list(range(probed, n_parts)),
-                max_part,
-                observed=max(probed, 1),
-            )
-
-        yield from _decode_jvm_batches(_blobs(), jvm_schema, schema)
+        payloads = _grouped_pull(
+            _ArrowBatchPuller(df.sparkSession.sparkContext),
+            jrdd,
+            range(jrdd.getNumPartitions()),
+            max_part=1 << 20,
+            group=1,
+            observed=0,
+        )
+        yield from _decode_jvm_batches(payloads, jvm_schema, schema)
 
     def _execute_stream_connect(self, df: DataFrame, schema):
         """Spark Connect stream: executor-encoded IPC blobs through
-        ``toLocalIterator``; only an Arrow-conversion failure before the
-        first blob drops to the row path."""
+        ``toLocalIterator``."""
         import pyarrow as pa
 
-        try:
-            ipc_df = df.mapInArrow(_make_ipc_encoder(), "ipc binary")
-            it = ipc_df.toLocalIterator(prefetchPartitions=True)
-            head = next(it, None)  # reads through empty partitions
-        except Exception:
-            yield from self._execute_stream_rows(df, schema)
-            return
-        rows = iter(()) if head is None else _chain_row(head, it)
+        ipc_df = df.mapInArrow(_make_ipc_encoder(), "ipc binary")
+        rows = ipc_df.toLocalIterator(prefetchPartitions=True)
         batches = (b for row in rows for b in pa.ipc.open_stream(row.ipc))
         yield from _as_declared(batches, schema)
-
-    def _execute_stream_rows(self, df: DataFrame, schema):
-        """Row-at-a-time fallback for plans whose types can't cross Spark's
-        Arrow boundary (rare; same bounded-memory contract, slower). Cuts
-        batches by the same ``maxRecordsPerBatch`` conf (<= 0: unlimited)."""
-        import pyarrow as pa
-
-        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        limit = int(df.sparkSession.conf.get(conf))
-        buf: list[dict] = []
-        for row in df.toLocalIterator(prefetchPartitions=True):
-            buf.append(row.asDict(recursive=True))
-            if len(buf) == limit:
-                yield pa.RecordBatch.from_pylist(buf, schema=schema)
-                buf = []
-        if buf:
-            yield pa.RecordBatch.from_pylist(buf, schema=schema)
 
     def new_session(self) -> "Engine":
         """Per-request isolated session (shared JVM/catalog, own temp views).
@@ -570,11 +508,6 @@ class Engine:
             )
         raise KeyError(rel)
 
-    def table_schema(self, table: str):
-        """Schema probe used by the federation client (parity:
-        table-provider/src/lib.rs:91-101 — ``select * from {t} limit 1``)."""
-        return self.spark.sql(f"SELECT * FROM {table} LIMIT 1").schema
-
     def table_arrow_schema(self, name: str, namespace: str | None = None):
         """Arrow schema of a listed table (GetTables include_schema path,
         service.rs:689-691), resolved as ``namespace``.``name`` or, with no
@@ -629,12 +562,6 @@ def _sql_like(value: str, pattern: str) -> bool:
         else:
             out.append(re.escape(ch))
     return re.fullmatch("".join(out), value) is not None
-
-
-def _chain_row(head, rest):
-    """Re-attach the probed first row to the remaining iterator."""
-    yield head
-    yield from rest
 
 
 # Driver-memory budget per result-pull GROUP of ``_grouped_pull``.
@@ -956,10 +883,13 @@ _RESULT_CACHE = _ResultCache(
 
 
 def _grouped_pull(
-    sc, rdd, parts: list, max_part: int, group: int = 4, observed: int = 1
+    sc, rdd, parts, max_part: int, group: int = 4, observed: int = 1
 ):
     """Pull ``parts`` of ``rdd`` in adaptively-growing ``sc.runJob`` groups
-    (``execute_stream``, where ``sc`` is the ``_ArrowBatchPuller``).
+    and yield the pulled payloads (``execute_stream``, where ``sc`` is the
+    ``_ArrowBatchPuller`` and each payload is one serialized batch, sized
+    with ``len``). ``execute_stream`` starts at ``group=1, observed=0``:
+    groups of 1, 2, 4, 8, 16… partitions while pulls stay small.
 
     Every group is capped so group x 2 x largest-partition-OBSERVED fits
     the 128 MB budget: expected group bytes stay under half the budget.
@@ -989,15 +919,15 @@ def _grouped_pull(
         # on the driver; held until downstream consumed the group
         take = _PULL_POOL.acquire(min(2 * max_part * len(chunk), budget))
         try:
-            rows = sc.runJob(rdd, list, chunk)
-            yield from rows
+            payloads = sc.runJob(rdd, list, chunk)
+            yield from payloads
         finally:
             _PULL_POOL.release(take)
         start += len(chunk)
         observed += len(chunk)
-        nbytes = sum(len(r.ipc) for r in rows)
-        if rows:
-            max_part = max(max_part, max(len(r.ipc) for r in rows))
+        sizes = [len(payload) for payload in payloads]
+        nbytes = sum(sizes)
+        max_part = max([max_part, *sizes])
         if nbytes > budget:
             group = 1
         elif nbytes < (32 << 20):
@@ -1050,12 +980,6 @@ def _jvm_arrow_schema(df):
     return pa.ipc.read_schema(pa.py_buffer(jschema.serializeAsMessage()))
 
 
-class _Blob(NamedTuple):
-    """One serialized Arrow payload pulled to the driver."""
-
-    ipc: bytes
-
-
 class _ArrowBatchPuller:
     """Pulls partitions of the JVM Arrow batch RDD straight to the driver.
 
@@ -1064,7 +988,7 @@ class _ArrowBatchPuller:
     runs in a Python worker and nothing is pickled. ``runJob`` takes the
     arguments of the ``SparkContext.runJob(rdd, list, parts)`` calls that
     ``_grouped_pull`` makes, so the grouping policy drives it unchanged;
-    ``func`` runs on the driver over the pulled ``_Blob``s."""
+    ``func`` runs on the driver over the pulled payloads (``bytes``)."""
 
     def __init__(self, sc) -> None:
         self._sc = sc
@@ -1074,17 +998,17 @@ class _ArrowBatchPuller:
         from pyspark.util import _load_from_socket
 
         sc = self._sc
-        sock_info = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), jrdd, parts)
-        return func(_Blob(b) for b in _load_from_socket(sock_info, NoOpSerializer()))
+        sock_info = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), jrdd, list(parts))
+        return func(_load_from_socket(sock_info, NoOpSerializer()))
 
 
-def _decode_jvm_batches(blobs, jvm_schema, schema):
+def _decode_jvm_batches(payloads, jvm_schema, schema):
     """Decode pulled JVM record batches against the schema the JVM encoded
     them with, then hand them on as declared (``_as_declared``)."""
     import pyarrow as pa
 
     batches = (
-        pa.ipc.read_record_batch(pa.py_buffer(b.ipc), jvm_schema) for b in blobs
+        pa.ipc.read_record_batch(pa.py_buffer(p), jvm_schema) for p in payloads
     )
     return _as_declared(batches, schema)
 

@@ -14,7 +14,10 @@ the formatted plan.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 #: Driver-generated tables (TESTDATA.md), one parquet file per table.
 TABLES = (
@@ -61,7 +64,6 @@ def _nanos_ts_columns(path: str) -> set[str]:
     """
     try:
         import pyarrow.parquet as pq
-        import pyarrow as pa
 
         schema = pq.read_schema(path)
         return {
@@ -108,7 +110,6 @@ def _fix_nanos_ts(df: DataFrame, nanos_cols: set[str]) -> DataFrame:
     engines see identical microsecond values.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     for field in df.schema.fields:
         if field.name in nanos_cols and isinstance(field.dataType, T.LongType):
@@ -129,7 +130,6 @@ def _fix_ntz_ts(df: DataFrame) -> DataFrame:
     DuckDB reads from the same file.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     for field in df.schema.fields:
         if isinstance(field.dataType, T.TimestampNTZType):
@@ -167,9 +167,16 @@ def register_memtable(
 
     Parity with ``MemTable`` registration (reference:
     tests/integration_test.rs:34-35,53-55). ``schema`` is a Spark StructType
-    or DDL string.
+    or DDL string. The rows reach Spark as one Arrow table, which plans as a
+    ``LocalRelation`` (a Python list plans as a scan of pickled rows), so
+    the engine's result cache can reuse statements over the table.
     """
-    df = spark.createDataFrame(data, schema=schema)
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = [pa.array([row[i] for row in data], f.type) for i, f in enumerate(arrow)]
+    table = pa.Table.from_arrays(columns, schema=arrow)
+    df = spark.createDataFrame(table, schema=schema)
     df.createOrReplaceTempView(name)
     return df
 

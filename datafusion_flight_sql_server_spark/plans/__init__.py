@@ -5,7 +5,6 @@ from datafusion_flight_sql_server_spark.plans.params import (
     bind_sql,
 )
 from datafusion_flight_sql_server_spark.plans.schema import (
-    schema_for_plan,
     arrow_schema_for_df,
     parameter_schema_for_sql,
     qualifier_metadata,
@@ -17,7 +16,6 @@ __all__ = [
     "normalize_placeholders",
     "record_batch_to_params",
     "bind_sql",
-    "schema_for_plan",
     "arrow_schema_for_df",
     "parameter_schema_for_sql",
     "qualifier_metadata",

@@ -24,25 +24,10 @@ import re
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from datafusion_flight_sql_server_spark.plans.gate import is_pure_query
 from datafusion_flight_sql_server_spark.plans.params import placeholder_names
-
-try:  # pyspark's canonical Spark→Arrow type mapping
-    from pyspark.sql.pandas.types import to_arrow_schema as _to_arrow_schema
-except ImportError:  # pragma: no cover
-    _to_arrow_schema = None
-
-
-def schema_for_plan(spark: SparkSession, sql: str) -> T.StructType:
-    """Analyzed result schema for ``sql`` — planning only, no job runs.
-
-    Parity with ``get_schema_for_plan`` (reference: service.rs:1032-1043):
-    the reference derives the schema from ``LogicalPlan::schema()``;
-    ``DataFrame.schema`` is the same analysis-only operation in Spark.
-    """
-    return spark.sql(sql).schema
 
 
 def arrow_schema_for_df(df: DataFrame, with_table_metadata: bool = False) -> pa.Schema:
@@ -55,10 +40,7 @@ def arrow_schema_for_df(df: DataFrame, with_table_metadata: bool = False) -> pa.
     Arrow export never emits dictionary-encoded fields, so no hydration pass
     is needed (declared divergence, SURVEY.md §4).
     """
-    if _to_arrow_schema is not None:
-        schema = _to_arrow_schema(df.schema)
-    else:  # pragma: no cover - fallback via an empty collect
-        schema = df.limit(0).toArrow().schema
+    schema = to_arrow_schema(df.schema)
     if with_table_metadata:
         quals = qualifier_metadata(df)
         fields = []
@@ -175,10 +157,8 @@ def _infer_types_from_context(
             schema = spark.table(tbl).schema
         except Exception:
             continue
-        if _to_arrow_schema is not None:
-            arrow = _to_arrow_schema(schema)
-            for f in arrow:
-                col_types.setdefault(f.name.lower(), f.type)
+        for f in to_arrow_schema(schema):
+            col_types.setdefault(f.name.lower(), f.type)
     for name in names:
         pat_b = re.compile(_CMP_BEFORE.pattern.format(name=re.escape(name)))
         pat_a = re.compile(_CMP_AFTER.pattern.format(name=re.escape(name)))

@@ -62,6 +62,9 @@ Declared divergences (client-compat debugging starts here):
   or session function, and reads only local files, inline rows or
   ``range``. Results over 4 MB are never kept, and 32 MB in total; a DDL,
   DML or command statement through the gate clears the cache.
+- **Duplicate struct field names**: Arrow cannot carry them, so DoGet
+  rejects such a result with Spark's ``DUPLICATED_FIELD_NAME_IN_ARROW_STRUCT``,
+  as ``DataFrame.toArrow()`` does.
 - **Dictionary hydration** (service.rs:1072-1083): the reference re-encodes
   dictionary-encoded result fields to their value types before shipping
   ("hydration"). Spark's Arrow export never emits dictionary-encoded

@@ -32,6 +32,16 @@ from datafusion_flight_sql_server_spark.server.service import decode_schema_byte
 from tests.test_protocol import TRUNCATED_TAILS
 
 
+def _newest_job(spark) -> int:
+    """Id of the newest job (-1 before any), once the listener bus has
+    delivered every event so far. The status store keeps only the last
+    ``spark.ui.retainedJobs`` jobs, so a count of them can fall while jobs
+    run; the newest id only grows."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
 def _register_fixtures(spark):
     # integration_test.rs:17-58 fixtures
     register_memtable(
@@ -95,7 +105,9 @@ class TestIntegration:
         # EXPLAIN is read-only introspection: DataFusion's verify_plan
         # admits Explain plans under deny-all SQLOptions, and so does this
         # gate (ExplainCommand matches no DDL/DML/statement fragment)
-        t = client.execute("EXPLAIN SELECT id FROM users WHERE id > 1")
+        # (over range: a filter over an inline table such as users is
+        # folded into its LocalTableScan)
+        t = client.execute("EXPLAIN SELECT id FROM range(10) WHERE id > 1")
         assert t.num_rows >= 1
         # real plan text must come back, not an empty command result
         text = "\n".join(t.column(0).to_pylist())
@@ -716,21 +728,15 @@ class TestSingleEndpointServing:
             CommandStatementQuery,
         )
 
-        jsc = spark.sparkContext._jsc.sc()
-
-        def jobs() -> int:
-            jsc.listenerBus().waitUntilEmpty()
-            return jsc.statusStore().jobsList(None).size()
-
         ex = FlightSQLExecutor(f"grpc://localhost:{server.port}")
         try:
-            before = jobs()
+            before = _newest_job(spark)
             info = ex.flight_info(
                 CommandStatementQuery(
                     query="SELECT grp, count(*) AS c FROM wide_result GROUP BY grp"
                 )
             )
-            assert jobs() == before
+            assert _newest_job(spark) == before
             assert len(info.endpoints) == 1
             # the shuffle runs once the endpoint is read
             merged = ex.do_get(info.endpoints[0].ticket)
@@ -738,7 +744,7 @@ class TestSingleEndpointServing:
             ex.close()
         assert merged.num_rows == 97
         assert sum(merged.column("c").to_pylist()) == self.N
-        assert jobs() > before
+        assert _newest_job(spark) > before
 
     def test_statement_ticket_replayable(self, server, wide_view):
         # the ticket carries the whole command, so a client may re-read it
@@ -927,6 +933,117 @@ class TestSingleEndpointServing:
             srv.shutdown()
         assert got.schema.equals(want.schema)
         assert got.sort_by("id").combine_chunks().equals(want)
+
+
+#: One column of each Spark 4.1 result type, over two partitions.
+_TYPE_SWEEP = {
+    "int": "CAST(id AS INT)",
+    "decimal_38_10": "CAST(id / 7 AS DECIMAL(38, 10))",
+    "timestamp": "timestamp_micros(id * 1000003)",
+    "timestamp_ntz": "CAST(timestamp_micros(id * 1000003) AS TIMESTAMP_NTZ)",
+    "time": "make_time(12, CAST(id AS INT), 56.5)",
+    "day_time_interval": "make_dt_interval(id, 2, 3, 4.5)",
+    "calendar_interval": "make_interval(0, 0, 0, CAST(id AS INT), 0, 0, 0)",
+    "year_month_interval": "make_ym_interval(1, CAST(id AS INT))",
+    "variant": "parse_json(concat('{\"a\": ', id, '}'))",
+    "map": "map('k', id)",
+    "array_of_struct": "array(named_struct('a', id, 'b', CAST(id AS STRING)))",
+    "null": "NULL",
+    "binary": "CAST(CAST(id AS STRING) AS BINARY)",
+    "char": "CAST(CAST(id AS STRING) AS CHAR(5))",
+    "duplicate_struct_fields": "named_struct('a', id, 'a', id + 1)",
+    "duplicate_struct_fields_in_array": "array(named_struct('a', id, 'a', id + 1))",
+}
+_FLIGHT_INFO_ERRORS = {
+    "calendar_interval": "UNSUPPORTED_DATA_TYPE_FOR_ARROW_CONVERSION",
+    "year_month_interval": "UNSUPPORTED_DATA_TYPE_FOR_ARROW_CONVERSION",
+}
+_DO_GET_ERRORS = {
+    "duplicate_struct_fields": "DUPLICATED_FIELD_NAME_IN_ARROW_STRUCT",
+    "duplicate_struct_fields_in_array": "DUPLICATED_FIELD_NAME_IN_ARROW_STRUCT",
+}
+
+
+class TestResultTypeSweep:
+    """Every result type either streams over a real GetFlightInfo and
+    DoGet exactly as ``DataFrame.toArrow()`` returns it, or fails with
+    Spark's named condition: the two interval types at GetFlightInfo,
+    whose Arrow type mapping refuses them, and structs with duplicate
+    field names at DoGet, before any Spark job, as ``toArrow()`` refuses
+    them too."""
+
+    @pytest.fixture(scope="class")
+    def typed(self, spark):
+        session = spark.newSession()
+        session.conf.set("spark.sql.timeType.enabled", "true")  # off by default
+        srv = FlightSqlServer(Engine(session), location="grpc://0.0.0.0:0")
+        threading.Thread(target=srv.serve, daemon=True).start()
+        ex = FlightSQLExecutor(f"grpc://localhost:{srv.port}")
+        yield session, ex
+        ex.close()
+        srv.shutdown()
+
+    @pytest.mark.parametrize("kind", list(_TYPE_SWEEP))
+    def test_streams_as_to_arrow_or_names_its_error(self, typed, kind):
+        from datafusion_flight_sql_server_spark.protocol.flightsql import (
+            CommandStatementQuery,
+        )
+
+        session, ex = typed
+        sql = f"SELECT id, {_TYPE_SWEEP[kind]} AS v FROM range(0, 5, 1, 2)"
+        command = CommandStatementQuery(query=sql)
+        if kind in _FLIGHT_INFO_ERRORS:
+            with pytest.raises(fl.FlightError, match=_FLIGHT_INFO_ERRORS[kind]):
+                ex.flight_info(command)
+            return
+        info = ex.flight_info(command)
+        if kind in _DO_GET_ERRORS:
+            before = _newest_job(session)
+            with pytest.raises(fl.FlightError, match=_DO_GET_ERRORS[kind]):
+                ex.do_get(info.endpoints[0].ticket)
+            assert _newest_job(session) == before
+            with pytest.raises(Exception, match=_DO_GET_ERRORS[kind]):
+                session.sql(sql).toArrow()
+            return
+        got = ex.do_get(info.endpoints[0].ticket)
+        assert got.schema.equals(info.schema)
+        assert got.equals(session.sql(sql).toArrow())
+
+
+class TestDuplicateFieldNames:
+    def test_do_get_fails_before_any_job_and_keeps_serving(self, spark, client):
+        # Arrow structs cannot carry duplicate field names: the DoGet names
+        # Spark's condition, starts no job, leaves the pull pool whole,
+        # and the same server answers the next statement
+        from datafusion_flight_sql_server_spark.engine import core
+
+        before = _newest_job(spark)
+        condition = "DUPLICATED_FIELD_NAME_IN_ARROW_STRUCT"
+        with pytest.raises(fl.FlightError, match=condition):
+            client.execute(
+                "SELECT id, named_struct('a', id, 'a', id + 1) AS s "
+                "FROM range(0, 50, 1, 2)"
+            )
+        assert _newest_job(spark) == before
+        assert core._PULL_POOL._avail == core._PULL_POOL.total
+        table = client.execute("SELECT id FROM users ORDER BY id")
+        assert table.column("id").to_pylist() == [1, 2, 3]
+
+
+class TestMemtableReuse:
+    def test_repeated_memtable_statement_hits_the_cache(self, client):
+        # memtables plan as LocalRelations, which the result cache reuses
+        from datafusion_flight_sql_server_spark.engine import core
+
+        sql = "SELECT id, name FROM users WHERE id > 1 ORDER BY id"
+        before = core._RESULT_CACHE.stats()
+        first = client.execute(sql)
+        second = client.execute(sql)
+        after = core._RESULT_CACHE.stats()
+        assert after["hits"] - before["hits"] == 1
+        assert after["bypasses"]["leaf"] == before["bypasses"]["leaf"]
+        assert first.column("name").to_pylist() == ["Bob", "Charlie"]
+        assert second.equals(first)
 
 
 class _TwoEndpointServer(FlightSqlServer):

@@ -283,17 +283,9 @@ class TestExecuteStream:
         table = pa.Table.from_batches(batches)
         assert table.column("name").to_pylist() == ["Alice", "Bob", "Charlie"]
 
-    def test_arrow_path_engaged(self, spark, monkeypatch):
-        # The serving hot path must be the executor-side IPC encode
-        # (mapInArrow), never the row-at-a-time fallback: poison the
-        # fallback and stream a multi-partition, multi-type result.
+    def test_arrow_path_engaged(self, spark):
+        # A multi-partition, multi-type result streams as Arrow batches.
         engine = Engine(spark)
-
-        def _boom(*a, **k):
-            raise AssertionError("row-at-a-time fallback used on Arrow-able plan")
-            yield  # pragma: no cover
-
-        monkeypatch.setattr(engine, "_execute_stream_rows", _boom)
         df = spark.range(0, 20_000, 1, 4).selectExpr(
             "id",
             "cast(id as double) AS d",
@@ -312,20 +304,10 @@ class TestExecuteStream:
         df = spark.range(10).where("id < 0")
         assert list(engine.execute_stream(df)) == []
 
-    def test_probe_reads_through_empty_leading_partitions(
-        self, spark, monkeypatch
-    ):
-        # A selective filter often leaves partition 0 empty; the probe must
-        # read through empties to the first non-empty pull (the round-6
-        # continuation review fix: a [0]-only probe proved nothing about
-        # the Arrow path and mis-sized the group loop).
+    def test_probe_reads_through_empty_leading_partitions(self, spark):
+        # A selective filter often leaves partition 0 empty; the grouped
+        # pull must read through empties to the rows behind them.
         engine = Engine(spark)
-
-        def _boom(*a, **k):
-            raise AssertionError("fallback used on Arrow-able plan")
-            yield  # pragma: no cover
-
-        monkeypatch.setattr(engine, "_execute_stream_rows", _boom)
         df = spark.range(0, 100, 1, 8).where("id >= 90")
         batches = list(engine.execute_stream(df))
         assert sorted(
@@ -334,11 +316,10 @@ class TestExecuteStream:
 
     def test_rddless_session_streams_arrow_not_rows(self, spark, monkeypatch):
         # Spark Connect has no JVM handle: the stream must take the Arrow
-        # toLocalIterator path, NOT the row-at-a-time decode (Connect once
-        # silently degraded to rows). The simulation removes the classic
-        # entry (``_jdf``, which a Connect DataFrame refuses with an
-        # AttributeError) and spies on toLocalIterator to prove that
-        # branch ran.
+        # toLocalIterator path (Connect once silently degraded to rows).
+        # The simulation removes the classic entry (``_jdf``, which a
+        # Connect DataFrame refuses with an AttributeError) and spies on
+        # toLocalIterator to prove that branch ran.
         engine = Engine(spark)
         local_iters = []
         classic = type(spark.range(1))
@@ -349,12 +330,6 @@ class TestExecuteStream:
             return to_local_iterator(self, *a, **k)
 
         monkeypatch.setattr(classic, "toLocalIterator", _spy)
-
-        def _boom(*a, **k):
-            raise AssertionError("row-at-a-time fallback used")
-            yield  # pragma: no cover
-
-        monkeypatch.setattr(engine, "_execute_stream_rows", _boom)
         df = _ConnectLike(
             spark.range(0, 5_000, 1, 4).selectExpr("id", "cast(id as string) AS s")
         )
@@ -387,20 +362,18 @@ def _poison(*a, **k):
 
 class TestJvmArrowPath:
     """Classic sessions stream Spark's JVM-encoded Arrow batches: no
-    ``mapInArrow`` encoder and no row fallback on Arrow-able plans."""
+    ``mapInArrow`` encoder."""
 
     @pytest.fixture
     def engine(self, spark, monkeypatch):
         from datafusion_flight_sql_server_spark.engine import core
 
         monkeypatch.setattr(core, "_make_ipc_encoder", _poison)
-        engine = Engine(spark)
-        monkeypatch.setattr(engine, "_execute_stream_rows", _poison)
-        return engine
+        return Engine(spark)
 
     @pytest.fixture
     def pulls(self, monkeypatch):
-        """Partition lists of every JVM pull (probe and grouped pulls)."""
+        """Partition lists of every JVM pull, one per grouped pull."""
         from datafusion_flight_sql_server_spark.engine import core
 
         calls = []
@@ -443,7 +416,7 @@ class TestJvmArrowPath:
         batches = list(engine.execute_stream(df))
         keys = [v for b in batches for v in b.column("k").to_pylist()]
         assert keys == list(range(15_999, -1, -1))
-        # the probe plus at least three grouped pulls, in partition order
+        # at least four grouped pulls, in partition order
         assert len(pulls) >= 4
         assert [p for c in pulls for p in c] == list(range(16))
 
@@ -455,9 +428,9 @@ class TestJvmArrowPath:
         core._PULL_POOL = pool
         try:
             df = spark.range(0, 24_000, 1, 24).selectExpr("id", "id * 2 AS v")
-            # one batch per 1000-row partition: the first batch is the
-            # probe's, the second comes from the first pooled group, which
-            # holds its reservation while it streams
+            # one batch per 1000-row partition: the second batch comes
+            # from the second pooled group, which holds its reservation
+            # while it streams
             gen = engine.execute_stream(df)
             next(gen)
             next(gen)
@@ -468,45 +441,20 @@ class TestJvmArrowPath:
         finally:
             core._PULL_POOL = saved
 
-    def test_conversion_failure_before_first_batch_uses_row_path(self, spark):
-        # Arrow structs cannot carry duplicate field names: the JVM
-        # conversion fails before any batch, so the row path serves it.
-        engine = Engine(spark)
-        row_path = []
-        rows = engine._execute_stream_rows
-
-        def _spy(*a, **k):
-            row_path.append(a)
-            yield from rows(*a, **k)
-
-        engine._execute_stream_rows = _spy
+    def test_duplicate_field_names_raise_before_any_pull(self, spark, engine, pulls):
+        # Arrow structs cannot carry duplicate field names: Spark's own
+        # condition comes from the schema conversion, before any pull
         df = spark.range(0, 50, 1, 2).selectExpr(
             "id", "named_struct('a', id, 'a', id + 1) AS st"
         )
-        table = pa.Table.from_batches(list(engine.execute_stream(df)))
-        assert len(row_path) == 1
-        assert table.column("id").to_pylist() == list(range(50))
-
-    def test_row_fallback_logs_the_conversion_error(self, spark, caplog):
-        engine = Engine(spark)
-        df = spark.range(0, 5, 1, 1).selectExpr(
-            "id", "named_struct('a', id, 'a', id + 1) AS st"
-        )
-        with caplog.at_level("WARNING", logger="datafusion_flight_sql_server_spark"):
-            table = pa.Table.from_batches(list(engine.execute_stream(df)))
-        assert table.num_rows == 5
-        warnings = [r for r in caplog.records if r.levelname == "WARNING"]
-        assert len(warnings) == 1
-        assert "row at a time" in warnings[0].getMessage()
-        assert "DUPLICATED_FIELD_NAME_IN_ARROW_STRUCT" in warnings[0].getMessage()
+        with pytest.raises(Exception, match="DUPLICATED_FIELD_NAME_IN_ARROW_STRUCT"):
+            list(engine.execute_stream(df))
+        assert pulls == []
 
     def test_runtime_error_surfaces_without_row_path(self, spark):
-        # Only the job-free schema conversion may fall back: a query that
-        # fails at run time raises its own error and is not re-run on the
-        # row path, for a plain projection and a shuffle alike.
+        # A query that fails at run time raises its own error, for a plain
+        # projection and a shuffle alike.
         engine = Engine(spark)
-        row_path = []
-        engine._execute_stream_rows = lambda *a, **k: row_path.append(a) or iter(())
         session = spark.newSession()
         session.conf.set("spark.sql.ansi.enabled", "true")
         for sql in (
@@ -516,7 +464,6 @@ class TestJvmArrowPath:
         ):
             with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
                 list(engine.execute_stream(session.sql(sql)))
-        assert row_path == []
 
     @pytest.mark.parametrize(
         "sql, condition",
@@ -535,25 +482,20 @@ class TestJvmArrowPath:
     )
     def test_ansi_runtime_errors_keep_their_condition(self, spark, sql, condition):
         # every ANSI run-time failure, not only division, is the query's
-        # own error: its plan converts to Arrow, so the row path stays out
+        # own error
         engine = Engine(spark)
-        row_path = []
-        engine._execute_stream_rows = lambda *a, **k: row_path.append(a) or iter(())
         session = spark.newSession()
         session.conf.set("spark.sql.ansi.enabled", "true")
         with pytest.raises(Exception, match=condition):
             list(engine.execute_stream(session.sql(sql)))
-        assert row_path == []
 
     def test_error_in_pooled_group_returns_pull_pool(self, spark):
-        # the failing partition is the last of 24, so the probe's batches
-        # reach the consumer first and the error comes out of a pooled
-        # group pull, which must hand its reservation back
+        # the failing partition is the last of 24, so the first groups'
+        # batches reach the consumer first and the error comes out of a
+        # later pooled group pull, which must hand its reservation back
         from datafusion_flight_sql_server_spark.engine import core
 
         engine = Engine(spark)
-        row_path = []
-        engine._execute_stream_rows = lambda *a, **k: row_path.append(a) or iter(())
         session = spark.newSession()
         session.conf.set("spark.sql.ansi.enabled", "true")
         df = session.range(0, 24_000, 1, 24).selectExpr(
@@ -572,7 +514,6 @@ class TestJvmArrowPath:
         assert sum(seen) >= 1000
         assert pool.peak > 0
         assert pool._avail == pool.total and not pool._waiters
-        assert row_path == []
 
 
 class TestProbePoisoning:

@@ -778,7 +778,7 @@ def test_phase_split_merge_matches_single_phase(spark, rows):
 
 
 class _SizedIpc:
-    """A pulled blob of ``n`` bytes, without allocating them."""
+    """A pulled payload of ``n`` bytes, without allocating them."""
 
     def __init__(self, n: int):
         self.n = n
@@ -787,25 +787,27 @@ class _SizedIpc:
         return self.n
 
 
-class _SizedRow:
-    def __init__(self, n: int):
-        self.ipc = _SizedIpc(n)
-
-
 @given(
+    empty=st.integers(min_value=0, max_value=20),
     sizes=st.lists(
         st.integers(min_value=0, max_value=300 << 20), min_size=0, max_size=150
     ),
     max_part=st.integers(min_value=1, max_value=200 << 20),
-    observed=st.integers(min_value=1, max_value=8),
+    observed=st.integers(min_value=0, max_value=8),
 )
 @settings(max_examples=200, deadline=None)
-def test_grouped_pull_tiles_partitions_within_pool(sizes, max_part, observed):
-    """For ANY partition sizes (size cliffs included) and probe state: the
-    groups tile the partitions in order (no loss, no duplicate), no group
-    exceeds the 64-task cap or the observed+1 sample bound, every
-    reservation fits the pool, and the pool is whole again at the end."""
+def test_grouped_pull_tiles_partitions_within_pool(
+    empty, sizes, max_part, observed
+):
+    """For ANY partition sizes (size cliffs and ``empty`` leading empty
+    partitions included) and observation state (``observed=0`` is how
+    ``execute_stream`` starts): the groups tile the partitions in order
+    (no loss, no duplicate), no group exceeds the 64-task cap or the
+    observed+1 sample bound, every reservation fits the pool, and the
+    pool is whole again at the end."""
     from datafusion_flight_sql_server_spark.engine import core
+
+    sizes = [0] * empty + sizes
 
     calls: list = []
     held: list = []
@@ -814,7 +816,7 @@ def test_grouped_pull_tiles_partitions_within_pool(sizes, max_part, observed):
         def runJob(self, rdd, func, parts):
             calls.append(list(parts))
             held.append(pool.total - pool._avail)
-            return [_SizedRow(sizes[p]) for p in parts]
+            return [_SizedIpc(sizes[p]) for p in parts]
 
     pool = core._PullBudgetPool(core._PULL_POOL_TOTAL)
     saved = core._PULL_POOL

@@ -6,10 +6,13 @@ from __future__ import annotations
 
 import sys
 import threading
+from datetime import datetime
+from decimal import Decimal
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import types as T
 
 from datafusion_flight_sql_server_spark.client import FlightSQLExecutor
 from datafusion_flight_sql_server_spark.engine import core
@@ -50,10 +53,19 @@ def _run(engine: Engine, sql: str) -> pa.Table:
     return pa.Table.from_batches(list(engine.execute_stream(df)), schema=None)
 
 
+def _rdd_view(spark, name: str, rows: list, schema: str) -> None:
+    """A temp view over a Python RDD, which plans as a ``LogicalRDD``."""
+    rdd = spark.sparkContext.parallelize(rows, 1)
+    spark.createDataFrame(rdd, schema=schema).createOrReplaceTempView(name)
+
+
 def _jobs(spark) -> int:
-    jsc = spark.sparkContext._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    return jsc.statusStore().jobsList(None).size()
+    """Id of the newest job (-1 before any). The status store keeps only
+    the last ``spark.ui.retainedJobs`` jobs, so a count of them can fall
+    while jobs run; the newest id only grows."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
 
 
 class TestHit:
@@ -126,7 +138,7 @@ class TestMiss:
     )
     def test_not_reusable_statements_bypass(self, cache, engine, sql, reason):
         engine.spark.udf.register("plus_one", lambda x: x + 1, "int")
-        register_memtable(engine.spark, "mem", [(2,)], "m INT")
+        _rdd_view(engine.spark, "mem", [(2,)], "m INT")
         for _ in range(2):
             _run(engine, sql)
         stats = cache.stats()
@@ -136,7 +148,7 @@ class TestMiss:
     def test_flightsql_subquery_bypasses(self, spark, cache):
         from datafusion_flight_sql_server_spark.sources import FlightSQLDataSource
 
-        register_memtable(spark, "remote_m", [(2,)], "m INT NOT NULL")
+        _rdd_view(spark, "remote_m", [(2,)], "m INT NOT NULL")
         srv = FlightSqlServer(Engine(spark), location="grpc://127.0.0.1:0")
         threading.Thread(target=srv.serve, daemon=True).start()
         try:
@@ -288,3 +300,42 @@ def test_concurrent_identical_do_gets_are_exact(spark, cache, path):
     assert stats["bytes"] == sum(
         b.get_total_buffer_size() for b in next(iter(cache._lru)).batches
     )
+
+
+_MEMTABLE_ROWS = [
+    (1, "a", Decimal("1.50"), datetime(2024, 1, 2, 3, 4, 5), ["x", "y"]),
+    (2, None, None, None, None),
+]
+_MEMTABLE_STRUCT = T.StructType(
+    [
+        T.StructField("id", T.IntegerType(), False),
+        T.StructField("name", T.StringType(), True),
+        T.StructField("amount", T.DecimalType(10, 2), True),
+        T.StructField("ts", T.TimestampType(), True),
+        T.StructField("tags", T.ArrayType(T.StringType(), False), True),
+    ]
+)
+
+
+@pytest.mark.parametrize(
+    "schema",
+    [
+        _MEMTABLE_STRUCT,
+        "id INT NOT NULL, name STRING, amount DECIMAL(10,2), ts TIMESTAMP, "
+        "tags ARRAY<STRING>",
+    ],
+    ids=["struct_type", "ddl"],
+)
+def test_memtable_is_a_local_relation_with_the_row_schema(spark, schema):
+    # a memtable keeps the schema and rows a row-list construction gives,
+    # nullability included, and plans as the LocalRelation the result
+    # cache can reuse
+    df = register_memtable(spark, "mt_schema", _MEMTABLE_ROWS, schema)
+    rows = spark.createDataFrame(_MEMTABLE_ROWS, schema=schema)
+    try:
+        assert df.schema == rows.schema
+        assert df.collect() == rows.collect()
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+    finally:
+        spark.catalog.dropTempView("mt_schema")

@@ -21,7 +21,7 @@ MB = 1 << 20
 
 
 class _SizedBytes:
-    """len()-able stand-in for a large IPC blob without allocating it."""
+    """len()-able stand-in for a large IPC payload without allocating it."""
 
     def __init__(self, n: int):
         self.n = n
@@ -30,14 +30,9 @@ class _SizedBytes:
         return self.n
 
 
-class _FakeRow:
-    def __init__(self, n: int):
-        self.ipc = _SizedBytes(n)
-
-
 class _FakeSC:
     """Records the partition list of every runJob call; returns one fake
-    row per requested partition with the configured blob size."""
+    payload per requested partition with the configured size."""
 
     def __init__(self, sizes: list):
         self.sizes = sizes
@@ -45,7 +40,7 @@ class _FakeSC:
 
     def runJob(self, rdd, func, parts):
         self.calls.append(list(parts))
-        return [_FakeRow(self.sizes[p]) for p in parts]
+        return [_SizedBytes(self.sizes[p]) for p in parts]
 
 
 # -- _grouped_pull policy ----------------------------------------------------
@@ -53,7 +48,7 @@ class _FakeSC:
 
 class TestGroupedPull:
     def test_observed_plus_one_caps_first_group(self):
-        # With only the 1-partition probe observed, the first pull may not
+        # With only one partition observed, the first pull may not
         # exceed 2 partitions even though the default group is 4: the byte
         # cap's denominator must rest on a sample at least group-sized.
         sc = _FakeSC([1 * MB] * 12)
@@ -61,8 +56,8 @@ class TestGroupedPull:
         assert len(sc.calls[0]) == 2
 
     def test_probe_observation_carries_over(self):
-        # execute_stream passes observed=probed: a 5-partition probe
-        # licenses the full default group of 4 immediately.
+        # five partitions already observed license the full default
+        # group of 4 immediately.
         sc = _FakeSC([1 * MB] * 12)
         list(
             _grouped_pull(
@@ -290,13 +285,11 @@ class TestPullBudgetPool:
             core._PULL_POOL = saved
 
     def test_execute_stream_draws_from_shared_pool(self, spark):
-        """The serving path accounts its sized pulls against the shared
-        aggregate pool — only the blind <=8-partition probe is exempt
-        (documented)."""
+        """The serving path accounts every pull against the shared
+        aggregate pool."""
         from datafusion_flight_sql_server_spark.engine import core
 
         eng = Engine(spark)
-        # >8 partitions so pulls continue past the probe window
         df = spark.range(0, 200_000, 1, 24).selectExpr(
             "id", "CAST(id % 7 AS STRING) AS s"
         )
@@ -308,5 +301,5 @@ class TestPullBudgetPool:
         finally:
             core._PULL_POOL = saved
         assert total == 200_000
-        assert pool.peak > 0, "no post-probe pull reserved from the pool"
+        assert pool.peak > 0, "no pull reserved from the pool"
         assert pool.peak <= pool.total
