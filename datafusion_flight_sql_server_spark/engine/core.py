@@ -21,10 +21,12 @@ import functools
 import os
 import re
 import threading
+import time
 from collections import OrderedDict, deque
 from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import _parse_datatype_json_string
 
 from datafusion_flight_sql_server_spark.plans.gate import SQLOptions
 from datafusion_flight_sql_server_spark.plans.params import bind_sql
@@ -44,6 +46,9 @@ class Engine:
         # duplicate DESCRIBE.
         self._info_cols_memo: dict = {}
         self._info_defs_memo: dict = {}
+        # (session UUID, SQLConf, temp-view map) JVM handles for
+        # ``_memo_key``, read once: each is fixed for the session
+        self._jvm_handles = None
 
     # -- query lifecycle ----------------------------------------------------
 
@@ -51,30 +56,79 @@ class Engine:
         """Parse + analyze + gate. Lazy — no job is triggered.
 
         Parity: service.rs:170-175 (plan + ``SQLOptions::verify_plan``).
-        Every call re-plans, like the stateless reference. A statement the
-        gate classifies as DDL or command (only possible when the embedder
-        allowed those categories) invalidates the information_schema memo
-        BOTH before and after ``bind_sql`` — Spark executes DDL eagerly
-        inside ``spark.sql``, so a concurrent gRPC thread listing
-        information_schema.columns between the pre-invalidation and the
-        DDL's completion would otherwise re-memoize the PRE-DDL schema
-        under the same (catalog, namespace, name, type) key, which the
-        live-listing prune never evicts for in-place REPLACEs (ADVICE
-        r11). The post-invalidation runs in ``finally`` so a failed DDL
-        (which may have partially mutated the catalog) is covered too.
-        DML joins DDL and commands in clearing the result cache
-        (``execute_stream``) at the same two points."""
+        The gate runs on every call. A ``query`` statement is planned
+        once per catalog state: ``_PLAN_MEMO`` keeps its analyzed plan
+        under the session, SQL conf, text and exactly-typed parameters,
+        and a repeat whose session temp views and input files are
+        unchanged gets a fresh DataFrame (its own ``QueryExecution``)
+        over that plan instead of a new analysis (see ``_Plan``). A
+        statement the gate classifies as DDL or command (only possible
+        when the embedder allowed those categories) invalidates the
+        information_schema memo BOTH before and after ``bind_sql`` —
+        Spark executes DDL eagerly inside ``spark.sql``, so a concurrent
+        gRPC thread listing information_schema.columns between the
+        pre-invalidation and the DDL's completion would otherwise
+        re-memoize the PRE-DDL schema under the same (catalog,
+        namespace, name, type) key, which the live-listing prune never
+        evicts for in-place REPLACEs (ADVICE r11). The post-invalidation
+        runs in ``finally`` so a failed DDL (which may have partially
+        mutated the catalog) is covered too. DML joins DDL and commands
+        in clearing the plan memo and the result cache at the same two
+        points."""
+        key, live = self._memo_key(sql, params)
+        seen = _PLAN_MEMO.get(key)
+        memo = seen if seen is not None and seen.views.equals(live) else None
+        if memo is not None and memo.servable():
+            self.options.verify(self.spark, sql, category=memo.category)
+            _PLAN_MEMO.count("hits")
+            return memo.dataframe(self.spark)
         category = self.options.verify(self.spark, sql)
         mutates = category != "query"
         if mutates:
             self._invalidate(category)
+        elif key is not None:
+            # read before the bind: a view replaced while it runs then
+            # counts as changed at the next lookup
+            views, planned_ns = live.clone(), time.time_ns()
         try:
-            return bind_sql(self.spark, sql, params)
+            df = bind_sql(self.spark, sql, params)
         finally:
             if mutates:
                 self._invalidate(category)
+        if key is not None and not mutates:
+            _PLAN_MEMO.count("misses")
+            if memo is None or not memo.failed:
+                memo = _PLAN_MEMO.add(key, _Plan(category, df, views, planned_ns), seen)
+            df._plan_memo = memo
+        return df
+
+    def _memo_key(self, sql: str, params) -> tuple:
+        """(memo key, live temp-view map) of a classic session; (None,
+        None) without a JVM."""
+        handles = self._jvm_handles
+        if handles is None:
+            jsession = getattr(self.spark, "_jsparkSession", None)
+            if jsession is None:
+                return None, None
+            state = jsession.sessionState()
+            handles = self._jvm_handles = (
+                jsession.sessionUUID(),
+                state.conf(),
+                state.catalog().tempViews(),
+            )
+        uuid, conf, views = handles
+        key = (
+            uuid,
+            # the same set of confs prints in the same order (a different
+            # order would only cost a miss)
+            conf.getAllConfs().toString(),
+            sql,
+            _params_key(params),
+        )
+        return key, views
 
     def _invalidate(self, category: str) -> None:
+        _PLAN_MEMO.clear()
         _RESULT_CACHE.clear()
         if category != "dml":
             self.invalidate_info_schema_cache()
@@ -122,11 +176,12 @@ class Engine:
           schema (``large_string``/``large_binary`` under
           ``spark.sql.execution.arrow.useLargeVarTypes``).
         - **Bounded memory**: partitions are pulled in groups, so peak
-          driver memory is one group of serialized batches — a
-          1000-executor result streams through a bounded window instead of
+          driver memory is one group of serialized batches — a result of
+          many partitions streams through a bounded window instead of
           landing whole on the driver the way ``collect()``/``toArrow()``
-          would. Whole results of 4 MB or less may be retained for reuse,
-          32 MB across all of them (``_RESULT_CACHE``).
+          would (tested on ``local[N]``). Whole results of 4 MB or less
+          may be retained for reuse, 32 MB across all of them
+          (``_RESULT_CACHE``).
 
         The driver pulls partitions in ADAPTIVELY-GROWING GROUPS, one Spark
         job per group, rather than one job per partition the way
@@ -153,23 +208,24 @@ class Engine:
         ``DataFrame.toArrow()`` does; on a classic session it does so
         before any Spark job runs.
 
-        **Result reuse** (classic sessions only): a repeated deterministic
-        statement over local files is served from ``_RESULT_CACHE``
-        without starting a Spark job; the statement gate and bind still
-        ran for it in ``sql_to_plan``. A statement is reusable only when
-        its analyzed plan, subqueries included, is deterministic, holds
-        no UDF (``_UDF_PATTERNS``) and no clock or session function
-        (``current_timestamp``, ``current_user``, …), and every leaf is a
-        file scan (``HadoopFsRelation``), a ``LocalRelation``, a
-        ``OneRowRelation``, a ``Range`` or a reference to a CTE defined in
-        the same plan. The
-        key is the session, its SQL conf, the declared Arrow ``schema``,
-        the analyzed plan (bucketed by ``semanticHash``, confirmed by
-        ``sameResult``) and the path, size, ``mtime_ns`` and inode of
-        every input file; a non-``file:`` input is never reused. Only a
-        stream that ran to its end within 4 MB is admitted. An in-place
-        rewrite that keeps a file's size and inode within one tick of
-        the filesystem clock is not seen.
+        **Result reuse** (classic sessions only): a repeated statement
+        whose ``_PLAN_MEMO`` entry (``sql_to_plan``) is servable is
+        served from ``_RESULT_CACHE`` without starting a Spark job; the
+        gate still ran for it. Results are keyed by that entry and the
+        declared Arrow ``schema``. An entry stands for one session, SQL
+        conf, SQL text and parameter values over unchanged session temp
+        views and unchanged local input files and listed directories
+        (path, size, ``mtime_ns``, inode), so a result is only reused
+        while all of those hold. The plan must also be deterministic,
+        hold no UDF (``_UDF_PATTERNS``) and no clock or session function
+        (``current_timestamp``, ``current_user``, …), and every leaf must
+        be a file scan (``HadoopFsRelation``, not a catalog table), a
+        ``LocalRelation``, a ``OneRowRelation``, a ``Range`` or a
+        reference to a CTE defined in the same plan, reached directly or
+        through session temp views; a non-``file:`` input is never
+        reused. Only a stream that ran to its end within 4 MB is
+        admitted. An in-place rewrite that keeps a file's size and inode
+        within one tick of the filesystem clock is not seen.
 
         ``schema`` is the declared Arrow schema (``arrow_schema_for_df``);
         the service passes the one it already derived.
@@ -577,11 +633,14 @@ _PULL_BUDGET = 128 << 20
 _PULL_POOL_TOTAL = 512 << 20
 
 # Result reuse (``execute_stream``): bytes of retained Arrow buffers in
-# total and per entry, and an entry count, since every entry pins one
-# analyzed JVM plan for its ``sameResult`` check.
+# total and per entry, and an entry count, since every entry pins the
+# analyzed JVM plan of its ``_PLAN_MEMO`` entry.
 _RESULT_CACHE_BYTES = 32 << 20
 _RESULT_ENTRY_BYTES = 4 << 20
 _RESULT_CACHE_ENTRIES = 256
+# Plan reuse (``Engine.sql_to_plan``): memoized statements, each pinning
+# one analyzed JVM plan.
+_PLAN_MEMO_ENTRIES = 256
 
 
 class _PullBudgetPool:
@@ -668,40 +727,271 @@ _UDF_PATTERNS = (
 #: (``LogicalRelation`` over ``HadoopFsRelation``) are checked apart: their
 #: rows are fixed by the plan plus the stat of every input file.
 _PLAN_LEAVES = frozenset({"LocalRelation", "OneRowRelation", "Range", "CTERelationRef"})
-_BYPASS_REASONS = (
+#: Why a statement is planned afresh every time (``_PLAN_MEMO``) and its
+#: result never reused (``_RESULT_CACHE``).
+_PLAN_REASONS = (
     "not_deterministic",
     "udf",
-    "clock_function",
     "leaf",
+    "catalog",
     "non_local_file",
+    "changed",
+)
+_BYPASS_REASONS = (
+    *_PLAN_REASONS,
+    "clock_function",
+    "unplanned",
     "over_cap",
     "incomplete",
 )
+#: A directory listed for a plan must be older than the planning by this
+#: much: a file added while the statement was planned may be missing from
+#: its listing, and coarse filesystem clocks stamp it up to a tick early.
+_LISTING_SLACK_NS = 50_000_000
+#: ``View (`name`, [...])`` in a plan's tree string; a temp view of the
+#: session prints as one backticked part.
+_VIEW_RE = re.compile(r"\bView \((`(?:[^`]|``)*`(?:\.`(?:[^`]|``)*`)*), \[")
+_ONE_PART_RE = re.compile(r"`(?:[^`]|``)*`")
+
+
+class _Plan:
+    """One statement of the plan memo (``Engine.sql_to_plan``).
+
+    Made on the statement's first planning from its analyzed plan, the
+    session's temp-view map as it was before that planning (``views``)
+    and the time the planning began. The walk that fingerprints the plan
+    (``build``) runs on the statement's second sighting, or when its
+    first DoGet asks the result cache about it, never on a first
+    GetFlightInfo. A built entry holds the analyzed plan, the Spark
+    schema and the stat of every input file and listed directory; it is
+    served while the session's temp views equal ``views`` and the stats
+    are unchanged. ``reason`` is why it cannot be served. Hashed by
+    identity: the result cache keys results by their entry."""
+
+    __slots__ = (
+        "category",
+        "views",
+        "planned_ns",
+        "plan",
+        "_jvm",
+        "struct",
+        "inputs",
+        "reusable",
+        "reason",
+    )
+
+    def __init__(self, category: str, df, views, planned_ns: int):
+        self.category = category
+        self.views = views
+        self.planned_ns = planned_ns
+        self.plan = df._jdf.queryExecution().analyzed()
+        self._jvm = df.sparkSession._jvm
+        self.struct = self.inputs = self.reason = None
+        self.reusable = False
+
+    @property
+    def failed(self) -> bool:
+        """Not servable while the temp views stay as they are."""
+        return self.reason is not None and self.reason != "changed"
+
+    def build(self) -> str | None:
+        """Fingerprint the plan of the first planning; the reason it
+        cannot be served, or None."""
+        if self.inputs is not None or self.reason is not None:
+            return self.reason
+        reason, reusable, inputs = _fingerprint(self._jvm, self.plan, self.planned_ns)
+        if reason is None:
+            self.struct = _parse_datatype_json_string(self.plan.schema().json())
+            self.reusable = reusable
+            self.inputs = inputs
+        else:
+            self.reason = reason
+            _PLAN_MEMO.count(reason)
+        return reason
+
+    def servable(self) -> bool:
+        """Built (here, on a second sighting) with inputs unchanged."""
+        return self.build() is None and _stat_inputs(*self.inputs[:2]) == self.inputs
+
+    def dataframe(self, spark):
+        """A new DataFrame, with a new ``QueryExecution``, over the plan."""
+        jdf = _jvm_refs(spark._jvm)[2].ofRows(spark._jsparkSession, self.plan)
+        df = DataFrame(jdf, spark)
+        df.__dict__["schema"] = self.struct  # the cached_property's slot
+        df._plan_memo = self
+        return df
+
+    def result_reason(self) -> str | None:
+        """Why a result of this plan cannot be reused, or None."""
+        reason = self.build()
+        if reason is None and not self.reusable:
+            return "clock_function"
+        return reason
+
+
+class _PlanMemo:
+    """Bounded LRU of ``_Plan`` entries by (session UUID, SQL conf, SQL
+    text, typed parameters). One lock guards the LRU and the counters;
+    no py4j call runs under it."""
+
+    def __init__(self, max_entries: int):
+        self.max_entries = max_entries
+        self._lock = threading.Lock()
+        self._lru: OrderedDict = OrderedDict()  # key -> _Plan, oldest first
+        self._counts = dict.fromkeys(("hits", "misses", *_PLAN_REASONS), 0)
+
+    def stats(self) -> dict:
+        """Counter snapshot: hits (served without analysis), misses
+        (analyzed), bypasses by reason (counted once per entry) and
+        entries."""
+        with self._lock:
+            c = dict(self._counts)
+            return {
+                "hits": c["hits"],
+                "misses": c["misses"],
+                "bypasses": {r: c[r] for r in _PLAN_REASONS},
+                "entries": len(self._lru),
+            }
+
+    def clear(self) -> None:
+        with self._lock:
+            self._lru.clear()
+
+    def count(self, name: str) -> None:
+        with self._lock:
+            self._counts[name] += 1
+
+    def get(self, key) -> _Plan | None:
+        if key is None:
+            return None
+        with self._lock:
+            entry = self._lru.get(key)
+            if entry is not None:
+                self._lru.move_to_end(key)
+            return entry
+
+    def add(self, key, entry: _Plan, seen: _Plan | None) -> _Plan:
+        """Put ``entry`` in place of ``seen``. When a concurrent planning
+        of the statement put another entry there since, over the same temp
+        views and inputs, return that one instead, so concurrent identical
+        statements share one entry and one cached result."""
+        with self._lock:
+            current = self._lru.get(key)
+            if current is None or current is seen:
+                self._lru[key] = entry
+                self._lru.move_to_end(key)
+                while len(self._lru) > self.max_entries:
+                    self._lru.popitem(last=False)
+                return entry
+        if current.failed or not current.views.equals(entry.views):
+            return entry
+        if current.inputs is not None and not current.servable():
+            return entry
+        return current
+
+
+def _params_key(params):
+    """Bound parameters as a key that tells ``1``, ``1.0`` and ``True``,
+    and ``Decimal('1.0')`` and ``Decimal('1.00')``, apart: each value by
+    its type and ``repr``, named ones sorted."""
+    if params is None:
+        return None
+    if isinstance(params, dict):
+        return tuple(
+            (k, type(v).__qualname__, repr(v)) for k, v in sorted(params.items())
+        )
+    return tuple((type(v).__qualname__, repr(v)) for v in params)
+
+
+def _fingerprint(jvm, plan, planned_ns: int) -> tuple:
+    """(reason, reusable, inputs) of an analyzed plan: the reason it
+    cannot be memoized (None when it can), whether its result can be
+    reused (no clock or session function), and the stat of its input
+    files and listed directories. The cheap plan-wide checks run first."""
+    if not plan.deterministic():
+        # the analyzer draws the seed of an unseeded rand() or uuid()
+        return "not_deterministic", False, None
+    udf_patterns, clock_pattern, _ = _jvm_refs(jvm)
+    if any(plan.containsPattern(p) for p in udf_patterns):
+        return "udf", False, None
+    tree = plan.treeString()
+    if tree.endswith("more characters") or any(
+        not _ONE_PART_RE.fullmatch(v) for v in _VIEW_RE.findall(tree)
+    ):
+        # a permanent or global temp view, or a truncated plan string
+        return "catalog", False, None
+    paths: list[str] = []
+    roots: list[str] = []
+    subqueries = plan.subqueriesAll()
+    for root in [plan] + [subqueries.apply(i) for i in range(subqueries.size())]:
+        leaves = root.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            kind = leaf.getClass().getSimpleName()
+            if kind == "LogicalRelation":
+                relation = leaf.relation()
+                if relation.getClass().getSimpleName() != "HadoopFsRelation":
+                    return "leaf", False, None
+                if leaf.catalogTable().isDefined():
+                    return "catalog", False, None
+                paths.extend(relation.inputFiles())
+                roots.extend(relation.location().rootPaths().mkString("\n").split("\n"))
+            elif kind not in _PLAN_LEAVES:
+                return "leaf", False, None
+    files, dirs = set(), set()
+    inputs = set(paths)
+    for path in inputs | set(roots):
+        url = urlsplit(path)
+        if url.scheme != "file":
+            return "non_local_file", False, None
+        (files if path in inputs else dirs).add(unquote(url.path))
+    # a listing depends on every directory between a root and its files
+    tops = {d.rstrip("/") + "/" for d in dirs}
+    for path in files:
+        parent = os.path.dirname(path)
+        while any(parent.startswith(t) for t in tops):
+            dirs.add(parent)
+            parent = os.path.dirname(parent)
+    files = tuple(sorted(files))
+    dirs = tuple(sorted(dirs - set(files)))
+    inputs = _stat_inputs(files, dirs)
+    if inputs is None:  # gone since listing: let the run report it
+        return "non_local_file", False, None
+    if any(st[1] >= planned_ns - _LISTING_SLACK_NS for st in inputs[3]):
+        return "changed", False, None
+    return None, not plan.containsPattern(clock_pattern), inputs
+
+
+def _stat_inputs(files: tuple, dirs: tuple):
+    """(files, dirs, their stats): (size, ``mtime_ns``, inode) of each
+    file and (inode, ``mtime_ns``) of each directory; None when one is
+    gone."""
+    try:
+        fstats = tuple(
+            (st.st_size, st.st_mtime_ns, st.st_ino) for st in map(os.stat, files)
+        )
+        dstats = tuple((st.st_ino, st.st_mtime_ns) for st in map(os.stat, dirs))
+    except OSError:
+        return None
+    return files, dirs, fstats, dstats
 
 
 class _Entry:
-    """One result under its bucket ``key`` and analyzed JVM ``plan``;
-    ``batches`` stays None until a complete stream fills it. Hashed by
-    identity."""
+    """One result under ``key``; ``batches`` stays None until a complete
+    stream fills it. Hashed by identity."""
 
-    __slots__ = ("key", "plan", "batches", "nbytes")
+    __slots__ = ("key", "batches", "nbytes")
 
-    def __init__(self, key, plan):
+    def __init__(self, key):
         self.key = key
-        self.plan = plan
         self.batches = None
         self.nbytes = 0
 
 
 class _ResultCache:
-    """Bounded LRU of complete Arrow results (``execute_stream``).
-
-    Entries sit in buckets keyed by (session UUID, SQL conf, declared
-    schema, ``semanticHash`` of the analyzed plan, input-file stats); a
-    hit also needs ``sameResult`` against the entry's plan. One lock
-    guards the LRU, the buckets and the counters, and no py4j call runs
-    while it is held: ``sameResult`` checks run on a snapshot of the
-    bucket."""
+    """Bounded LRU of complete Arrow results (``execute_stream``), keyed
+    by the statement's ``_PLAN_MEMO`` entry and the declared schema. One
+    lock guards the LRU and the counters."""
 
     def __init__(self, max_bytes: int, max_entry_bytes: int, max_entries: int):
         self.max_bytes = max_bytes
@@ -709,7 +999,7 @@ class _ResultCache:
         self.max_entries = max_entries
         self._lock = threading.Lock()
         self._lru: OrderedDict = OrderedDict()  # _Entry -> None, oldest first
-        self._buckets: dict = {}  # key -> [_Entry]
+        self._entries: dict = {}  # key -> _Entry
         self._bytes = 0
         self._counts = dict.fromkeys(
             ("hits", "misses", "admitted", "evicted", *_BYPASS_REASONS), 0
@@ -734,7 +1024,7 @@ class _ResultCache:
     def clear(self) -> None:
         with self._lock:
             self._lru.clear()
-            self._buckets.clear()
+            self._entries.clear()
             self._bytes = 0
 
     def _count(self, name: str) -> None:
@@ -743,22 +1033,22 @@ class _ResultCache:
 
     def lookup(self, df, schema) -> _Entry | None:
         """The cached entry on a hit; on a miss an empty entry to admit
-        through ``admitting``; None when the statement is not reusable."""
-        key, plan = _result_key(df, schema)
-        if plan is None:
-            self._count(key)
+        through ``admitting``; None when the statement is not reusable
+        (a DataFrame that ``Engine.sql_to_plan`` did not plan is not)."""
+        memo = getattr(df, "_plan_memo", None)
+        reason = "unplanned" if memo is None else memo.result_reason()
+        if reason is not None:
+            self._count(reason)
             return None
+        key = (memo, schema.serialize().to_pybytes())
         with self._lock:
-            candidates = list(self._buckets.get(key, ()))
-        for entry in candidates:
-            if entry.plan.sameResult(plan):
-                with self._lock:
-                    if entry in self._lru:
-                        self._lru.move_to_end(entry)
-                    self._counts["hits"] += 1
+            entry = self._entries.get(key)
+            if entry is not None:
+                self._lru.move_to_end(entry)
+                self._counts["hits"] += 1
                 return entry
-        self._count("misses")
-        return _Entry(key, plan)
+            self._counts["misses"] += 1
+        return _Entry(key)
 
     def admitting(self, entry: _Entry, batches):
         """Pass ``batches`` through; admit them as ``entry`` once the
@@ -788,95 +1078,36 @@ class _ResultCache:
                     self._count("incomplete")
 
     def _admit(self, entry: _Entry) -> None:
-        # Concurrent misses of one statement admit it once: compare against
-        # the bucket outside the lock, and insert only when no entry
-        # appeared in the bucket since the last comparison.
-        seen: set = set()
-        while True:
-            with self._lock:
-                fresh = [e for e in self._buckets.get(entry.key, ()) if e not in seen]
-                if not fresh:
-                    self._insert(entry)
-                    return
-            if any(e.plan.sameResult(entry.plan) for e in fresh):
+        """Add ``entry`` and evict to the bounds; concurrent misses of one
+        statement admit it once."""
+        with self._lock:
+            if entry.key in self._entries:
                 return
-            seen.update(fresh)
-
-    def _insert(self, entry: _Entry) -> None:
-        """Add ``entry`` and evict to the bounds; the caller holds the lock."""
-        self._lru[entry] = None
-        self._buckets.setdefault(entry.key, []).append(entry)
-        self._bytes += entry.nbytes
-        self._counts["admitted"] += 1
-        while self._bytes > self.max_bytes or len(self._lru) > self.max_entries:
-            old, _ = self._lru.popitem(last=False)
-            bucket = self._buckets[old.key]
-            bucket.remove(old)
-            if not bucket:
-                del self._buckets[old.key]
-            self._bytes -= old.nbytes
-            self._counts["evicted"] += 1
-
-
-def _result_key(df, schema) -> tuple:
-    """(bucket key, analyzed JVM plan) of a reusable statement, or
-    (bypass reason, None). The cheap plan-wide checks run first; the
-    session and conf reads last."""
-    jdf = df._jdf
-    plan = jdf.queryExecution().analyzed()
-    if not plan.deterministic():
-        return "not_deterministic", None
-    jvm = df.sparkSession._jvm
-    udf_patterns, clock_pattern = _tree_patterns(jvm)
-    if any(plan.containsPattern(p) for p in udf_patterns):
-        return "udf", None
-    if plan.containsPattern(clock_pattern):
-        return "clock_function", None
-    paths: list[str] = []
-    subqueries = plan.subqueriesAll()
-    for root in [plan] + [subqueries.apply(i) for i in range(subqueries.size())]:
-        leaves = root.collectLeaves()
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            kind = leaf.getClass().getSimpleName()
-            if kind == "LogicalRelation":
-                relation = leaf.relation()
-                if relation.getClass().getSimpleName() != "HadoopFsRelation":
-                    return "leaf", None
-                paths.extend(relation.inputFiles())
-            elif kind not in _PLAN_LEAVES:
-                return "leaf", None
-    files = []
-    for path in sorted(set(paths)):
-        url = urlsplit(path)
-        if url.scheme != "file":
-            return "non_local_file", None
-        try:
-            st = os.stat(unquote(url.path))
-        except OSError:  # gone since listing: let the run report it
-            return "non_local_file", None
-        files.append((path, st.st_size, st.st_mtime_ns, st.st_ino))
-    jsession = jdf.sparkSession()
-    key = (
-        jsession.sessionUUID(),
-        # the same set of confs prints in the same order (a different
-        # order would only cost a miss)
-        jsession.sessionState().conf().getAllConfs().toString(),
-        schema.serialize().to_pybytes(),
-        plan.semanticHash(),
-        tuple(files),
-    )
-    return key, plan
+            self._lru[entry] = None
+            self._entries[entry.key] = entry
+            self._bytes += entry.nbytes
+            self._counts["admitted"] += 1
+            while self._bytes > self.max_bytes or len(self._lru) > self.max_entries:
+                old, _ = self._lru.popitem(last=False)
+                del self._entries[old.key]
+                self._bytes -= old.nbytes
+                self._counts["evicted"] += 1
 
 
 @functools.lru_cache(maxsize=1)
-def _tree_patterns(jvm) -> tuple:
-    """(``_UDF_PATTERNS``, ``CURRENT_LIKE``) as JVM enum values, resolved
-    once per gateway: each lookup by name is a py4j round trip."""
+def _jvm_refs(jvm) -> tuple:
+    """(``_UDF_PATTERNS``, ``CURRENT_LIKE``, classic ``Dataset``) as JVM
+    references, resolved once per gateway: each lookup by name is a py4j
+    round trip."""
     patterns = jvm.org.apache.spark.sql.catalyst.trees.TreePattern
-    return [getattr(patterns, p)() for p in _UDF_PATTERNS], patterns.CURRENT_LIKE()
+    return (
+        [getattr(patterns, p)() for p in _UDF_PATTERNS],
+        patterns.CURRENT_LIKE(),
+        jvm.org.apache.spark.sql.classic.Dataset,
+    )
 
 
+_PLAN_MEMO = _PlanMemo(_PLAN_MEMO_ENTRIES)
 _RESULT_CACHE = _ResultCache(
     _RESULT_CACHE_BYTES, _RESULT_ENTRY_BYTES, _RESULT_CACHE_ENTRIES
 )

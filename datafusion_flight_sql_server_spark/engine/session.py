@@ -6,12 +6,12 @@ service.rs:133-151). Here one tuned base SparkSession plays the role of the
 static state; per-request isolation uses ``spark.newSession()`` (shared JVM,
 shared executors/catalog, isolated temp views and confs).
 
-Scale posture (100 TB / 1000-executor design, tested on local[N]):
+Session settings (tested on ``local[N]`` only; no cluster is exercised):
 
 - AQE on (+ partition coalescing + skew-join splitting): runtime re-planning
-  replaces hand-tuned shuffle-partition counts; at cluster scale the
+  replaces hand-tuned shuffle-partition counts; the
   ``spark.sql.shuffle.partitions`` value below is a *ceiling* that AQE
-  coalesces down from, so it should scale with cluster cores, not data size.
+  coalesces down from, so it should scale with cores, not data size.
 - Arrow transfers on: every Python-boundary crossing (toArrow / pandas_udf /
   mapInPandas) is Arrow-batched, never row-pickled.
 - Session timezone pinned to UTC so timestamp semantics are engine-portable
@@ -19,8 +19,7 @@ Scale posture (100 TB / 1000-executor design, tested on local[N]):
 - Broadcast threshold raised to 64 MB (default 10 MB) — dimension tables
   (region, nation, supplier, part at most SFs) broadcast automatically, and
   AQE converts sort-merge to broadcast joins at runtime when a shuffle side
-  turns out small; 64 MB is still a safe executor broadcast at cluster
-  memory sizes.
+  turns out small.
 """
 
 from __future__ import annotations

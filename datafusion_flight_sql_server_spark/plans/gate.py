@@ -105,12 +105,15 @@ class SQLOptions:
     allow_dml: bool = False
     allow_statements: bool = False
 
-    def verify(self, spark: SparkSession, sql: str) -> str:
+    def verify(self, spark: SparkSession, sql: str, category: str | None = None) -> str:
         """Raise :class:`PlanVerificationError` if ``sql`` is disallowed;
         return the classification (``query``/``ddl``/``dml``/
         ``statement``) so callers can react to an ALLOWED catalog
-        mutation (the engine invalidates its information_schema memo)."""
-        category = _classify(spark, sql)
+        mutation (the engine invalidates its information_schema memo).
+        A ``category`` the caller already classified ``sql`` as (the
+        engine's plan memo) skips the parse; the switches still apply."""
+        if category is None:
+            category = _classify(spark, sql)
         if category == "ddl" and not self.allow_ddl:
             raise PlanVerificationError(f"DDL not supported: {sql!r}")
         if category == "dml" and not self.allow_dml:

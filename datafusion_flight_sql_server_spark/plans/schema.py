@@ -25,6 +25,7 @@ import re
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from datafusion_flight_sql_server_spark.plans.gate import is_pure_query
 from datafusion_flight_sql_server_spark.plans.params import placeholder_names
@@ -150,15 +151,18 @@ def _infer_types_from_context(
 ) -> dict[str, pa.DataType]:
     """Type each placeholder from a ``col <op> $n`` comparison if possible."""
     out: dict[str, pa.DataType] = {}
-    # Column types of every table referenced in the query, best effort.
-    col_types: dict[str, pa.DataType] = {}
+    # Columns of every table referenced in the query, best effort; only
+    # those a placeholder is compared with are converted to Arrow, so a
+    # column Arrow cannot carry (an interval) elsewhere in the table does
+    # not fail the statement.
+    columns: dict = {}
     for tbl in _table_names(sql):
         try:
-            schema = spark.table(tbl).schema
+            fields = spark.table(tbl).schema.fields
         except Exception:
             continue
-        for f in to_arrow_schema(schema):
-            col_types.setdefault(f.name.lower(), f.type)
+        for f in fields:
+            columns.setdefault(f.name.lower(), f)
     for name in names:
         pat_b = re.compile(_CMP_BEFORE.pattern.format(name=re.escape(name)))
         pat_a = re.compile(_CMP_AFTER.pattern.format(name=re.escape(name)))
@@ -171,7 +175,7 @@ def _infer_types_from_context(
             if m:
                 col = m.group(2)
         if col:
-            t = col_types.get(col.split(".")[-1].lower())
+            t = _arrow_type(columns.get(col.split(".")[-1].lower()))
             if t is not None:
                 out[name] = t
                 continue
@@ -184,6 +188,17 @@ def _infer_types_from_context(
         ):
             out[name] = pa.int64()
     return out
+
+
+def _arrow_type(field) -> pa.DataType | None:
+    """Arrow type of a Spark ``StructField``; None when there is no field
+    or Arrow cannot carry its type."""
+    if field is None:
+        return None
+    try:
+        return to_arrow_schema(StructType([field]))[0].type
+    except Exception:
+        return None
 
 
 _FROM_RE = re.compile(r"\b(?:FROM|JOIN)\s+([A-Za-z_][A-Za-z_0-9.]*)", re.I)

@@ -55,13 +55,25 @@ Declared divergences (client-compat debugging starts here):
   service.rs:186-190): on a classic session a DoGet whose statement was
   already answered whole may be served from the engine's bounded result
   cache without starting a Spark job (``Engine.execute_stream``). The gate
-  and bind still run on every DoGet, and tickets stay stateless. A result is
-  reused only for the same session, SQL conf, declared schema and analyzed
-  plan (``sameResult``) over unchanged local input files (path, size,
-  mtime, inode), when the plan is deterministic, holds no UDF and no clock
-  or session function, and reads only local files, inline rows or
-  ``range``. Results over 4 MB are never kept, and 32 MB in total; a DDL,
-  DML or command statement through the gate clears the cache.
+  still runs on every DoGet, and tickets stay stateless. A result is
+  reused only for the same plan-memo entry (see "Plan reuse") and declared
+  schema, when the plan holds no clock or session function. Results over
+  4 MB are never kept, and 32 MB in total; a DDL, DML or command statement
+  through the gate clears the cache.
+- **Plan reuse** (the reference plans every statement in GetFlightInfo and
+  again in DoGet, service.rs:171,220-236): a repeated query statement is
+  analyzed once per catalog state (``Engine.sql_to_plan``). Its analyzed
+  plan is kept under the session, SQL conf, SQL text and exactly-typed
+  parameters, and a repeat gets a fresh DataFrame over it while the
+  session's temp views and the local input files and listed directories
+  (path, size, mtime, inode) are unchanged. The gate runs on every call. A
+  plan is kept only when it is deterministic, holds no UDF and reads only
+  local files, inline rows or ``range``, directly or through session temp
+  views; statements over permanent tables or views (which another session
+  or metastore may alter), global temp views, DSv2 or ``flightsql`` sources
+  are planned every time. A temporary function registered outside the
+  gate under a builtin's name is not seen by an already memoized statement
+  that calls the builtin.
 - **Duplicate struct field names**: Arrow cannot carry them, so DoGet
   rejects such a result with Spark's ``DUPLICATED_FIELD_NAME_IN_ARROW_STRUCT``,
   as ``DataFrame.toArrow()`` does.

@@ -43,8 +43,10 @@ def duck():
 
 @pytest.fixture(autouse=True)
 def _empty_result_cache():
-    """The engine's result cache is process-wide: every test starts with it
-    empty, so test order cannot turn one test's run into another's hit."""
+    """The engine's plan memo and result cache are process-wide: every test
+    starts with them empty, so test order cannot turn one test's run into
+    another's hit."""
     from datafusion_flight_sql_server_spark.engine import core
 
+    core._PLAN_MEMO.clear()
     core._RESULT_CACHE.clear()

@@ -247,14 +247,19 @@ class TestQualifierMetadata:
 
 
 class TestPlanCache:
-    """No plan cache, like the stateless reference: every call re-plans
-    and re-runs the statement gate."""
+    """Every call returns a new DataFrame with its own ``QueryExecution``.
+    A repeated query may reuse its analyzed plan from the engine's plan
+    memo (``tests/test_plan_memo.py``), and the statement gate runs on
+    every call."""
 
     def test_every_call_replans(self, spark):
         engine = Engine(spark)
         a = engine.sql_to_plan("SELECT * FROM users")
         b = engine.sql_to_plan("SELECT * FROM users")
         assert a is not b
+        c = engine.sql_to_plan("SELECT * FROM users")
+        qes = [df._jdf.queryExecution() for df in (a, b, c)]
+        assert not qes[0].equals(qes[1]) and not qes[1].equals(qes[2])
 
 
 class TestExecuteStream:
