@@ -744,9 +744,10 @@ _BYPASS_REASONS = (
     "over_cap",
     "incomplete",
 )
-#: A directory listed for a plan must be older than the planning by this
-#: much: a file added while the statement was planned may be missing from
-#: its listing, and coarse filesystem clocks stamp it up to a tick early.
+#: An input file or listed directory of a plan must be older than the
+#: planning by this much: a file added or rewritten while the statement
+#: was planned may be missing from its listing or inferred schema, and
+#: coarse filesystem clocks stamp it up to a tick early.
 _LISTING_SLACK_NS = 50_000_000
 #: ``View (`name`, [...])`` in a plan's tree string; a temp view of the
 #: session prints as one backticked part.
@@ -874,7 +875,8 @@ class _PlanMemo:
         """Put ``entry`` in place of ``seen``. When a concurrent planning
         of the statement put another entry there since, over the same temp
         views and inputs, return that one instead, so concurrent identical
-        statements share one entry and one cached result."""
+        statements share one entry and one cached result (with a plain
+        overwrite, 8 identical first DoGets admitted their result twice)."""
         with self._lock:
             current = self._lru.get(key)
             if current is None or current is seen:
@@ -955,9 +957,12 @@ def _fingerprint(jvm, plan, planned_ns: int) -> tuple:
     files = tuple(sorted(files))
     dirs = tuple(sorted(dirs - set(files)))
     inputs = _stat_inputs(files, dirs)
-    if inputs is None:  # gone since listing: let the run report it
-        return "non_local_file", False, None
-    if any(st[1] >= planned_ns - _LISTING_SLACK_NS for st in inputs[3]):
+    # a file gone since the listing, or a file or directory written since
+    # the planning began (a file rewritten in place leaves its directory
+    # as it was): the next planning replaces the entry
+    if inputs is None or any(
+        st[1] >= planned_ns - _LISTING_SLACK_NS for st in inputs[2] + inputs[3]
+    ):
         return "changed", False, None
     return None, not plan.containsPattern(clock_pattern), inputs
 

@@ -57,8 +57,8 @@ Declared divergences (client-compat debugging starts here):
   cache without starting a Spark job (``Engine.execute_stream``). The gate
   still runs on every DoGet, and tickets stay stateless. A result is
   reused only for the same plan-memo entry (see "Plan reuse") and declared
-  schema, when the plan holds no clock or session function. Results over
-  4 MB are never kept, and 32 MB in total; a DDL, DML or command statement
+  schema, when the plan holds no clock or session function, so results
+  over permanent tables are not reused. Results over 4 MB are never kept, and 32 MB in total; a DDL, DML or command statement
   through the gate clears the cache.
 - **Plan reuse** (the reference plans every statement in GetFlightInfo and
   again in DoGet, service.rs:171,220-236): a repeated query statement is

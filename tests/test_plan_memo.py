@@ -117,6 +117,35 @@ class TestFreshness:
         assert _run(engine, sql).column("n").to_pylist() == [2]
         assert core._PLAN_MEMO.stats()["hits"] == hits
 
+    def test_file_rewritten_in_place_after_planning_is_seen(self, engine, tmp_path, spark):
+        path = tmp_path / "t.parquet"
+        pq.write_table(pa.table({"k": [1, 2]}), path)
+        time.sleep(0.1)  # older than the planning by more than the slack
+        sql = f"SELECT * FROM parquet.`{path}`"
+        engine.sql_to_plan(sql)  # a GetFlightInfo: planned, not fingerprinted
+        inode = path.stat().st_ino
+        pq.write_table(pa.table({"k": [3, 4, 5], "j": ["a", "b", "c"]}), path)
+        assert path.stat().st_ino == inode
+        fresh = spark.read.parquet(str(path)).toArrow()
+        for _ in range(2):
+            assert _run(engine, sql).equals(fresh)
+
+    def test_vanished_input_file_does_not_block_the_statement(self, engine, tmp_path):
+        path = tmp_path / "t.parquet"
+        pq.write_table(pa.table({"k": [1]}), path)
+        time.sleep(0.1)
+        sql = f"SELECT count(*) AS n FROM parquet.`{path}`"
+        engine.sql_to_plan(sql)
+        path.unlink()
+        with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+            engine.sql_to_plan(sql)
+        pq.write_table(pa.table({"k": [1, 2]}), path)
+        time.sleep(0.1)
+        assert _run(engine, sql).column("n").to_pylist() == [2]
+        hits = core._PLAN_MEMO.stats()["hits"]
+        assert _run(engine, sql).column("n").to_pylist() == [2]
+        assert core._PLAN_MEMO.stats()["hits"] == hits + 1
+
     def test_reregistered_python_udf_is_never_stale(self, engine):
         spark = engine.spark
         sql = "SELECT memo_f(id) AS v FROM range(2)"
