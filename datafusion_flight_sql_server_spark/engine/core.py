@@ -32,8 +32,18 @@ from datafusion_flight_sql_server_spark.plans.gate import SQLOptions
 from datafusion_flight_sql_server_spark.plans.params import bind_sql
 
 
+class ClassicSessionRequired(TypeError):
+    """Raised by ``Engine`` for a session with no JVM handle (a Spark
+    Connect session): only classic sessions are served."""
+
+
 class Engine:
     def __init__(self, spark: SparkSession, options: SQLOptions | None = None):
+        if getattr(spark, "_jsparkSession", None) is None:
+            raise ClassicSessionRequired(
+                "only classic Spark sessions are served; this session has "
+                "no JVM handle (Spark Connect)"
+            )
         self.spark = spark
         self.options = options or SQLOptions()
         # Session-scoped information_schema schema/definition memo
@@ -86,7 +96,7 @@ class Engine:
         mutates = category != "query"
         if mutates:
             self._invalidate(category)
-        elif key is not None:
+        else:
             # read before the bind: a view replaced while it runs then
             # counts as changed at the next lookup
             views, planned_ns = live.clone(), time.time_ns()
@@ -95,7 +105,7 @@ class Engine:
         finally:
             if mutates:
                 self._invalidate(category)
-        if key is not None and not mutates:
+        if not mutates:
             _PLAN_MEMO.count("misses")
             if memo is None or not memo.failed:
                 memo = _PLAN_MEMO.add(key, _Plan(category, df, views, planned_ns), seen)
@@ -103,13 +113,10 @@ class Engine:
         return df
 
     def _memo_key(self, sql: str, params) -> tuple:
-        """(memo key, live temp-view map) of a classic session; (None,
-        None) without a JVM."""
+        """(memo key, live temp-view map)."""
         handles = self._jvm_handles
         if handles is None:
-            jsession = getattr(self.spark, "_jsparkSession", None)
-            if jsession is None:
-                return None, None
+            jsession = self.spark._jsparkSession
             state = jsession.sessionState()
             handles = self._jvm_handles = (
                 jsession.sessionUUID(),
@@ -158,10 +165,10 @@ class Engine:
         Parity: the reference pipes batch-at-a-time (service.rs:186-236) and
         never materializes the full result (SURVEY §7 H1). Three properties:
 
-        - **Arrow end-to-end, encoded once**: on a classic session the
-          result is Spark's own JVM-side Arrow encoding
-          (``Dataset.toArrowBatchRdd``, written by Spark's ``ArrowWriter``).
-          The driver pulls the serialized record batches with
+        - **Arrow end-to-end, encoded once**: the result is Spark's own
+          JVM-side Arrow encoding (``Dataset.toArrowBatchRdd``, written by
+          Spark's ``ArrowWriter``). The driver pulls the serialized record
+          batches with
           ``PythonRDD.runJob``, which hands them over a local socket as
           length-framed bytes, and decodes them with
           ``pa.ipc.read_record_batch`` against the schema the JVM encodes
@@ -184,11 +191,11 @@ class Engine:
           (``_RESULT_CACHE``).
 
         The driver pulls partitions in ADAPTIVELY-GROWING GROUPS, one Spark
-        job per group, rather than one job per partition the way
-        ``toLocalIterator`` does: at local job-launch latency (~100 ms) a
-        32-partition result paid ~3 s of pure scheduling — measured 40x
-        the cost of the query itself on a small result (round-6 serving
-        profile; the whole prepared-statement round trip was 3.2 s). The
+        job per group, rather than one job per partition: at local
+        job-launch latency (~100 ms) a 32-partition result paid ~3 s of
+        pure scheduling — measured 40x the cost of the query itself on a
+        small result (round-6 serving profile; the whole
+        prepared-statement round trip was 3.2 s). The
         first group is one partition, for low first-byte latency, then
         groups grow while pulled bytes stay small — so job count is
         O(log n) on small results. Growth is bounded by OBSERVED batch
@@ -196,20 +203,12 @@ class Engine:
         fits the 128 MB budget, and every group reserves from the shared
         ``_PULL_POOL`` (see ``_grouped_pull``).
 
-        Spark Connect (no ``_jdf``) has no JVM handle, so executors encode
-        IPC blobs with ``mapInArrow`` and they stream through
-        ``toLocalIterator`` — which under Connect is NOT the classic
-        one-job-per-partition loop: the Connect server executes the plan
-        once and streams result batches over gRPC, with client-side
-        prefetch bounding driver memory.
-
         A result whose types cannot cross Spark's Arrow conversion (struct
         fields with duplicate names) raises Spark's own error, as
-        ``DataFrame.toArrow()`` does; on a classic session it does so
-        before any Spark job runs.
+        ``DataFrame.toArrow()`` does, before any Spark job runs.
 
-        **Result reuse** (classic sessions only): a repeated statement
-        whose ``_PLAN_MEMO`` entry (``sql_to_plan``) is servable is
+        **Result reuse**: a repeated statement whose ``_PLAN_MEMO`` entry
+        (``sql_to_plan``) is servable is
         served from ``_RESULT_CACHE`` without starting a Spark job; the
         gate still ran for it. Results are keyed by that entry and the
         declared Arrow ``schema``. An entry stands for one session, SQL
@@ -236,41 +235,14 @@ class Engine:
 
         if schema is None:
             schema = arrow_schema_for_df(df)
-        if getattr(df, "_jdf", None) is None:
-            yield from self._execute_stream_connect(df, schema)
-            return
         entry = _RESULT_CACHE.lookup(df, schema)
         if entry is not None and entry.batches is not None:
             yield from entry.batches
             return
-        batches = self._execute_stream_classic(df, schema)
+        batches = _jvm_batches(df, schema)
         if entry is not None:
             batches = _RESULT_CACHE.admitting(entry, batches)
         yield from batches
-
-    def _execute_stream_classic(self, df: DataFrame, schema):
-        """Classic stream: Spark's JVM Arrow batches, pulled in groups."""
-        jvm_schema = _jvm_arrow_schema(df)
-        jrdd = df._jdf.toArrowBatchRdd().toJavaRDD()
-        payloads = _grouped_pull(
-            _ArrowBatchPuller(df.sparkSession.sparkContext),
-            jrdd,
-            range(jrdd.getNumPartitions()),
-            max_part=1 << 20,
-            group=1,
-            observed=0,
-        )
-        yield from _decode_jvm_batches(payloads, jvm_schema, schema)
-
-    def _execute_stream_connect(self, df: DataFrame, schema):
-        """Spark Connect stream: executor-encoded IPC blobs through
-        ``toLocalIterator``."""
-        import pyarrow as pa
-
-        ipc_df = df.mapInArrow(_make_ipc_encoder(), "ipc binary")
-        rows = ipc_df.toLocalIterator(prefetchPartitions=True)
-        batches = (b for row in rows for b in pa.ipc.open_stream(row.ipc))
-        yield from _as_declared(batches, schema)
 
     def new_session(self) -> "Engine":
         """Per-request isolated session (shared JVM/catalog, own temp views).
@@ -863,8 +835,6 @@ class _PlanMemo:
             self._counts[name] += 1
 
     def get(self, key) -> _Plan | None:
-        if key is None:
-            return None
         with self._lock:
             entry = self._lru.get(key)
             if entry is not None:
@@ -1170,35 +1140,8 @@ def _grouped_pull(
             group = min(group * 4, 64)
 
 
-def _make_ipc_encoder():
-    """Executor-side Arrow-IPC encoder for ``mapInArrow``.
-
-    Returned as a NESTED function on purpose: cloudpickle serializes nested
-    functions by value, so workers need pyarrow only — no repo import (the
-    same worker-deployment posture as ``sources/flight_table.py``)."""
-
-    def _ipc_encode_batches(iterator):
-        # Wrap each columnar batch as one IPC-stream payload — one binary
-        # cell per ~10k-row batch, never per row.
-        import pyarrow as pa  # worker-local import
-
-        out_schema = pa.schema([("ipc", pa.binary())])
-        for batch in iterator:
-            if batch.num_rows == 0:
-                continue
-            sink = pa.BufferOutputStream()
-            with pa.ipc.new_stream(sink, batch.schema) as writer:
-                writer.write_batch(batch)
-            yield pa.record_batch(
-                [pa.array([sink.getvalue().to_pybytes()], pa.binary())],
-                schema=out_schema,
-            )
-
-    return _ipc_encode_batches
-
-
 def _jvm_arrow_schema(df):
-    """The Arrow schema Spark's JVM encodes a classic DataFrame's batches
+    """The Arrow schema Spark's JVM encodes a DataFrame's batches
     (``Dataset.toArrowBatchRdd``) with, read from the JVM's own
     ``ArrowUtils.toArrowSchema`` message rather than re-derived in Python.
     Runs no job; raises when the plan's types cannot cross Spark's Arrow
@@ -1238,27 +1181,29 @@ class _ArrowBatchPuller:
         return func(_load_from_socket(sock_info, NoOpSerializer()))
 
 
-def _decode_jvm_batches(payloads, jvm_schema, schema):
-    """Decode pulled JVM record batches against the schema the JVM encoded
-    them with, then hand them on as declared (``_as_declared``)."""
-    import pyarrow as pa
-
-    batches = (
-        pa.ipc.read_record_batch(pa.py_buffer(p), jvm_schema) for p in payloads
-    )
-    return _as_declared(batches, schema)
-
-
-def _as_declared(batches, schema):
-    """Pass batches through as Spark cut them, dropping empty ones and
-    casting to ``schema`` only where the types differ: under
+def _jvm_batches(df, schema):
+    """Spark's JVM Arrow batches of ``df``, pulled in groups and decoded
+    against the schema the JVM encoded them with. Batches pass through as
+    Spark cut them, dropping empty ones and casting to ``schema`` only
+    where the types differ: under
     ``spark.sql.execution.arrow.useLargeVarTypes`` Spark encodes
     ``large_string``/``large_binary``, which Flight's ``GeneratorStream``
     rejects against the declared ``string``/``binary``."""
     import pyarrow as pa
 
+    jvm_schema = _jvm_arrow_schema(df)
+    jrdd = df._jdf.toArrowBatchRdd().toJavaRDD()
+    payloads = _grouped_pull(
+        _ArrowBatchPuller(df.sparkSession.sparkContext),
+        jrdd,
+        range(jrdd.getNumPartitions()),
+        max_part=1 << 20,
+        group=1,
+        observed=0,
+    )
     target = pa.schema([f.remove_metadata() for f in schema])
-    for batch in batches:
+    for payload in payloads:
+        batch = pa.ipc.read_record_batch(pa.py_buffer(payload), jvm_schema)
         if not batch.schema.equals(target, check_metadata=False):
             batch = batch.cast(target)
         if batch.num_rows:

@@ -6,8 +6,14 @@ service.rs:92-101,170-175): three independent switches for DDL, DML, and
 "statements" (SET and friends). Spark exposes no such verifier in PySpark, so
 we parse the statement with the session's own SQL parser (JVM
 ``sessionState().sqlParser().parsePlan``) and classify the resulting logical
-plan node by class name; a regex classifier is the fallback when the JVM walk
-is unavailable (e.g. Spark Connect).
+plan nodes by class name. The parsed text is the one ``bind_sql`` hands to
+``spark.sql``: ``$n``/``$name`` placeholders are first rewritten to Spark's
+``:pn``/``:name`` markers, which parse as ``NamedParameter``. A statement
+that does not parse fails the gate with Spark's own ``ParseException``.
+That includes a placeholder where Spark's grammar takes only a literal (an
+interval's value, ``LIKE … ESCAPE``, a type's precision): Spark 4.1
+substitutes the value there at bind, but the NULL bind that plans a
+prepared statement's schema fails on it as well.
 
 This is a pre-flight check on the *parsed* plan, like the reference — it runs
 before analysis/execution and therefore costs no I/O.
@@ -19,6 +25,8 @@ import re
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
+
+from datafusion_flight_sql_server_spark.plans.params import normalize_placeholders
 
 
 class PlanVerificationError(Exception):
@@ -49,6 +57,20 @@ _DDL_FRAGMENTS = (
     "AlterColumn",
     "CreateIndex",
     "DropIndex",
+    # catalog changes whose plan names none of the above
+    "CreateTempView",  # CREATE TEMPORARY VIEW ... USING
+    "CreateUserDefinedFunction",  # CREATE FUNCTION ... RETURN (SQL UDF)
+    "CreateSQLFunction",
+    "CommentOn",
+    "SetTableProperties",  # not ShowTableProperties
+    "UnsetTableProperties",
+    "SetTableSerDeProperties",
+    "SetTableLocation",
+    "ReplaceColumns",
+    "AddPartitions",
+    "DropPartitions",
+    "RenamePartitions",
+    "RecoverPartitions",
 )
 _DML_FRAGMENTS = (
     "InsertInto",
@@ -79,16 +101,14 @@ _STATEMENT_FRAGMENTS = (
     "RepairTable",
     "LoadData",
     "TransactionStatement",
-)
-
-# Fallback keyword classifier (first significant token), used when the JVM
-# parser is unreachable.
-_DDL_RE = re.compile(r"^\s*(CREATE|DROP|ALTER|TRUNCATE|RENAME|REPLACE|COMMENT)\b", re.I)
-_DML_RE = re.compile(r"^\s*(INSERT|UPDATE|DELETE|MERGE|COPY|IMPORT|LOAD)\b", re.I)
-_STMT_RE = re.compile(
-    r"^\s*(SET|RESET|USE|ADD\s+(JAR|FILE|ARCHIVE)|REFRESH|CACHE|UNCACHE|CLEAR|"
-    r"ANALYZE|MSCK|BEGIN|COMMIT|ROLLBACK|START\s+TRANSACTION)\b",
-    re.I,
+    "RefreshResource",  # REFRESH 'path'
+    "UnresolvedProcedure",  # CALL
+    # EXECUTE IMMEDIATE runs a statement given as a string, which the
+    # parse cannot see into; session variables are session state
+    "ExecuteImmediate",
+    "CreateVariable",
+    "SetVariable",
+    "DropVariable",
 )
 
 
@@ -106,8 +126,9 @@ class SQLOptions:
     allow_statements: bool = False
 
     def verify(self, spark: SparkSession, sql: str, category: str | None = None) -> str:
-        """Raise :class:`PlanVerificationError` if ``sql`` is disallowed;
-        return the classification (``query``/``ddl``/``dml``/
+        """Raise :class:`PlanVerificationError` if ``sql`` is disallowed, or
+        Spark's ``ParseException`` if it does not parse; return the
+        classification (``query``/``ddl``/``dml``/
         ``statement``) so callers can react to an ALLOWED catalog
         mutation (the engine invalidates its information_schema memo).
         A ``category`` the caller already classified ``sql`` as (the
@@ -131,30 +152,14 @@ QUERY_ONLY = SQLOptions(allow_ddl=False, allow_dml=False, allow_statements=False
 def _classify(spark: SparkSession, sql: str) -> str:
     """Classify a statement as 'query' | 'ddl' | 'dml' | 'statement'."""
     classes = _parsed_plan_classes(spark, sql)
-    if classes is not None:
-        # Walk EVERY node, not just the root: `WITH cte AS (...) INSERT
-        # INTO ...` parses to UnresolvedWith with the DML node as its
-        # child, so a root-only check admits CTE-wrapped DML (round-6 fix).
-        if any(f in cls for cls in classes for f in _DDL_FRAGMENTS):
-            return "ddl"
-        if any(f in cls for cls in classes for f in _DML_FRAGMENTS):
-            return "dml"
-        if any(f in cls for cls in classes for f in _STATEMENT_FRAGMENTS):
-            return "statement"
-        return "query"
-    # JVM unavailable → keyword fallback.
-    if _DDL_RE.match(sql):
+    # Walk EVERY node, not just the root: `WITH cte AS (...) INSERT
+    # INTO ...` parses to UnresolvedWith with the DML node as its
+    # child, so a root-only check admits CTE-wrapped DML (round-6 fix).
+    if any(f in cls for cls in classes for f in _DDL_FRAGMENTS):
         return "ddl"
-    if _DML_RE.match(sql) or (
-        re.match(r"^\s*WITH\b", sql, re.I)
-        and re.search(r"\b(INSERT|UPDATE|DELETE|MERGE)\b", sql, re.I)
-    ):
-        # A CTE prefix can hide DML from the head-of-statement check; for a
-        # deny-by-default gate, a DML keyword anywhere in a WITH statement
-        # conservatively classifies as DML (string-literal false positives
-        # reject a query the JVM path would admit — safe direction).
+    if any(f in cls for cls in classes for f in _DML_FRAGMENTS):
         return "dml"
-    if _STMT_RE.match(sql):
+    if any(f in cls for cls in classes for f in _STATEMENT_FRAGMENTS):
         return "statement"
     return "query"
 
@@ -167,20 +172,17 @@ def is_pure_query(spark: SparkSession, sql: str) -> bool:
     provably a query must never be probed. Unparseable statements return
     False (they could not be probed anyway).
     """
-    classes = _parsed_plan_classes(spark, sql)
-    if classes is None:
+    try:
+        return _classify(spark, sql) == "query"
+    except Exception:  # noqa: BLE001 - unclassifiable: not provably a query
         return False
-    return not any(
-        f in cls
-        for cls in classes
-        for f in _DDL_FRAGMENTS + _DML_FRAGMENTS + _STATEMENT_FRAGMENTS
-    )
 
 
-def _parsed_plan_classes(spark: SparkSession, sql: str) -> set[str] | None:
+def _parsed_plan_classes(spark: SparkSession, sql: str) -> set[str]:
     """Simple class names of every node in the parsed (unanalyzed) logical
-    plan — children AND innerChildren (CTE definitions live there) — or
-    None when the statement does not parse / the JVM is unreachable.
+    plan of ``sql`` as ``bind_sql`` sends it to ``spark.sql`` — children
+    AND innerChildren (CTE definitions live there). Raises Spark's
+    ``ParseException`` when it does not parse.
 
     Fast path: ``TreeNode.toJSON`` serializes the whole tree in ONE py4j
     round trip; the per-node ``getClass``/``children`` walk costs several
@@ -195,12 +197,8 @@ def _parsed_plan_classes(spark: SparkSession, sql: str) -> set[str] | None:
     for a deny-by-default gate). The walk remains as the fallback for
     trees whose JSON serialization throws.
     """
-    try:
-        jplan = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
-    except Exception:  # noqa: BLE001 - parse errors surface later
-        # A genuine parse error should surface as an AnalysisException when
-        # the query actually runs; the gate only cares about classification.
-        return None
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    jplan = parser.parsePlan(normalize_placeholders(sql)[0])
     try:
         js = jplan.toJSON()
         return {

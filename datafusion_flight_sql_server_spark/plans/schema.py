@@ -66,16 +66,12 @@ def qualifier_metadata(df: DataFrame) -> dict[str, str]:
     (tests/schema_metadata_test.rs:113-179).
     """
     out: dict[str, str] = {}
-    try:
-        jdf = df._jdf
-        attrs = jdf.queryExecution().analyzed().output()
-        for i in range(attrs.size()):
-            attr = attrs.apply(i)
-            qual = attr.qualifier()
-            if qual.size() > 0:
-                out[attr.name()] = qual.apply(qual.size() - 1)
-    except Exception:  # pragma: no cover - Connect / JVM-less fallback
-        pass
+    attrs = df._jdf.queryExecution().analyzed().output()
+    for i in range(attrs.size()):
+        attr = attrs.apply(i)
+        qual = attr.qualifier()
+        if qual.size() > 0:
+            out[attr.name()] = qual.apply(qual.size() - 1)
     return out
 
 
@@ -236,12 +232,6 @@ def _infer_types_from_plan(
     Analysis failure (e.g. a placeholder where a literal is required, such
     as LIMIT) falls back to the string default.
     """
-    # Probe ONLY query statements: spark.sql() executes command plans
-    # (INSERT/CTAS/...) EAGERLY, so probing a DML statement would write
-    # marker rows into the user's table during schema inference.
-    head = re.sub(r"^\s*(--[^\n]*\n\s*)*", "", sql).lstrip("(").lstrip()
-    if not re.match(r"(?i)(SELECT|WITH|VALUES|TABLE)\b", head):
-        return {}
     probe = sql
     for name in sorted(names, key=len, reverse=True):  # $10 before $1
         # LIMIT/OFFSET placeholders are already grammar-typed int64 and a
@@ -255,9 +245,10 @@ def _infer_types_from_plan(
             else f"'<!p:{name}!>'"
         )
         probe = re.sub(r"\$" + re.escape(name) + r"\b", marker, probe)
-    # The head regex alone admits `WITH cte AS (...) INSERT INTO ...` —
-    # classify the parsed (unexecuted) probe tree and require a pure query
-    # before handing it to spark.sql (round-6 fix, ADVICE r5).
+    # Probe ONLY query statements: spark.sql() executes command plans
+    # (INSERT/CTAS/...) EAGERLY, so probing a DML statement would write
+    # marker rows into the user's table during schema inference. The
+    # parsed (unexecuted) probe tree decides, as the gate does.
     if not is_pure_query(spark, probe):
         return {}
     try:
@@ -305,8 +296,7 @@ def _comparison_marker_types(analyzed) -> dict[str, str]:
     ``<!p:name!>`` marker literal on one side (possibly under implicit
     casts), map the marker name to the OTHER side's cast-stripped
     expression type (Spark type text, lowercased). Recurses into subquery
-    expression plans. Best-effort: any JVM hiccup returns what was
-    gathered so far."""
+    expression plans."""
 
     def _strip_cast(e):
         while e.getClass().getSimpleName() in ("Cast", "AnsiCast", "TryCast"):
@@ -327,38 +317,33 @@ def _comparison_marker_types(analyzed) -> dict[str, str]:
         return None
 
     out: dict[str, str] = {}
-    try:
-        plans = [analyzed]
-        while plans:
-            node = plans.pop()
-            ch = node.children()
-            for i in range(ch.size()):
-                plans.append(ch.apply(i))
-            exprs = node.expressions()
-            stack = [exprs.apply(i) for i in range(exprs.size())]
-            while stack:
-                e = stack.pop()
-                cls = e.getClass().getSimpleName()
-                if cls in _CMP_CLASSES:
-                    for side, other in (
-                        (e.left(), e.right()),
-                        (e.right(), e.left()),
-                    ):
-                        nm = _marker_name(side)
-                        if nm and nm not in out:
-                            out[nm] = (
-                                _strip_cast(other).dataType().sql().lower()
-                            )
-                # subquery expressions carry their own logical plans
-                try:
-                    plans.append(e.plan())
-                except Exception:
-                    pass
-                ech = e.children()
-                for i in range(ech.size()):
-                    stack.append(ech.apply(i))
-    except Exception:  # pragma: no cover - Connect / JVM-less fallback
-        pass
+    plans = [analyzed]
+    while plans:
+        node = plans.pop()
+        ch = node.children()
+        for i in range(ch.size()):
+            plans.append(ch.apply(i))
+        exprs = node.expressions()
+        stack = [exprs.apply(i) for i in range(exprs.size())]
+        while stack:
+            e = stack.pop()
+            cls = e.getClass().getSimpleName()
+            if cls in _CMP_CLASSES:
+                for side, other in (
+                    (e.left(), e.right()),
+                    (e.right(), e.left()),
+                ):
+                    nm = _marker_name(side)
+                    if nm and nm not in out:
+                        out[nm] = _strip_cast(other).dataType().sql().lower()
+            # subquery expressions carry their own logical plans
+            try:
+                plans.append(e.plan())
+            except Exception:
+                pass
+            ech = e.children()
+            for i in range(ech.size()):
+                stack.append(ech.apply(i))
     return out
 
 

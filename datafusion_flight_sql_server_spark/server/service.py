@@ -23,10 +23,10 @@ datafusion-flight-sql-server/src/service.rs:194-1014) on
 
 Results stream batch-at-a-time via ``Engine.execute_stream`` — the driver
 never holds a whole result over 4 MB (service.rs:186-191 behavior; SURVEY
-§7 H1; smaller ones may be kept for reuse, see "Declared divergences"). On
-classic sessions the batches are Spark's own JVM-side Arrow encoding, pulled
-to the driver in partition groups as serialized record batches and decoded
-there: no Python worker and no pickling sit on the result path. Batches
+§7 H1; smaller ones may be kept for reuse, see "Declared divergences"). The
+batches are Spark's own JVM-side Arrow encoding, pulled to the driver in
+partition groups as serialized record batches and decoded there: no
+Python worker and no pickling sit on the result path. Batches
 pass through as Spark cut them, so their size is the session's
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` — the analogue of
 DataFusion's session ``batch_size``, which is where the reference takes its
@@ -39,6 +39,10 @@ state and any replica can serve the DoGet (state.rs:55-58).
 
 Declared divergences (client-compat debugging starts here):
 
+- **Classic sessions only**: the engine serves a classic (JVM-backed)
+  SparkSession. ``Engine`` refuses a Spark Connect session with
+  ``ClassicSessionRequired``, since the result path, the result cache and
+  the statement gate all read the session's JVM.
 - **Substrait** (SURVEY §7 H4; narrowed in round 4): the reference hands
   serialized Substrait plans to DataFusion's full consumer
   (``get_flight_info_substrait_plan`` service.rs:349-386, DoGet branch
@@ -52,9 +56,9 @@ Declared divergences (client-compat debugging starts here):
   NOT_IMPLEMENTED with the unsupported construct named — those clients
   must send SQL text instead.
 - **Result reuse** (the reference re-executes every DoGet,
-  service.rs:186-190): on a classic session a DoGet whose statement was
-  already answered whole may be served from the engine's bounded result
-  cache without starting a Spark job (``Engine.execute_stream``). The gate
+  service.rs:186-190): a DoGet whose statement was already answered whole
+  may be served from the engine's bounded result cache without starting a
+  Spark job (``Engine.execute_stream``). The gate
   still runs on every DoGet, and tickets stay stateless. A result is
   reused only for the same plan-memo entry (see "Plan reuse") and declared
   schema, when the plan holds no clock or session function, so results

@@ -554,6 +554,57 @@ class TestCatalogSqlOverWire:
             client.execute("SET spark.sql.shuffle.partitions=1")
 
 
+class TestGateOverWire:
+    """The default (queries-only) server rejects, before any bind,
+    statements whose bind would run a command eagerly."""
+
+    @pytest.fixture
+    def table(self, spark, tmp_path):
+        spark.sql(
+            f"CREATE TABLE gate_t (id INT, name STRING) USING parquet "
+            f"LOCATION '{tmp_path / 'gate_t'}'"
+        )
+        spark.sql("INSERT INTO gate_t VALUES (1, 'a')")
+        yield "gate_t"
+        spark.sql("DROP TABLE IF EXISTS gate_t")
+
+    def test_prepared_insert_with_placeholder_rejected(self, spark, client, table):
+        # planning the prepared statement's schema NULL-binds $1, and an
+        # INSERT binds eagerly
+        with pytest.raises(fl.FlightError, match="DML not supported"):
+            client.prepare(f"/**/ INSERT INTO {table} VALUES ($1, 'x')")
+        assert spark.table(table).count() == 1
+
+    def test_execute_immediate_drop_rejected(self, spark, client, table):
+        with pytest.raises(fl.FlightError, match="Statements not supported"):
+            client.execute(f"EXECUTE IMMEDIATE 'DROP TABLE {table}'")
+        assert spark.catalog.tableExists(table)
+
+    def test_execute_immediate_insert_rejected(self, spark, client, table):
+        with pytest.raises(fl.FlightError, match="Statements not supported"):
+            client.execute(
+                f"EXECUTE IMMEDIATE 'INSERT INTO {table} VALUES (2, ''b'')'"
+            )
+        assert spark.table(table).count() == 1
+
+    def test_unparseable_statement_fails_before_bind(self, client, monkeypatch):
+        from datafusion_flight_sql_server_spark.engine import core
+
+        binds = []
+        bind_sql = core.bind_sql
+
+        def _spy(spark, sql, params=None):
+            binds.append(sql)
+            return bind_sql(spark, sql, params)
+
+        monkeypatch.setattr(core, "bind_sql", _spy)
+        with pytest.raises(fl.FlightError, match="PARSE_SYNTAX_ERROR"):
+            client.execute("SELECT 1 +")
+        assert binds == []
+        # the server keeps serving
+        assert client.execute("SELECT 1 AS one").column("one").to_pylist() == [1]
+
+
 class TestGetSqlInfo:
     def test_sql_info_minimal_fill(self, client):
         # parity-plus (reference stubs GetSqlInfo, service.rs:518-530):

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import pyarrow as pa
 import pytest
+from pyspark.errors import ParseException
 from pyspark.sql import functions as F
 
 from datafusion_flight_sql_server_spark.engine.core import Engine
@@ -20,6 +21,7 @@ from datafusion_flight_sql_server_spark.engine.registry import register_memtable
 from datafusion_flight_sql_server_spark.plans.gate import (
     PlanVerificationError,
     SQLOptions,
+    is_pure_query,
 )
 from datafusion_flight_sql_server_spark.plans.params import (
     ParameterError,
@@ -57,6 +59,7 @@ class TestGate:
 
     CASES = [
         ("SELECT * FROM users", "query"),
+        ("SHOW TBLPROPERTIES users", "query"),
         ("WITH t AS (SELECT 1 AS x) SELECT * FROM t", "query"),
         ("EXPLAIN SELECT 1", "query"),
         ("CREATE TABLE t2 (x INT) USING parquet", "ddl"),
@@ -78,6 +81,40 @@ class TestGate:
         ("RESET", "statement"),
         ("CACHE TABLE users", "statement"),
         ("REFRESH TABLE users", "statement"),
+        # the gate parses the text bind_sql sends: $n/$name become Spark
+        # named parameters, so prepared statements are classified by the
+        # parse, not by their first keyword
+        ("SELECT * FROM users WHERE id = $1", "query"),
+        ("SELECT * FROM users WHERE name = $who LIMIT $2 OFFSET $3", "query"),
+        ("SELECT '$1' AS s FROM users WHERE id IN "
+         "(SELECT user_id FROM orders WHERE amount > $1)", "query"),
+        ("/**/ INSERT INTO users VALUES ($1, 'x')", "dml"),
+        # EXECUTE IMMEDIATE hides its statement in a string; session
+        # variables are session state
+        ("EXECUTE IMMEDIATE 'DROP TABLE users'", "statement"),
+        ("EXECUTE IMMEDIATE 'SELECT 1'", "statement"),
+        ("DECLARE v INT", "statement"),
+        ("SET VAR v = 3", "statement"),
+        ("DROP TEMPORARY VARIABLE v", "statement"),
+        # catalog changes whose parsed plans carry no Create/Drop/Alter
+        # class name
+        ("CREATE TEMPORARY VIEW tv USING parquet OPTIONS (path '/nonexistent')",
+         "ddl"),
+        ("CREATE TEMPORARY FUNCTION f(x INT) RETURNS INT RETURN x + 1", "ddl"),
+        ("CREATE FUNCTION f(x INT) RETURNS INT RETURN x + 1", "ddl"),
+        ("COMMENT ON TABLE users IS 'x'", "ddl"),
+        ("ALTER TABLE users SET TBLPROPERTIES ('a' = 'b')", "ddl"),
+        ("ALTER TABLE users UNSET TBLPROPERTIES ('a')", "ddl"),
+        ("ALTER TABLE users SET SERDEPROPERTIES ('a' = 'b')", "ddl"),
+        ("ALTER TABLE users SET LOCATION '/nonexistent'", "ddl"),
+        ("ALTER TABLE users REPLACE COLUMNS (a INT)", "ddl"),
+        ("ALTER TABLE users ADD PARTITION (p = 1)", "ddl"),
+        ("ALTER TABLE users DROP PARTITION (p = 1)", "ddl"),
+        ("ALTER TABLE users RECOVER PARTITIONS", "ddl"),
+        ("ALTER TABLE users PARTITION (p = 1) RENAME TO PARTITION (p = 2)",
+         "ddl"),
+        ("REFRESH '/nonexistent'", "statement"),
+        ("CALL spark_catalog.system.p()", "statement"),
     ]
 
     @pytest.mark.parametrize("sql,category", CASES)
@@ -97,6 +134,91 @@ class TestGate:
         SQLOptions(allow_statements=True).verify(spark, "RESET")
         with pytest.raises(PlanVerificationError):
             SQLOptions(allow_ddl=True).verify(spark, "RESET")
+
+    def test_unparseable_statement_fails_with_spark_parse_error(self, spark):
+        # no keyword fallback: what Spark cannot parse never reaches a bind
+        with pytest.raises(ParseException, match="PARSE_SYNTAX_ERROR"):
+            SQLOptions().verify(spark, "SELECT 1 +")
+        assert not is_pure_query(spark, "SELECT 1 +")
+
+    def test_dml_probe_is_not_pure(self, spark):
+        assert is_pure_query(spark, "SELECT * FROM users WHERE id = $1")
+        assert not is_pure_query(spark, "/**/ INSERT INTO users VALUES ($1, 'x')")
+        assert not is_pure_query(spark, "EXECUTE IMMEDIATE 'SELECT 1'")
+
+
+class TestClassicOnly:
+    def test_jvm_less_session_refused(self):
+        from pyspark.errors import PySparkAttributeError
+
+        from datafusion_flight_sql_server_spark.engine.core import (
+            ClassicSessionRequired,
+        )
+
+        class _ConnectSession:
+            """What a Spark Connect session answers for its JVM handles."""
+
+            def __getattr__(self, name):
+                raise PySparkAttributeError(
+                    errorClass="JVM_ATTRIBUTE_NOT_SUPPORTED",
+                    messageParameters={"attr_name": name},
+                )
+
+        with pytest.raises(ClassicSessionRequired, match="only classic"):
+            Engine(_ConnectSession())
+
+
+class TestBenchmarkStatementsParse:
+    """Every statement text the benchmark workloads send classifies as a
+    query through the gate's parse, so none of them relies on a keyword
+    classifier."""
+
+    class _Oracle:
+        """Stand-in for the workloads' DuckDB oracle: keys and expected
+        answers only, enough to generate the request streams."""
+
+        def key_range(self, table, key):
+            return list(range(1, 1000))
+
+        def lookups(self, table, key, keys):
+            return dict.fromkeys(keys, ())
+
+        def digest(self, sql):
+            return ()
+
+        def schema_names(self, sql):
+            return ()
+
+    @pytest.fixture(scope="class")
+    def statements(self):
+        import sys
+        from pathlib import Path
+
+        sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "perfbench"))
+        try:
+            import workloads
+        finally:
+            sys.path.pop(0)
+        texts = set()
+        for seed in (5, 7):
+            for make in workloads.WORKLOADS.values():
+                for stream in make(seed, self._Oracle(), 12):
+                    texts.update(r.sql for r in stream if r.sql)
+        for tpl, params in workloads.AGGREGATIONS.values():
+            texts.update(tpl.format(p=p) for p in params)
+        texts.add(workloads.PREPARED_LOOKUP)
+        return sorted(texts)
+
+    def test_all_classify_as_query(self, spark, statements):
+        from datafusion_flight_sql_server_spark.plans.dialect import rewrite_sql
+
+        # the three workloads' lookups, scans, probes, aggregations and
+        # the prepared lookup
+        assert len(statements) > 20
+        assert any("$1" in sql for sql in statements)
+        gate = SQLOptions()
+        for sql in statements:
+            assert gate.verify(spark, rewrite_sql(sql)) == "query", sql
 
 
 class TestParams:
@@ -319,61 +441,12 @@ class TestExecuteStream:
             v for b in batches for v in b.column("id").to_pylist()
         ) == list(range(90, 100))
 
-    def test_rddless_session_streams_arrow_not_rows(self, spark, monkeypatch):
-        # Spark Connect has no JVM handle: the stream must take the Arrow
-        # toLocalIterator path (Connect once silently degraded to rows).
-        # The simulation removes the classic entry (``_jdf``, which a
-        # Connect DataFrame refuses with an AttributeError) and spies on
-        # toLocalIterator to prove that branch ran.
-        engine = Engine(spark)
-        local_iters = []
-        classic = type(spark.range(1))
-        to_local_iterator = classic.toLocalIterator
-
-        def _spy(self, *a, **k):
-            local_iters.append(self)
-            return to_local_iterator(self, *a, **k)
-
-        monkeypatch.setattr(classic, "toLocalIterator", _spy)
-        df = _ConnectLike(
-            spark.range(0, 5_000, 1, 4).selectExpr("id", "cast(id as string) AS s")
-        )
-        batches = list(engine.execute_stream(df))
-        assert sum(b.num_rows for b in batches) == 5_000
-        assert len(local_iters) == 1
-        # empty results also resolve through the iterator path
-        empty = _ConnectLike(spark.range(10).where("id < 0"))
-        assert list(engine.execute_stream(empty)) == []
-        assert len(local_iters) == 2
-
-
-class _ConnectLike:
-    """A classic DataFrame seen the way Spark Connect presents one: every
-    public method works, but the JVM handle ``_jdf`` raises."""
-
-    def __init__(self, df):
-        self._df = df
-
-    def __getattr__(self, name):
-        if name == "_jdf":
-            raise AttributeError("JVM_ATTRIBUTE_NOT_SUPPORTED: _jdf")
-        return getattr(self._df, name)
-
-
-def _poison(*a, **k):
-    raise AssertionError("left the JVM Arrow path")
-    yield  # pragma: no cover
-
 
 class TestJvmArrowPath:
-    """Classic sessions stream Spark's JVM-encoded Arrow batches: no
-    ``mapInArrow`` encoder."""
+    """Results stream Spark's JVM-encoded Arrow batches."""
 
     @pytest.fixture
-    def engine(self, spark, monkeypatch):
-        from datafusion_flight_sql_server_spark.engine import core
-
-        monkeypatch.setattr(core, "_make_ipc_encoder", _poison)
+    def engine(self, spark):
         return Engine(spark)
 
     @pytest.fixture
