@@ -83,8 +83,8 @@ class Engine:
         evicts for in-place REPLACEs (ADVICE r11). The post-invalidation
         runs in ``finally`` so a failed DDL (which may have partially
         mutated the catalog) is covered too. DML joins DDL and commands
-        in clearing the plan memo and the result cache at the same two
-        points."""
+        in clearing the plan memo, and with it every kept result, at the
+        same two points."""
         key, live = self._memo_key(sql, params)
         seen = _PLAN_MEMO.get(key)
         memo = seen if seen is not None and seen.views.equals(live) else None
@@ -108,7 +108,7 @@ class Engine:
         if not mutates:
             _PLAN_MEMO.count("misses")
             if memo is None or not memo.failed:
-                memo = _PLAN_MEMO.add(key, _Plan(category, df, views, planned_ns), seen)
+                memo = _PLAN_MEMO.add(_Plan(key, category, df, views, planned_ns), seen)
             df._plan_memo = memo
         return df
 
@@ -136,7 +136,6 @@ class Engine:
 
     def _invalidate(self, category: str) -> None:
         _PLAN_MEMO.clear()
-        _RESULT_CACHE.clear()
         if category != "dml":
             self.invalidate_info_schema_cache()
 
@@ -187,8 +186,8 @@ class Engine:
           many partitions streams through a bounded window instead of
           landing whole on the driver the way ``collect()``/``toArrow()``
           would (tested on ``local[N]``). Whole results of 4 MB or less
-          may be retained for reuse, 32 MB across all of them
-          (``_RESULT_CACHE``).
+          may be kept for reuse on their ``_PLAN_MEMO`` entry, 32 MB
+          across all of them.
 
         The driver pulls partitions in ADAPTIVELY-GROWING GROUPS, one Spark
         job per group, rather than one job per partition: at local
@@ -208,10 +207,11 @@ class Engine:
         ``DataFrame.toArrow()`` does, before any Spark job runs.
 
         **Result reuse**: a repeated statement whose ``_PLAN_MEMO`` entry
-        (``sql_to_plan``) is servable is
-        served from ``_RESULT_CACHE`` without starting a Spark job; the
-        gate still ran for it. Results are keyed by that entry and the
-        declared Arrow ``schema``. An entry stands for one session, SQL
+        (``sql_to_plan``) is servable is served from the result kept on
+        that entry without starting a Spark job; the gate still ran for
+        it. An entry keeps at most one result, served only for the same
+        declared Arrow ``schema``, and drops it when the entry is
+        evicted, replaced or cleared. An entry stands for one session, SQL
         conf, SQL text and parameter values over unchanged session temp
         views and unchanged local input files and listed directories
         (path, size, ``mtime_ns``, inode), so a result is only reused
@@ -235,14 +235,7 @@ class Engine:
 
         if schema is None:
             schema = arrow_schema_for_df(df)
-        entry = _RESULT_CACHE.lookup(df, schema)
-        if entry is not None and entry.batches is not None:
-            yield from entry.batches
-            return
-        batches = _jvm_batches(df, schema)
-        if entry is not None:
-            batches = _RESULT_CACHE.admitting(entry, batches)
-        yield from batches
+        yield from _PLAN_MEMO.result(df, schema, _jvm_batches(df, schema))
 
     def new_session(self) -> "Engine":
         """Per-request isolated session (shared JVM/catalog, own temp views).
@@ -604,14 +597,12 @@ _PULL_BUDGET = 128 << 20
 # concurrently; more streams interleave their groups instead of stacking.
 _PULL_POOL_TOTAL = 512 << 20
 
-# Result reuse (``execute_stream``): bytes of retained Arrow buffers in
-# total and per entry, and an entry count, since every entry pins the
-# analyzed JVM plan of its ``_PLAN_MEMO`` entry.
+# Result reuse (``execute_stream``): bytes of Arrow buffers kept on
+# ``_PLAN_MEMO`` entries in total and per entry.
 _RESULT_CACHE_BYTES = 32 << 20
 _RESULT_ENTRY_BYTES = 4 << 20
-_RESULT_CACHE_ENTRIES = 256
 # Plan reuse (``Engine.sql_to_plan``): memoized statements, each pinning
-# one analyzed JVM plan.
+# one analyzed JVM plan and keeping at most one result.
 _PLAN_MEMO_ENTRIES = 256
 
 
@@ -700,7 +691,7 @@ _UDF_PATTERNS = (
 #: rows are fixed by the plan plus the stat of every input file.
 _PLAN_LEAVES = frozenset({"LocalRelation", "OneRowRelation", "Range", "CTERelationRef"})
 #: Why a statement is planned afresh every time (``_PLAN_MEMO``) and its
-#: result never reused (``_RESULT_CACHE``).
+#: result never reused.
 _PLAN_REASONS = (
     "not_deterministic",
     "udf",
@@ -728,20 +719,23 @@ _ONE_PART_RE = re.compile(r"`(?:[^`]|``)*`")
 
 
 class _Plan:
-    """One statement of the plan memo (``Engine.sql_to_plan``).
+    """One statement of the plan memo (``Engine.sql_to_plan``) under
+    ``key``.
 
     Made on the statement's first planning from its analyzed plan, the
     session's temp-view map as it was before that planning (``views``)
     and the time the planning began. The walk that fingerprints the plan
     (``build``) runs on the statement's second sighting, or when its
-    first DoGet asks the result cache about it, never on a first
-    GetFlightInfo. A built entry holds the analyzed plan, the Spark
-    schema and the stat of every input file and listed directory; it is
-    served while the session's temp views equal ``views`` and the stats
-    are unchanged. ``reason`` is why it cannot be served. Hashed by
-    identity: the result cache keys results by their entry."""
+    first DoGet asks for a kept result, never on a first GetFlightInfo.
+    A built entry holds the analyzed plan, the Spark schema and the stat
+    of every input file and listed directory; it is served while the
+    session's temp views equal ``views`` and the stats are unchanged.
+    ``reason`` is why it cannot be served. ``result`` is the one complete
+    result an entry in the memo may keep (``_PlanMemo.result``): the
+    declared schema's bytes, the batches and their byte count, or None."""
 
     __slots__ = (
+        "key",
         "category",
         "views",
         "planned_ns",
@@ -751,15 +745,17 @@ class _Plan:
         "inputs",
         "reusable",
         "reason",
+        "result",
     )
 
-    def __init__(self, category: str, df, views, planned_ns: int):
+    def __init__(self, key, category: str, df, views, planned_ns: int):
+        self.key = key
         self.category = category
         self.views = views
         self.planned_ns = planned_ns
         self.plan = df._jdf.queryExecution().analyzed()
         self._jvm = df.sparkSession._jvm
-        self.struct = self.inputs = self.reason = None
+        self.struct = self.inputs = self.reason = self.result = None
         self.reusable = False
 
     @property
@@ -804,35 +800,61 @@ class _Plan:
 
 class _PlanMemo:
     """Bounded LRU of ``_Plan`` entries by (session UUID, SQL conf, SQL
-    text, typed parameters). One lock guards the LRU and the counters;
-    no py4j call runs under it."""
+    text, typed parameters), and the results they keep: at most
+    ``max_entry_bytes`` each and ``max_bytes`` in all. One lock guards the
+    LRU, the results and the counters; no py4j call runs under it."""
 
-    def __init__(self, max_entries: int):
+    def __init__(
+        self,
+        max_entries: int,
+        max_bytes: int = _RESULT_CACHE_BYTES,
+        max_entry_bytes: int = _RESULT_ENTRY_BYTES,
+    ):
         self.max_entries = max_entries
+        self.max_bytes = max_bytes
+        self.max_entry_bytes = max_entry_bytes
         self._lock = threading.Lock()
         self._lru: OrderedDict = OrderedDict()  # key -> _Plan, oldest first
+        self._bytes = 0  # of the results kept on entries of ``_lru``
         self._counts = dict.fromkeys(("hits", "misses", *_PLAN_REASONS), 0)
+        self._results = dict.fromkeys(
+            ("hits", "misses", "admitted", "evicted", *_BYPASS_REASONS), 0
+        )
 
     def stats(self) -> dict:
         """Counter snapshot: hits (served without analysis), misses
-        (analyzed), bypasses by reason (counted once per entry) and
-        entries."""
+        (analyzed), bypasses by reason (counted once per entry), entries,
+        and under ``results`` the result hits, misses, bypasses by reason,
+        admitted, evicted (by the bounds; ``clear`` and replacement are
+        not counted), kept bytes and entries keeping a result."""
         with self._lock:
-            c = dict(self._counts)
+            c, r = dict(self._counts), dict(self._results)
             return {
                 "hits": c["hits"],
                 "misses": c["misses"],
-                "bypasses": {r: c[r] for r in _PLAN_REASONS},
+                "bypasses": {k: c[k] for k in _PLAN_REASONS},
                 "entries": len(self._lru),
+                "results": {
+                    "hits": r["hits"],
+                    "misses": r["misses"],
+                    "bypasses": {k: r[k] for k in _BYPASS_REASONS},
+                    "admitted": r["admitted"],
+                    "evicted": r["evicted"],
+                    "bytes": self._bytes,
+                    "entries": sum(e.result is not None for e in self._lru.values()),
+                },
             }
 
     def clear(self) -> None:
         with self._lock:
+            for entry in self._lru.values():
+                entry.result = None
             self._lru.clear()
+            self._bytes = 0
 
-    def count(self, name: str) -> None:
+    def count(self, name: str, results: bool = False) -> None:
         with self._lock:
-            self._counts[name] += 1
+            (self._results if results else self._counts)[name] += 1
 
     def get(self, key) -> _Plan | None:
         with self._lock:
@@ -841,25 +863,100 @@ class _PlanMemo:
                 self._lru.move_to_end(key)
             return entry
 
-    def add(self, key, entry: _Plan, seen: _Plan | None) -> _Plan:
+    def add(self, entry: _Plan, seen: _Plan | None) -> _Plan:
         """Put ``entry`` in place of ``seen``. When a concurrent planning
         of the statement put another entry there since, over the same temp
         views and inputs, return that one instead, so concurrent identical
-        statements share one entry and one cached result (with a plain
-        overwrite, 8 identical first DoGets admitted their result twice)."""
+        statements share one entry and one kept result (with a plain
+        overwrite, 8 identical first DoGets admitted their result twice).
+        An entry returned without being put in the memo keeps no result."""
+        key = entry.key
         with self._lock:
             current = self._lru.get(key)
             if current is None or current is seen:
+                if current is not None:
+                    self._drop(current)
                 self._lru[key] = entry
                 self._lru.move_to_end(key)
                 while len(self._lru) > self.max_entries:
-                    self._lru.popitem(last=False)
+                    _, old = self._lru.popitem(last=False)
+                    if old.result is not None:
+                        self._drop(old)
+                        self._results["evicted"] += 1
                 return entry
         if current.failed or not current.views.equals(entry.views):
             return entry
         if current.inputs is not None and not current.servable():
             return entry
         return current
+
+    def _drop(self, entry: _Plan) -> None:
+        """Drop the result ``entry`` keeps; under the lock."""
+        if entry.result is not None:
+            self._bytes -= entry.result[2]
+            entry.result = None
+
+    def result(self, df, schema, batches):
+        """The result of ``df`` as declared by ``schema``: the batches its
+        entry keeps on a hit, else ``batches``, which a miss passes
+        through ``_admitting``. A DataFrame that ``Engine.sql_to_plan``
+        did not plan is not reused."""
+        entry = getattr(df, "_plan_memo", None)
+        reason = "unplanned" if entry is None else entry.result_reason()
+        if reason is not None:
+            self.count(reason, results=True)
+            return batches
+        declared = schema.serialize().to_pybytes()
+        with self._lock:
+            kept = entry.result
+            if kept is not None and kept[0] == declared:
+                self._results["hits"] += 1
+                return iter(kept[1])
+            self._results["misses"] += 1
+        return self._admitting(entry, declared, batches)
+
+    def _admitting(self, entry: _Plan, declared: bytes, batches):
+        """Pass ``batches`` through; keep them on ``entry`` once the stream
+        has run to its end within ``max_entry_bytes``. An error, a close
+        by the consumer (``GeneratorExit``) or the crossing batch drops
+        what was collected."""
+        kept: list | None = []
+        nbytes = 0
+        complete = False
+        try:
+            for batch in batches:
+                if kept is not None:
+                    nbytes += batch.get_total_buffer_size()
+                    if nbytes > self.max_entry_bytes:
+                        kept = None
+                        self.count("over_cap", results=True)
+                    else:
+                        kept.append(batch)
+                yield batch
+            complete = True
+        finally:
+            if kept is not None:
+                if complete:
+                    self._admit(entry, (declared, kept, nbytes))
+                else:
+                    self.count("incomplete", results=True)
+
+    def _admit(self, entry: _Plan, result: tuple) -> None:
+        """Keep ``result`` on ``entry`` while it is in the memo and keeps
+        none (concurrent misses of one statement admit it once), then drop
+        the results of the oldest entries down to ``max_bytes``."""
+        with self._lock:
+            if entry.result is not None or self._lru.get(entry.key) is not entry:
+                return
+            entry.result = result
+            self._bytes += result[2]
+            self._results["admitted"] += 1
+            for old in self._lru.values():
+                if self._bytes <= self.max_bytes:
+                    break
+                if old.result is not None:
+                    self._drop(old)
+                    self._results["evicted"] += 1
 
 
 def _params_key(params):
@@ -951,124 +1048,6 @@ def _stat_inputs(files: tuple, dirs: tuple):
     return files, dirs, fstats, dstats
 
 
-class _Entry:
-    """One result under ``key``; ``batches`` stays None until a complete
-    stream fills it. Hashed by identity."""
-
-    __slots__ = ("key", "batches", "nbytes")
-
-    def __init__(self, key):
-        self.key = key
-        self.batches = None
-        self.nbytes = 0
-
-
-class _ResultCache:
-    """Bounded LRU of complete Arrow results (``execute_stream``), keyed
-    by the statement's ``_PLAN_MEMO`` entry and the declared schema. One
-    lock guards the LRU and the counters."""
-
-    def __init__(self, max_bytes: int, max_entry_bytes: int, max_entries: int):
-        self.max_bytes = max_bytes
-        self.max_entry_bytes = max_entry_bytes
-        self.max_entries = max_entries
-        self._lock = threading.Lock()
-        self._lru: OrderedDict = OrderedDict()  # _Entry -> None, oldest first
-        self._entries: dict = {}  # key -> _Entry
-        self._bytes = 0
-        self._counts = dict.fromkeys(
-            ("hits", "misses", "admitted", "evicted", *_BYPASS_REASONS), 0
-        )
-
-    def stats(self) -> dict:
-        """Counter snapshot: hits, misses, bypasses by reason, admitted,
-        evicted (by the bounds; ``clear`` is not counted), retained bytes
-        and entries."""
-        with self._lock:
-            c = dict(self._counts)
-            return {
-                "hits": c["hits"],
-                "misses": c["misses"],
-                "bypasses": {r: c[r] for r in _BYPASS_REASONS},
-                "admitted": c["admitted"],
-                "evicted": c["evicted"],
-                "bytes": self._bytes,
-                "entries": len(self._lru),
-            }
-
-    def clear(self) -> None:
-        with self._lock:
-            self._lru.clear()
-            self._entries.clear()
-            self._bytes = 0
-
-    def _count(self, name: str) -> None:
-        with self._lock:
-            self._counts[name] += 1
-
-    def lookup(self, df, schema) -> _Entry | None:
-        """The cached entry on a hit; on a miss an empty entry to admit
-        through ``admitting``; None when the statement is not reusable
-        (a DataFrame that ``Engine.sql_to_plan`` did not plan is not)."""
-        memo = getattr(df, "_plan_memo", None)
-        reason = "unplanned" if memo is None else memo.result_reason()
-        if reason is not None:
-            self._count(reason)
-            return None
-        key = (memo, schema.serialize().to_pybytes())
-        with self._lock:
-            entry = self._entries.get(key)
-            if entry is not None:
-                self._lru.move_to_end(entry)
-                self._counts["hits"] += 1
-                return entry
-            self._counts["misses"] += 1
-        return _Entry(key)
-
-    def admitting(self, entry: _Entry, batches):
-        """Pass ``batches`` through; admit them as ``entry`` once the
-        stream has run to its end within ``max_entry_bytes``. An error, a
-        close by the consumer (``GeneratorExit``) or the crossing batch
-        drops what was collected."""
-        kept: list | None = []
-        nbytes = 0
-        complete = False
-        try:
-            for batch in batches:
-                if kept is not None:
-                    nbytes += batch.get_total_buffer_size()
-                    if nbytes > self.max_entry_bytes:
-                        kept = None
-                        self._count("over_cap")
-                    else:
-                        kept.append(batch)
-                yield batch
-            complete = True
-        finally:
-            if kept is not None:
-                if complete:
-                    entry.batches, entry.nbytes = kept, nbytes
-                    self._admit(entry)
-                else:
-                    self._count("incomplete")
-
-    def _admit(self, entry: _Entry) -> None:
-        """Add ``entry`` and evict to the bounds; concurrent misses of one
-        statement admit it once."""
-        with self._lock:
-            if entry.key in self._entries:
-                return
-            self._lru[entry] = None
-            self._entries[entry.key] = entry
-            self._bytes += entry.nbytes
-            self._counts["admitted"] += 1
-            while self._bytes > self.max_bytes or len(self._lru) > self.max_entries:
-                old, _ = self._lru.popitem(last=False)
-                del self._entries[old.key]
-                self._bytes -= old.nbytes
-                self._counts["evicted"] += 1
-
-
 @functools.lru_cache(maxsize=1)
 def _jvm_refs(jvm) -> tuple:
     """(``_UDF_PATTERNS``, ``CURRENT_LIKE``, classic ``Dataset``) as JVM
@@ -1083,9 +1062,6 @@ def _jvm_refs(jvm) -> tuple:
 
 
 _PLAN_MEMO = _PlanMemo(_PLAN_MEMO_ENTRIES)
-_RESULT_CACHE = _ResultCache(
-    _RESULT_CACHE_BYTES, _RESULT_ENTRY_BYTES, _RESULT_CACHE_ENTRIES
-)
 
 
 def _grouped_pull(

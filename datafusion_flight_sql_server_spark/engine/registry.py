@@ -169,7 +169,7 @@ def register_memtable(
     tests/integration_test.rs:34-35,53-55). ``schema`` is a Spark StructType
     or DDL string. The rows reach Spark as one Arrow table, which plans as a
     ``LocalRelation`` (a Python list plans as a scan of pickled rows), so
-    the engine's result cache can reuse statements over the table.
+    the engine can reuse the results of statements over the table.
     """
     if isinstance(schema, str):
         schema = T.DataType.fromDDL(schema)

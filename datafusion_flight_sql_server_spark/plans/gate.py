@@ -62,7 +62,7 @@ _DDL_FRAGMENTS = (
     "CreateUserDefinedFunction",  # CREATE FUNCTION ... RETURN (SQL UDF)
     "CreateSQLFunction",
     "CommentOn",
-    "SetTableProperties",  # not ShowTableProperties
+    "SetTableProperties",
     "UnsetTableProperties",
     "SetTableSerDeProperties",
     "SetTableLocation",
@@ -151,10 +151,17 @@ QUERY_ONLY = SQLOptions(allow_ddl=False, allow_dml=False, allow_statements=False
 
 def _classify(spark: SparkSession, sql: str) -> str:
     """Classify a statement as 'query' | 'ddl' | 'dml' | 'statement'."""
-    classes = _parsed_plan_classes(spark, sql)
     # Walk EVERY node, not just the root: `WITH cte AS (...) INSERT
     # INTO ...` parses to UnresolvedWith with the DML node as its
     # child, so a root-only check admits CTE-wrapped DML (round-6 fix).
+    # SHOW and DESCRIBE nodes only read, but a name such as
+    # ShowCreateTable holds a fragment: they are skipped, their children
+    # are not.
+    classes = {
+        cls
+        for cls in _parsed_plan_classes(spark, sql)
+        if not cls.startswith(("Show", "Describe"))
+    }
     if any(f in cls for cls in classes for f in _DDL_FRAGMENTS):
         return "ddl"
     if any(f in cls for cls in classes for f in _DML_FRAGMENTS):

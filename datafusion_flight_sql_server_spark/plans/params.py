@@ -31,6 +31,8 @@ class ParameterError(Exception):
 
 # $1 / $name placeholders outside of quoted strings.
 _PLACEHOLDER_RE = re.compile(r"\$([A-Za-z_][A-Za-z_0-9]*|\d+)")
+# ... and those Spark's grammar types as integers.
+_PAGING_RE = re.compile(r"(?i)\b(?:LIMIT|OFFSET)\s+" + _PLACEHOLDER_RE.pattern)
 _QUOTED_RE = re.compile(r"'(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"")
 
 
@@ -48,6 +50,12 @@ def placeholder_names(sql: str) -> list[str]:
         if name not in seen:
             seen.append(name)
     return seen
+
+
+def paging_placeholders(sql: str) -> set[str]:
+    """Names of the placeholders in a ``LIMIT`` or ``OFFSET`` position,
+    which take an integer (typed int64 in a parameter schema)."""
+    return set(_PAGING_RE.findall(_masked(sql)))
 
 
 def normalize_placeholders(sql: str) -> tuple[str, list[str]]:
@@ -109,18 +117,23 @@ def record_batch_to_params(batch: pa.RecordBatch | None):
 
 
 def null_bind_params(sql: str):
-    """All-NULL parameter values for schema-only planning.
+    """Parameter values for schema-only planning.
 
     DataFusion plans SQL containing unbound placeholders (the reference's
     GetFlightInfo/CreatePreparedStatement paths, service.rs:388-425,890-925);
     Spark cannot, so plan-only schema derivation binds every placeholder to
     NULL — analysis succeeds, output schema is unaffected, nothing executes.
-    Returns None when the SQL has no placeholders.
+    A ``LIMIT``/``OFFSET`` placeholder binds to the integer 0 instead:
+    Spark rejects a NULL there. Returns None when the SQL has no
+    placeholders.
     """
     names = placeholder_names(sql)
     if not names:
         return None
-    return {(f"p{n}" if n.isdigit() else n): None for n in names}
+    paging = paging_placeholders(sql)
+    return {
+        (f"p{n}" if n.isdigit() else n): 0 if n in paging else None for n in names
+    }
 
 
 def bind_sql(spark: SparkSession, sql: str, params=None) -> DataFrame:

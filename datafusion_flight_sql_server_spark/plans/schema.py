@@ -28,7 +28,10 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from datafusion_flight_sql_server_spark.plans.gate import is_pure_query
-from datafusion_flight_sql_server_spark.plans.params import placeholder_names
+from datafusion_flight_sql_server_spark.plans.params import (
+    paging_placeholders,
+    placeholder_names,
+)
 
 
 def arrow_schema_for_df(df: DataFrame, with_table_metadata: bool = False) -> pa.Schema:
@@ -147,6 +150,7 @@ def _infer_types_from_context(
 ) -> dict[str, pa.DataType]:
     """Type each placeholder from a ``col <op> $n`` comparison if possible."""
     out: dict[str, pa.DataType] = {}
+    paging = paging_placeholders(sql)
     # Columns of every table referenced in the query, best effort; only
     # those a placeholder is compared with are converted to Arrow, so a
     # column Arrow cannot carry (an interval) elsewhere in the table does
@@ -179,9 +183,7 @@ def _infer_types_from_context(
         # plan fallback cannot see them (a placeholder there fails
         # analysis), so this closes the last documented string-default
         # residual for the common paging shape
-        if re.search(
-            rf"(?i)\b(?:LIMIT|OFFSET)\s+\${re.escape(name)}\b", sql
-        ):
+        if name in paging:
             out[name] = pa.int64()
     return out
 
@@ -233,17 +235,12 @@ def _infer_types_from_plan(
     as LIMIT) falls back to the string default.
     """
     probe = sql
+    paging = paging_placeholders(sql)
     for name in sorted(names, key=len, reverse=True):  # $10 before $1
         # LIMIT/OFFSET placeholders are already grammar-typed int64 and a
         # STRING marker there fails the whole analysis, poisoning typing
         # for every other unresolved placeholder — substitute a plain 0
-        marker = (
-            "0"
-            if re.search(
-                rf"(?i)\b(?:LIMIT|OFFSET)\s+\${re.escape(name)}\b", sql
-            )
-            else f"'<!p:{name}!>'"
-        )
+        marker = "0" if name in paging else f"'<!p:{name}!>'"
         probe = re.sub(r"\$" + re.escape(name) + r"\b", marker, probe)
     # Probe ONLY query statements: spark.sql() executes command plans
     # (INSERT/CTAS/...) EAGERLY, so probing a DML statement would write

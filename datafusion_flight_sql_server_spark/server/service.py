@@ -41,7 +41,7 @@ Declared divergences (client-compat debugging starts here):
 
 - **Classic sessions only**: the engine serves a classic (JVM-backed)
   SparkSession. ``Engine`` refuses a Spark Connect session with
-  ``ClassicSessionRequired``, since the result path, the result cache and
+  ``ClassicSessionRequired``, since the result path, the plan memo and
   the statement gate all read the session's JVM.
 - **Substrait** (SURVEY §7 H4; narrowed in round 4): the reference hands
   serialized Substrait plans to DataFusion's full consumer
@@ -55,29 +55,27 @@ Declared divergences (client-compat debugging starts here):
   everything beyond it (joins, aggregates, computed projections, DML)
   NOT_IMPLEMENTED with the unsupported construct named — those clients
   must send SQL text instead.
-- **Result reuse** (the reference re-executes every DoGet,
-  service.rs:186-190): a DoGet whose statement was already answered whole
-  may be served from the engine's bounded result cache without starting a
-  Spark job (``Engine.execute_stream``). The gate
-  still runs on every DoGet, and tickets stay stateless. A result is
-  reused only for the same plan-memo entry (see "Plan reuse") and declared
-  schema, when the plan holds no clock or session function, so results
-  over permanent tables are not reused. Results over 4 MB are never kept, and 32 MB in total; a DDL, DML or command statement
-  through the gate clears the cache.
-- **Plan reuse** (the reference plans every statement in GetFlightInfo and
-  again in DoGet, service.rs:171,220-236): a repeated query statement is
-  analyzed once per catalog state (``Engine.sql_to_plan``). Its analyzed
-  plan is kept under the session, SQL conf, SQL text and exactly-typed
-  parameters, and a repeat gets a fresh DataFrame over it while the
-  session's temp views and the local input files and listed directories
-  (path, size, mtime, inode) are unchanged. The gate runs on every call. A
-  plan is kept only when it is deterministic, holds no UDF and reads only
-  local files, inline rows or ``range``, directly or through session temp
-  views; statements over permanent tables or views (which another session
-  or metastore may alter), global temp views, DSv2 or ``flightsql`` sources
-  are planned every time. A temporary function registered outside the
-  gate under a builtin's name is not seen by an already memoized statement
-  that calls the builtin.
+- **Reuse** (the reference plans every statement in GetFlightInfo and
+  again in DoGet, and re-executes every DoGet, service.rs:171,186-190,
+  220-236): a repeated query statement is analyzed once per catalog state
+  (``Engine.sql_to_plan``). Its analyzed plan is kept in a bounded memo
+  under the session, SQL conf, SQL text and exactly-typed parameters, and
+  a repeat gets a fresh DataFrame over it while the session's temp views
+  and the local input files and listed directories (path, size, mtime,
+  inode) are unchanged. A plan is kept only when it is deterministic,
+  holds no UDF and reads only local files, inline rows or ``range``,
+  directly or through session temp views; statements over permanent
+  tables or views (which another session or metastore may alter), global
+  temp views, DSv2 or ``flightsql`` sources are planned every time. A
+  memo entry may also keep its statement's last whole result, which a
+  DoGet with the same declared schema is then served from without a
+  Spark job (``Engine.execute_stream``), unless the plan holds a clock or
+  session function. Results over 4 MB are never kept, and 32 MB in
+  total; a result goes when its entry is evicted or replaced, and a DDL,
+  DML or command statement through the gate clears the memo. The gate
+  runs on every call, and tickets stay stateless. A temporary function
+  registered outside the gate under a builtin's name is not seen by an
+  already memoized statement that calls the builtin.
 - **Duplicate struct field names**: Arrow cannot carry them, so DoGet
   rejects such a result with Spark's ``DUPLICATED_FIELD_NAME_IN_ARROW_STRUCT``,
   as ``DataFrame.toArrow()`` does.

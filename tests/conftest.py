@@ -42,11 +42,10 @@ def duck():
 
 
 @pytest.fixture(autouse=True)
-def _empty_result_cache():
-    """The engine's plan memo and result cache are process-wide: every test
-    starts with them empty, so test order cannot turn one test's run into
-    another's hit."""
+def _empty_plan_memo():
+    """The engine's plan memo, and the results its entries keep, are
+    process-wide: every test starts with it empty, so test order cannot
+    turn one test's run into another's hit."""
     from datafusion_flight_sql_server_spark.engine import core
 
     core._PLAN_MEMO.clear()
-    core._RESULT_CACHE.clear()

@@ -186,6 +186,27 @@ class TestIntegration:
         assert table.column("name").to_pylist() == ["Alice"]
         prepared.close()
 
+    @pytest.mark.parametrize(
+        "sql, values, ids",
+        [
+            ("SELECT id FROM users ORDER BY id LIMIT $1", [2], [1, 2]),
+            ("SELECT id FROM users ORDER BY id LIMIT $1 OFFSET $2", [2, 1], [2, 3]),
+        ],
+        ids=["limit", "limit_offset"],
+    )
+    def test_prepared_paging_placeholders(self, client, sql, values, ids):
+        # the schema plan binds a LIMIT/OFFSET placeholder to an integer,
+        # as Spark rejects a NULL there
+        prepared = client.prepare(sql)
+        assert all(f.type == pa.int64() for f in prepared.parameter_schema)
+        prepared.bind(
+            pa.RecordBatch.from_pydict(
+                {f"${i + 1}": pa.array([v], pa.int64()) for i, v in enumerate(values)}
+            )
+        )
+        assert prepared.execute().column("id").to_pylist() == ids
+        prepared.close()
+
     def test_get_catalogs_and_table_types(self, client):
         # service.rs:616-636, 708-731
         catalogs = client.get_catalogs()
@@ -1087,10 +1108,10 @@ class TestMemtableReuse:
         from datafusion_flight_sql_server_spark.engine import core
 
         sql = "SELECT id, name FROM users WHERE id > 1 ORDER BY id"
-        before = core._RESULT_CACHE.stats()
+        before = core._PLAN_MEMO.stats()["results"]
         first = client.execute(sql)
         second = client.execute(sql)
-        after = core._RESULT_CACHE.stats()
+        after = core._PLAN_MEMO.stats()["results"]
         assert after["hits"] - before["hits"] == 1
         assert after["bypasses"]["leaf"] == before["bypasses"]["leaf"]
         assert first.column("name").to_pylist() == ["Bob", "Charlie"]

@@ -109,7 +109,6 @@ class TestFreshness:
         assert _run(engine, sql).column("n").to_pylist() == [1]
         # the listing is older than the planning by more than the slack now
         core._PLAN_MEMO.clear()
-        core._RESULT_CACHE.clear()
         assert _served(engine, sql).column("n").to_pylist() == [1]
         hits = core._PLAN_MEMO.stats()["hits"]
         assert hits >= 1

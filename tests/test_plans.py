@@ -60,6 +60,10 @@ class TestGate:
     CASES = [
         ("SELECT * FROM users", "query"),
         ("SHOW TBLPROPERTIES users", "query"),
+        # SHOW and DESCRIBE nodes only read, though ShowCreateTable holds
+        # the DDL fragment CreateTable
+        ("SHOW CREATE TABLE users", "query"),
+        ("SHOW CREATE TABLE users AS SERDE", "query"),
         ("WITH t AS (SELECT 1 AS x) SELECT * FROM t", "query"),
         ("EXPLAIN SELECT 1", "query"),
         ("CREATE TABLE t2 (x INT) USING parquet", "ddl"),

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import sys
 import threading
+import time
 from datetime import datetime
 from decimal import Decimal
 
@@ -25,11 +26,11 @@ SQL = "SELECT k, v FROM t WHERE k > 1 ORDER BY k"
 
 @pytest.fixture
 def cache(monkeypatch):
-    """A fresh process cache with the module's own bounds."""
-    fresh = core._ResultCache(
-        core._RESULT_CACHE_BYTES, core._RESULT_ENTRY_BYTES, core._RESULT_CACHE_ENTRIES
+    """A fresh process memo with the module's own bounds."""
+    fresh = core._PlanMemo(
+        core._PLAN_MEMO_ENTRIES, core._RESULT_CACHE_BYTES, core._RESULT_ENTRY_BYTES
     )
-    monkeypatch.setattr(core, "_RESULT_CACHE", fresh)
+    monkeypatch.setattr(core, "_PLAN_MEMO", fresh)
     return fresh
 
 
@@ -76,7 +77,7 @@ class TestHit:
         assert _jobs(spark) == before
         assert again.equals(first)
         assert first.column("k").to_pylist() == [2, 3]
-        stats = cache.stats()
+        stats = cache.stats()["results"]
         assert (stats["misses"], stats["hits"], stats["admitted"]) == (1, 1, 1)
         assert stats["entries"] == 1 and stats["bytes"] > 0
 
@@ -92,7 +93,7 @@ class TestHit:
         monkeypatch.setattr(type(engine.options), "verify", _spy)
         _run(engine, SQL)
         assert calls == [SQL]
-        assert cache.stats()["hits"] == 1
+        assert cache.stats()["results"]["hits"] == 1
 
     def test_ddl_through_the_gate_clears(self, spark, cache, path):
         from datafusion_flight_sql_server_spark.plans.gate import SQLOptions
@@ -101,9 +102,9 @@ class TestHit:
         session.read.parquet(str(path)).createOrReplaceTempView("t")
         engine = Engine(session, SQLOptions(allow_ddl=True))
         _run(engine, SQL)
-        assert cache.stats()["entries"] == 1
+        assert cache.stats()["results"]["entries"] == 1
         engine.execute("CREATE OR REPLACE TEMP VIEW other AS SELECT 1 AS x")
-        assert cache.stats()["entries"] == 0
+        assert cache.stats()["results"]["entries"] == 0
 
 
 class TestMiss:
@@ -116,14 +117,14 @@ class TestMiss:
         table = _run(engine, SQL)
         assert _jobs(spark) > before
         assert table.column("k").to_pylist() == [2, 3, 4]
-        assert cache.stats()["hits"] == 0
+        assert cache.stats()["results"]["hits"] == 0
 
     def test_alias_only_change_keeps_its_own_names(self, cache, engine):
         x = _run(engine, "SELECT k AS x FROM t")
         y = _run(engine, "SELECT k AS y FROM t")
         assert x.column_names == ["x"] and y.column_names == ["y"]
         assert y.column("y").to_pylist() == x.column("x").to_pylist()
-        assert cache.stats()["hits"] == 0
+        assert cache.stats()["results"]["hits"] == 0
 
     @pytest.mark.parametrize(
         "sql, reason",
@@ -141,7 +142,7 @@ class TestMiss:
         _rdd_view(engine.spark, "mem", [(2,)], "m INT")
         for _ in range(2):
             _run(engine, sql)
-        stats = cache.stats()
+        stats = cache.stats()["results"]
         assert stats["bypasses"][reason] == 2
         assert (stats["hits"], stats["misses"], stats["entries"]) == (0, 0, 0)
 
@@ -168,7 +169,7 @@ class TestMiss:
             srv.shutdown()
             spark.catalog.dropTempView("fm")
         # the remote side's own DoGets (an RDD-backed view) bypass as well
-        stats = cache.stats()
+        stats = cache.stats()["results"]
         assert stats["bypasses"]["leaf"] >= 2
         assert (stats["hits"], stats["misses"], stats["entries"]) == (0, 0, 0)
 
@@ -179,23 +180,23 @@ class TestMiss:
         local = _run(engine, sql)
         assert utc.column("h").to_pylist() == [1, 2, 3]
         assert local.column("h").to_pylist() == [6, 7, 8]
-        assert cache.stats()["hits"] == 0
+        assert cache.stats()["results"]["hits"] == 0
 
     def test_replaced_temp_view(self, cache, engine):
         engine.spark.sql("SELECT k FROM t").createOrReplaceTempView("t2")
         assert _run(engine, "SELECT * FROM t2").column("k").to_pylist() == [1, 2, 3]
         engine.spark.sql("SELECT k + 10 AS k FROM t").createOrReplaceTempView("t2")
         assert _run(engine, "SELECT * FROM t2").column("k").to_pylist() == [11, 12, 13]
-        assert cache.stats()["hits"] == 0
+        assert cache.stats()["results"]["hits"] == 0
 
     def test_new_session_engine(self, cache, engine):
         sql = "SELECT id FROM range(5)"
         _run(engine, sql)
         other = engine.new_session()
         assert _run(other, sql).column("id").to_pylist() == list(range(5))
-        assert cache.stats()["hits"] == 0
+        assert cache.stats()["results"]["hits"] == 0
         _run(other, sql)
-        assert cache.stats()["hits"] == 1
+        assert cache.stats()["results"]["hits"] == 1
 
 
 class TestAdmission:
@@ -205,11 +206,11 @@ class TestAdmission:
         gen = engine.execute_stream(df)
         assert next(gen).num_rows == 1000
         gen.close()
-        stats = cache.stats()
+        stats = cache.stats()["results"]
         assert stats["bypasses"]["incomplete"] == 1
         assert (stats["admitted"], stats["entries"]) == (0, 0)
         assert _run(engine, "SELECT id FROM range(0, 5000, 1, 5)").num_rows == 5000
-        assert cache.stats()["misses"] == 2
+        assert cache.stats()["results"]["misses"] == 2
 
     def test_error_is_not_admitted(self, cache, engine):
         engine.spark.conf.set("spark.sql.ansi.enabled", "true")
@@ -217,7 +218,7 @@ class TestAdmission:
         for _ in range(2):
             with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
                 _run(engine, sql)
-        stats = cache.stats()
+        stats = cache.stats()["results"]
         assert stats["bypasses"]["incomplete"] == 2
         assert (stats["misses"], stats["admitted"], stats["entries"]) == (2, 0, 0)
 
@@ -228,33 +229,64 @@ class TestAdmission:
             before = _jobs(spark)
             assert _run(engine, sql).num_rows == 400_000
             assert _jobs(spark) > before
-        stats = cache.stats()
+        stats = cache.stats()["results"]
         assert stats["bypasses"]["over_cap"] == 2
         assert (stats["hits"], stats["entries"], stats["bytes"]) == (0, 0, 0)
 
     def test_count_bound_holds_after_300_statements(self, cache, engine):
         for i in range(300):
             _run(engine, f"SELECT {i} AS v")
-        stats = cache.stats()
+        stats = cache.stats()["results"]
         assert stats["admitted"] == 300
-        assert stats["entries"] == core._RESULT_CACHE_ENTRIES
+        assert stats["entries"] == core._PLAN_MEMO_ENTRIES
         assert 0 < stats["bytes"] <= core._RESULT_CACHE_BYTES
-        assert stats["evicted"] == 300 - core._RESULT_CACHE_ENTRIES
+        assert stats["evicted"] == 300 - core._PLAN_MEMO_ENTRIES
         # the oldest went first; the newest are still served
         assert _run(engine, "SELECT 299 AS v").column("v").to_pylist() == [299]
-        assert cache.stats()["hits"] == 1
+        assert cache.stats()["results"]["hits"] == 1
         _run(engine, "SELECT 0 AS v")
-        assert cache.stats()["hits"] == 1
+        assert cache.stats()["results"]["hits"] == 1
 
     def test_byte_bound_holds(self, cache, engine):
         # 450k bigints: 3.6 MB each, so the 32 MB total binds before the count
         for i in range(12):
             _run(engine, f"SELECT id + {i} AS v FROM range(0, 450000, 1, 2)")
-            assert cache.stats()["bytes"] <= core._RESULT_CACHE_BYTES
-        stats = cache.stats()
+            assert cache.stats()["results"]["bytes"] <= core._RESULT_CACHE_BYTES
+        stats = cache.stats()["results"]
         assert stats["admitted"] == 12
         assert stats["entries"] == core._RESULT_CACHE_BYTES // 3_600_000
         assert stats["evicted"] == 12 - stats["entries"]
+
+
+class TestResultsDieWithTheirEntry:
+    def test_replaced_view_keeps_only_the_live_result(self, cache, engine, tmp_path):
+        # each replacement plans a new entry in place of the last one
+        paths = []
+        for i in range(6):
+            paths.append(tmp_path / f"r{i}.parquet")
+            pq.write_table(pa.table({"k": list(range(10_000 * (i + 1)))}), paths[-1])
+        time.sleep(0.1)  # older than the planning by more than the slack
+        for p in paths:
+            engine.spark.read.parquet(str(p)).createOrReplaceTempView("r")
+            last = _run(engine, "SELECT k FROM r")
+        assert last.num_rows == 60_000
+        stats = cache.stats()["results"]
+        assert stats["admitted"] == 6
+        assert stats["entries"] == 1
+        assert stats["bytes"] == sum(b.get_total_buffer_size() for b in last.to_batches())
+
+    def test_every_kept_result_is_on_an_entry_of_the_memo(self, cache, engine):
+        entries = []
+        for i in range(300):
+            df = engine.execute(f"SELECT {i} AS v")
+            list(engine.execute_stream(df))
+            entries.append(df._plan_memo)
+        live = {id(e) for e in cache._lru.values()}
+        kept = [e for e in entries if e.result is not None]
+        assert all(id(e) in live for e in kept)
+        stats = cache.stats()["results"]
+        assert len(kept) == stats["entries"] == core._PLAN_MEMO_ENTRIES
+        assert sum(e.result[2] for e in kept) == stats["bytes"]
 
 
 def test_concurrent_identical_do_gets_are_exact(spark, cache, path):
@@ -294,11 +326,12 @@ def test_concurrent_identical_do_gets_are_exact(spark, cache, path):
     for table in results:
         assert table.equals(expected)
     # every lookup counted once, and concurrent misses admitted one entry
-    stats = cache.stats()
+    stats = cache.stats()["results"]
     assert stats["hits"] + stats["misses"] == 8
     assert stats["entries"] == 1 and stats["admitted"] == 1
-    assert stats["bytes"] == sum(
-        b.get_total_buffer_size() for b in next(iter(cache._lru)).batches
+    (entry,) = [e for e in cache._lru.values() if e.result is not None]
+    assert stats["bytes"] == entry.result[2] == sum(
+        b.get_total_buffer_size() for b in entry.result[1]
     )
 
 
